@@ -1068,10 +1068,9 @@ def _with_vec_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH bucketed candidate generation + exact cosine verify — the
     scale default (no self-join, no O(n^2); operators/similarity.py).
-    The quadratic `embedding_dup_pairs` remains as the bounded-input
-    verify primitive. Same oracle as before: only exact copies clear the
-    0.9 threshold in this corpus, and exact copies share every LSH band,
-    so bucketed recall is 1.0 by construction."""
+    Same oracle as before: only exact copies clear the 0.9 threshold in
+    this corpus, and exact copies share every LSH band, so bucketed
+    recall is 1.0 by construction."""
     from metacheck_spark.operators.similarity import embedding_dup_pairs_bucketed
 
     return embedding_dup_pairs_bucketed(

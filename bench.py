@@ -16,20 +16,10 @@ Modes:
                                     # rows/s (used by tools/run_scaling.py to
                                     # evidence the N -> 4N scaling criterion)
 
-Self-adjudication (round-4): the sandbox host shows bursty multi-minute
-stall epochs that poisoned the official single-invocation artifact two
-rounds running (r02 events_json 8.77s vs 0.4s real; r03 quality_pipeline
-16.3s vs 2.4-5.5s real). Each query therefore carries a machine-readable
-expected band (BANDS — the clean-run bands pinned in BASELINE.md): a
-query whose min-of-3 lands ABOVE its band is automatically re-run (up to
-BENCH_RETRY_ROUNDS extra 3-pass rounds with a short cool-down between
-them), the reported value is the min over ALL observations, and a query
-still out of band after retries is flagged noisy=true with every
-observation preserved in the JSON — a single stall epoch can no longer
-put a silent out-of-band number in the artifact. Bands apply only at the
-pinned config (sf0.1, 60k images, local[32]); any override disables
-adjudication (observations are still recorded). Below-band readings are
-improvements, not noise — never re-run.
+Each query reports the min of 3 passes (the first pass also warms plan,
+codegen and the Python worker pools), and every pass is recorded under
+`observations`. This script is the driver-contract timing; the
+benchmark of record, with bounds and per-layer metrics, is perfbench/.
 """
 
 from __future__ import annotations
@@ -44,33 +34,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 IMAGES_ROWS = int(os.environ.get("BENCH_IMAGES_ROWS", "60000"))
-# Extra 3-pass rounds granted to a query whose min lands above its band.
-RETRY_ROUNDS = int(os.environ.get("BENCH_RETRY_ROUNDS", "2"))
-# Seconds to sit out between retry rounds — host stalls are bursty, and a
-# short cool-down often lands the re-run outside the burst.
-RETRY_COOLDOWN = float(os.environ.get("BENCH_RETRY_COOLDOWN", "3.0"))
-
-# Machine-readable clean-run bands (seconds), DERIVED from the
-# accumulated observation corpus by tools/derive_bands.py (round-5:
-# bands are regenerated by script from every recorded pinned-config
-# run, never hand-edited — BANDS.json carries the full audit trail of
-# which run-mins were kept and which were rejected as stall-poisoned).
-# Valid ONLY at the pinned config: sf0.1 documents input, 60k-row
-# images table, local[32]. The lo edge is informational (a faster
-# reading is an improvement); only min > hi triggers adjudication.
-
-
-def _load_bands() -> dict[str, tuple[float, float]]:
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BANDS.json")
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-        return {q: (float(lo), float(hi)) for q, (lo, hi) in doc["bands"].items()}
-    except (OSError, ValueError, KeyError):
-        return {}
-
-
-BANDS: dict[str, tuple[float, float]] = _load_bands()
 # Fixed input-split count for the images scan at every parallelism level
 # (same input, same splits — only the compute resources vary).
 BENCH_SPLITS = int(os.environ.get("BENCH_SPLITS", "64"))
@@ -142,55 +105,15 @@ def timed(fn, spark=None) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def bands_active() -> bool:
-    """Bands were recorded at the pinned config; any override invalidates
-    them, so adjudication switches off rather than re-running against
-    bands measured for a different workload."""
-    # Exact, normalized comparison: resolve symlinks and compare the
-    # directory's basename (endswith would accept 'mysf0.1'), and parse
-    # CPUS numerically ('032' is still the pinned 32).
-    try:
-        cpus_ok = int(CPUS) == 32
-    except ValueError:
-        cpus_ok = False
-    return (
-        os.path.basename(os.path.realpath(SF_DIR)) == "sf0.1"
-        and IMAGES_ROWS == 60000
-        and cpus_ok
-    )
-
-
-def adjudicate(name: str, fn, spark) -> tuple[float, list[float], bool]:
-    """Best-of-3 with band adjudication: if the min lands above the
-    query's clean-run band, grant up to RETRY_ROUNDS extra 3-pass rounds
-    (cool-down between them), report the min over ALL observations, and
-    flag noisy=True only if every round stayed out of band. Pass 1 of
-    round 1 doubles as the plan/codegen warm-up, as before."""
+def min_of_3(fn, spark) -> tuple[float, list[float]]:
+    """Min over 3 timed passes, plus every pass."""
     obs = [timed(fn, spark) for _ in range(3)]
-    band = BANDS.get(name) if bands_active() else None
-    noisy = False
-    if band is not None:
-        rounds = 0
-        while min(obs) > band[1] and rounds < RETRY_ROUNDS:
-            rounds += 1
-            log(
-                f"[bench] {name}: min {min(obs)}s above band {band}, "
-                f"re-running (extra round {rounds}/{RETRY_ROUNDS})"
-            )
-            time.sleep(RETRY_COOLDOWN)
-            obs += [timed(fn, spark) for _ in range(3)]
-        noisy = min(obs) > band[1]
-        if noisy:
-            log(
-                f"[bench] {name}: STILL out of band after {rounds} retries "
-                f"— flagged noisy, all observations recorded: {obs}"
-            )
-    return min(obs), obs, noisy
+    return min(obs), obs
 
 
-def bench_pipeline(spark) -> tuple[float, list[float], bool, int]:
+def bench_pipeline(spark) -> tuple[float, list[float], int]:
     """The flagship: full quality-filter pipeline (sanity + text rules +
-    URL broadcast join + decode/langid/ppl pandas UDFs + scrub + audit)."""
+    decode UDF + fused langid/ppl/URL/scrub caption UDF + audit)."""
     from pyspark.sql import functions as F  # noqa: F401
 
     from metacheck_spark.pipeline import run_pipeline
@@ -204,15 +127,11 @@ def bench_pipeline(spark) -> tuple[float, list[float], bool, int]:
     audit = run_pipeline(spark, images, url_status)
     # Warm with one FULL pass: the first execution pays python worker
     # forks + numpy/pandas imports + JVM JIT — one-time costs a cluster
-    # job amortizes over 10^12 rows. Then adjudicated best-of-k: the
-    # sandbox VM shows bursty multi-second kernel stalls (high sys time,
-    # ~4% steal), and min-of-k + band-triggered retries recovers the
-    # machine's actual steady-state capability.
+    # job amortizes over 10^12 rows. Then min-of-3: the min absorbs
+    # bursty host stalls.
     run_noop(audit)
-    sec, obs, noisy = adjudicate(
-        "quality_pipeline", lambda: run_noop(audit), spark
-    )
-    return sec, obs, noisy, IMAGES_ROWS
+    sec, obs = min_of_3(lambda: run_noop(audit), spark)
+    return sec, obs, IMAGES_ROWS
 
 
 def main() -> None:
@@ -224,17 +143,14 @@ def main() -> None:
     sf = _sf_from_dir(SF_DIR)
     queries: dict[str, float] = {}
     observations: dict[str, list[float]] = {}
-    noisy_queries: list[str] = []
 
     # Warm up the JVM + python workers so the first timed query isn't
     # paying session start-up costs.
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    psec, pobs, pnoisy, prows = bench_pipeline(spark)
+    psec, pobs, prows = bench_pipeline(spark)
     queries["quality_pipeline"] = psec
     observations["quality_pipeline"] = pobs
-    if pnoisy:
-        noisy_queries.append("quality_pipeline")
 
     if pipeline_only:
         out = {
@@ -247,8 +163,6 @@ def main() -> None:
             "images_rows": prows,
             "rows_per_sec": round(prows / psec, 1),
             "observations": observations,
-            "noisy_queries": noisy_queries,
-            "bands_active": bands_active(),
         }
         print(json.dumps(out), flush=True)
         spark.stop()
@@ -300,14 +214,9 @@ def main() -> None:
         "ivf_topk": lambda: E.q_ivf_topk(spark, SF_DIR).collect(),
     }
     for name, fn in battery.items():
-        # Adjudicated best-of-k: pass 1 warms plan/codegen/worker pools,
-        # the min absorbs bursty host stalls, and an out-of-band min
-        # triggers automatic retry rounds (see adjudicate).
-        sec, obs, noisy = adjudicate(name, fn, spark)
+        sec, obs = min_of_3(fn, spark)
         queries[name] = sec
         observations[name] = obs
-        if noisy:
-            noisy_queries.append(name)
         log(f"[bench] {name}: {sec}s")
 
     total = round(sum(queries.values()), 3)
@@ -320,18 +229,7 @@ def main() -> None:
         "cpus": int(CPUS),
         "images_rows": prows,
         "pipeline_rows_per_sec": round(prows / psec, 1),
-        "protocol": (
-            "min over all observations; 3 passes/query, plus up to "
-            f"{RETRY_ROUNDS} extra 3-pass rounds when the min lands above "
-            "the query's clean-run band (BASELINE.md); a query still out "
-            "of band after retries is listed in noisy_queries with every "
-            "observation preserved"
-        ),
-        "bands": {k: list(v) for k, v in BANDS.items()},
-        "bands_active": bands_active(),
         "observations": observations,
-        "noisy_queries": noisy_queries,
-        "all_in_band": bands_active() and not noisy_queries,
     }
     print(json.dumps(out), flush=True)
     spark.stop()

@@ -1,17 +1,13 @@
 """URL extraction + frozen-status accessibility checks (P013/P025 analogs,
 reference p013.py:25-82 / p025.py:17-48).
 
-Two execution strategies, same semantics:
-
-* ``url_flags_batch`` — dictionary lookup against the (small, frozen)
-  url_status dimension inside a vectorized pandas UDF, dimension shipped
-  once per executor via a Spark broadcast variable. This is the scale
-  path: ZERO shuffle of the fact table (the relational alternative in
-  pipeline.url_rule_flags must join the aggregated flags back to the fact
-  on image_id, which reshuffles every row — including the binary payload —
-  once the flag side outgrows the broadcast threshold).
-* ``pipeline.url_rule_flags`` — explode + broadcast hash join, kept as the
-  relational variant for dimensions too large for executor memory.
+``url_flags_batch`` is a dictionary lookup against the (small, frozen)
+url_status dimension, run inside the pipeline's fused caption-stage
+pandas UDF (``pipeline.make_caption_stage_udf``) with the dimension
+shipped once per executor as a Spark broadcast variable: the caption
+crosses the Arrow boundary once for every caption check, and the fact
+table is never shuffled. The pure-Python oracle calls its per-caption
+core, ``url_flags_one``.
 
 Quirk preserved from the reference: P013 treats 301 as accessible
 (p013.py:47), P025 does not (p025.py:40-41).

@@ -751,7 +751,7 @@ def winnow_overlap_pairs(
     )
 
 
-# --- embedding near-dup ------------------------------------------------------
+# --- embedding cosine (verify expression for operators/similarity.py) --------
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -767,24 +767,6 @@ def cosine(a: Column, b: Column) -> Column:
         F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
     )
     return dot / (na * nb)
-
-
-def embedding_dup_pairs(
-    df: DataFrame, vec_col: str, id_col: str, threshold: float = 0.95
-) -> DataFrame:
-    """Embedding-cosine near-dup, quadratic verify — bounded inputs only;
-    the LSH-bucketed scale path lives in operators/similarity.py."""
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    a, b = v.alias("a"), v.alias("b")
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
 
 
 # --- cluster resolution ------------------------------------------------------

@@ -6,22 +6,24 @@ Stage layout over the `images` table (BASELINE.json input_hint schema):
                                substring()/conv() on the binary column)
   2. caption heuristic rules-> native Columns (rules/registry.py, one
                                codegen'd projection)
-  3. URL validity           -> broadcast hash join vs the frozen url_status
-                               dimension (the engine's only relational rule,
-                               like the reference's P013/P025 HTTP checks)
+  3. URL validity           -> broadcast-dict lookup of each caption URL in
+                               the frozen url_status dimension (the
+                               reference's P013/P025 HTTP checks), inside
+                               the fused caption UDF (make_caption_stage_udf)
   4. decode + phash         -> Iterator pandas UDF (Arrow batches; the only
                                stage that touches pixel data)
-  5. langid + perplexity    -> vectorized pandas UDFs (functions/langid.py,
+  5. langid + perplexity    -> the same fused caption UDF (functions/langid.py,
                                functions/perplexity.py — shared with oracle)
   6. keep/drop combine      -> any pitfall => drop; warnings recorded
-  7. PII/toxicity scrub     -> pandas UDF with compiled Python `re`,
-                               applied to kept rows only
+  7. PII/toxicity scrub     -> the same fused caption UDF (compiled Python
+                               `re`), masked to kept rows
   8. audit + metrics + write-> phash-bucketed audit table (resume ledger),
                                salted-by-language scrubbed output
 
 Scale notes (10^12-row design): stages 1-2 and 6 are narrow (no shuffle);
-stage 3 joins broadcast (dimension is small); stages 4-5-7 are Arrow-
-batched projections (narrow); the only shuffles are the final bucketed/
+stages 3-5-7 share one Arrow crossing of the caption column and stage 4
+is a second (both narrow projections; the url_status dimension is small
+enough to collect and broadcast); the only shuffles are the final bucketed/
 salted repartitions for the writes and the tiny metrics aggregations.
 """
 
@@ -34,7 +36,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from metacheck_spark.functions import patterns as P
 from metacheck_spark.functions.langid import langid_batch
 from metacheck_spark.functions.perplexity import PPL_THRESHOLD, ppl_batch
 from metacheck_spark.functions.scrub import scrub_batch
@@ -139,49 +140,7 @@ def sanity_rule_flags() -> dict[str, Column]:
 
 
 # ---------------------------------------------------------------------------
-# stage 3: URL validity via broadcast join against the frozen dimension
-
-_URL_STRIP = P.URL_TRAILING_PUNCT
-
-
-def extract_urls_col(caption_col: str = "caption") -> Column:
-    urls = F.regexp_extract_all(F.col(caption_col), F.lit(P.URL_EXTRACT), 0)
-    return F.transform(urls, lambda u: F.regexp_replace(u, _URL_STRIP, ""))
-
-
-def make_url_flags_udf(spark: SparkSession, url_status: DataFrame):
-    """Scale path for the URL rules: the frozen url_status dimension is
-    collected once (it is the SMALL side of the reference's only join,
-    SURVEY.md §2.3), shipped to executors as a Spark broadcast variable,
-    and evaluated as a vectorized dictionary lookup per caption batch.
-
-    Zero shuffle: the relational alternative (url_rule_flags below) must
-    join its aggregated flags back to the fact on image_id, which at
-    10^12 rows reshuffles the whole table — binary payloads included —
-    once the flag side outgrows the broadcast threshold.
-    """
-    from metacheck_spark.functions.urlcheck import url_flags_batch
-
-    rows = url_status.collect()
-    status = {
-        r["url"]: (r["status_code"] if r["status_code"] is not None else -1)
-        for r in rows
-    }
-    bc = spark.sparkContext.broadcast(status)
-
-    @F.pandas_udf(_URL_FLAGS_T)
-    def url_flags_udf(s: pd.Series) -> pd.DataFrame:
-        return url_flags_batch(s, bc.value)
-
-    return url_flags_udf
-
-
-_URL_FLAGS_T = T.StructType(
-    [
-        T.StructField("P013", T.BooleanType()),
-        T.StructField("P025", T.BooleanType()),
-    ]
-)
+# stages 3+5+7: the fused caption stage (URL checks, langid, ppl, scrub)
 
 _CAPTION_STAGE_T = T.StructType(
     [
@@ -236,32 +195,6 @@ def make_caption_stage_udf(spark: SparkSession, url_status: DataFrame):
     return caption_stage_udf
 
 
-def url_rule_flags(images: DataFrame, url_status: DataFrame) -> DataFrame:
-    """(image_id, P013 bool, P025 bool) for rows that contain URLs —
-    the RELATIONAL variant, for url_status dimensions too large to hold
-    in executor memory.
-
-    Pre-filters to URL-bearing rows (tiny fraction) BEFORE the explode, so
-    the shuffle input is small regardless of corpus size; the dimension
-    side is broadcast (no shuffle of the fact table at this step — the
-    cost is the later join-back on image_id, see make_url_flags_udf).
-    """
-    urls = (
-        images.select("image_id", extract_urls_col().alias("urls"))
-        .filter(F.size("urls") > 0)
-        .select("image_id", F.explode("urls").alias("url"))
-    )
-    joined = urls.join(F.broadcast(url_status), "url", "left")
-    status = F.coalesce(F.col("status_code").cast("long"), F.when(F.col("error").isNotNull(), F.lit(-1)))
-    known = status.isNotNull()
-    ok_13 = ((status >= 200) & (status < 300)) | (status == 301)
-    ok_25 = (status >= 200) & (status < 300)
-    return joined.groupBy("image_id").agg(
-        F.max(F.when(known & ~ok_13, True).otherwise(False)).alias("P013"),
-        F.max(F.when(known & ~ok_25, True).otherwise(False)).alias("P025"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # stage 4: decode + phash (the only pixel-touching stage; Arrow batches)
 
@@ -306,7 +239,9 @@ def decode_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# stage 5: model scorers (shared batch functions => oracle parity is exact)
+# standalone caption scorers for the documents queries (__spark_entry__
+# q_langid_docs / q_ppl_docs / q_scrub_docs); the pipeline uses the fused
+# caption stage above. Shared batch functions => oracle parity is exact.
 
 
 @F.pandas_udf(_MODEL_T)
@@ -329,16 +264,12 @@ def scrub_udf(s: pd.Series) -> pd.Series:
 # stages 2+6: assemble ordered rule hits and the keep label
 
 
-def assemble_flags(
-    images: DataFrame, url_status: DataFrame, url_mode: str = "udf"
-) -> DataFrame:
+def assemble_flags(images: DataFrame, url_status: DataFrame) -> DataFrame:
     """All per-row derived columns, flags keyed `hit_<code>` in registry
-    order, plus lang/lang_conf/ppl.
+    order, plus lang/lang_conf/ppl and the unmasked `scrubbed_all`.
 
-    url_mode='udf' (default): broadcast-dict URL check, fully narrow — no
-    shuffle anywhere in the flag assembly. url_mode='join': relational
-    explode + broadcast-join + join-back variant (for url_status dims too
-    large for executor memory)."""
+    Fully narrow — no shuffle anywhere in the flag assembly: the URL check
+    is a broadcast-dict lookup inside the fused caption UDF."""
     df = images
     for name, col in binary_sanity_cols().items():
         df = df.withColumn(name, col)
@@ -346,19 +277,11 @@ def assemble_flags(
         "*", "dec.decoded_ok", "dec.phash_calc"
     ).drop("dec")
 
-    if url_mode == "udf":
-        stage_udf = make_caption_stage_udf(images.sparkSession, url_status)
-        df = df.withColumn("m", stage_udf(F.col("caption"))).select(
-            "*", "m.lang", "m.lang_conf", "m.ppl", "m.P013", "m.P025",
-            F.col("m.scrubbed").alias("scrubbed_all"),
-        ).drop("m")
-    else:
-        df = df.withColumn("model", langid_udf(F.col("caption"))).select(
-            "*", "model.lang", "model.lang_conf"
-        ).drop("model")
-        df = df.withColumn("ppl", ppl_udf(F.col("caption")))
-        url_flags = url_rule_flags(images, url_status)
-        df = df.join(url_flags, "image_id", "left")
+    stage_udf = make_caption_stage_udf(images.sparkSession, url_status)
+    df = df.withColumn("m", stage_udf(F.col("caption"))).select(
+        "*", "m.lang", "m.lang_conf", "m.ppl", "m.P013", "m.P025",
+        F.col("m.scrubbed").alias("scrubbed_all"),
+    ).drop("m")
 
     text_flags = {r.code: r.spark(F.col("caption")) for r in TEXT_RULES}
     sanity = sanity_rule_flags()
@@ -403,17 +326,12 @@ def with_labels(flagged: DataFrame) -> DataFrame:
         .withColumn("keep", n_pit == 0)
     )
     # Scrubbed caption exposed for kept rows only (reference semantics:
-    # dropped rows carry no scrubbed text). The fused caption stage already
-    # computed it (udf mode); the relational mode scrubs kept rows lazily.
-    if "scrubbed_all" in df.columns:
-        return df.withColumn(
-            "scrubbed_caption",
-            F.when(F.col("keep"), F.col("scrubbed_all")).otherwise(F.lit(None)),
-        ).drop("scrubbed_all")
+    # dropped rows carry no scrubbed text); the fused caption stage
+    # already computed it for every row.
     return df.withColumn(
         "scrubbed_caption",
-        F.when(F.col("keep"), scrub_udf(F.col("caption"))).otherwise(F.lit(None)),
-    )
+        F.when(F.col("keep"), F.col("scrubbed_all")).otherwise(F.lit(None)),
+    ).drop("scrubbed_all")
 
 
 # ---------------------------------------------------------------------------
@@ -452,14 +370,34 @@ def write_audit(audit: DataFrame, path: str, buckets: int = 32) -> None:
     )
 
 
-def completed_buckets(spark: SparkSession, path: str) -> list[int]:
+# What reading a parquet directory raises when nothing was ever committed
+# there: the directory is missing, or holds only hidden entries — a crash
+# during the first commit leaves just the committer's _temporary/ tree.
+_NOTHING_COMMITTED = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at `path`, or None when nothing was committed
+    there yet. Any other failure to read it (permission denied, corrupt
+    footer, transient FS error) raises: both sinks append, so mistaking
+    an unreadable table for an empty one would re-append everything it
+    holds."""
+    from pyspark.errors import AnalysisException
+
     try:
-        return [
-            r.bucket for r in
-            spark.read.parquet(path).select("bucket").distinct().collect()
-        ]
-    except Exception:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() not in _NOTHING_COMMITTED:
+            raise
+        return None
+
+
+def completed_buckets(spark: SparkSession, path: str) -> list[int]:
+    """Bucket ids already committed to the audit table at `path`."""
+    audit = read_committed(spark, path)
+    if audit is None:
         return []
+    return [r.bucket for r in audit.select("bucket").distinct().collect()]
 
 
 def resume_filter(images: DataFrame, done: list[int], buckets: int = 32) -> DataFrame:
@@ -505,27 +443,12 @@ def reconcile_kept(
     # keep=true BEFORE the anti-join: the predicate reaches the parquet
     # scan (kept_output would filter it anyway, but only after shuffling
     # dropped rows through the join at 10^12-row scale)
-    from pyspark.errors import AnalysisException
-
     audit = spark.read.parquet(audit_path).filter(F.col("keep"))
-    try:
-        existing = spark.read.parquet(kept_path).select("image_id")
-        missing = audit.join(existing, "image_id", "left_anti")
-    except AnalysisException as e:
-        # ONLY path-not-found means "first run, nothing to diff against".
-        # Any other failure to read the kept table (permission denied,
-        # corrupt footer, transient FS error) must raise: treating it as
-        # first-run would re-append every keep=true row — duplicating
-        # the entire kept output, the opposite of the exactly-once
-        # guarantee this function exists to provide.
-        cond = (
-            e.getCondition()
-            if hasattr(e, "getCondition")
-            else e.getErrorClass()  # Spark < 4 name
-        )
-        if cond != "PATH_NOT_FOUND":
-            raise
-        missing = audit
+    existing = read_committed(spark, kept_path)
+    missing = (
+        audit if existing is None
+        else audit.join(existing.select("image_id"), "image_id", "left_anti")
+    )
     obs = Observation("reconcile_kept")
     out = kept_output(missing, salt).observe(obs, F.count(F.lit(1)).alias("n"))
     out.write.mode("append").partitionBy("lang").parquet(kept_path)
@@ -569,9 +492,8 @@ def run_pipeline(
     url_status: DataFrame,
     run_ts: str = "1970-01-01T00:00:00Z",
     buckets: int = 32,
-    url_mode: str = "udf",
 ) -> DataFrame:
     """images + url_status -> audit frame (not yet written)."""
-    flagged = assemble_flags(images, url_status, url_mode)
+    flagged = assemble_flags(images, url_status)
     labeled = with_labels(flagged)
     return audit_frame(labeled, run_ts, buckets)

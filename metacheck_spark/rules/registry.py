@@ -17,7 +17,7 @@ Registry order is semantic: the reference's summary arrays and per-repo
 ``checks`` arrays follow registry order (detect_pitfalls_main.py:306-311),
 so ``rule_hits`` arrays here are ordered by ``rank``.
 
-Rules requiring relational context (URL-status broadcast join — P013/P025,
+Rules requiring relational context (URL-status broadcast lookup — P013/P025,
 reference p013.py/p025.py) or binary decode (P001/P019/X001) set
 ``kind`` accordingly and are wired in pipeline.py; their ``py`` oracle
 takes the shared context dict.

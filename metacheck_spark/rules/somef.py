@@ -1184,8 +1184,9 @@ def nested_rule_flags(df: DataFrame, url_status_map: dict[str, int] | None = Non
     abstain (null -> false), mirroring F1.
 
     URL-status rules (P013 over software_requirements, P025 over
-    continuous_integration) evaluate against the frozen dict when given,
-    else abstain — same contract as the pipeline's url_mode='udf'.
+    continuous_integration) evaluate against the frozen dict when given
+    (the dimension the pipeline's fused caption stage broadcasts), else
+    abstain.
     """
     cols = set(df.columns)
 
@@ -1327,8 +1328,7 @@ def nested_rule_flags(df: DataFrame, url_status_map: dict[str, int] | None = Non
     # a URL that is invalid (no http(s) scheme — urlparse gate,
     # p013.py:8-22) or ABSENT from the frozen dimension (reference:
     # request error => inaccessible, p013.py:50-53) FIRES rather than
-    # abstains. With no dimension at all the rules abstain (url_mode
-    # contract).
+    # abstains. With no dimension at all the rules abstain.
     if url_status_map:
         status_map = F.create_map(
             *[

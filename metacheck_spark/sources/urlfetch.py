@@ -1,9 +1,8 @@
 """Tier-3 LIVE URL checking (SURVEY.md §2.8) — batched HTTP inside
 ``mapInPandas``, produced AS the same ``(url, status_code, error)``
 dimension the frozen ``url_status`` table provides, so every downstream
-consumer (``pipeline.make_caption_stage_udf``'s broadcast-dict lookup,
-``pipeline.url_rule_flags``'s relational join) runs unchanged on live
-results. This closes the one reference capability recast-by-design in
+consumer (``pipeline.make_caption_stage_udf``'s broadcast-dict lookup)
+runs unchanged on live results. This closes the one reference capability recast-by-design in
 rounds 1–2: the reference issues a live ``requests.get`` per URL at
 detection time (p013.py:25,44-47; p025.py:17,36-41); the sandbox freezes
 those statuses into a dimension table. Production needs the live path —

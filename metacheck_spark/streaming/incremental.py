@@ -82,7 +82,7 @@ def run_full_pipeline_available_now(
     from metacheck_spark.pipeline import assemble_flags, with_labels
 
     stream = read_images_stream(spark, input_path)
-    labeled = with_labels(assemble_flags(stream, url_status, url_mode="udf"))
+    labeled = with_labels(assemble_flags(stream, url_status))
     out = labeled.select(
         "image_id",
         "rule_hits",

@@ -70,18 +70,6 @@ def test_simhash_finds_near_identical(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_embedding_dup_pairs(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    # seed a near-duplicate of vec 0 (tiny perturbation on one coord)
-    v0 = emb.filter(F.col("vec_id") == 0).head()["embedding"]
-    dup = [(999999, [x * 1.001 for x in v0], 0)]
-    df = emb.unionAll(spark.createDataFrame(dup, emb.schema))
-    pairs = D.embedding_dup_pairs(
-        df.filter(F.col("vec_id").isin(0, 1, 2, 999999)), "embedding", "vec_id", 0.99
-    ).collect()
-    assert {(p["id_a"], p["id_b"]) for p in pairs} == {(0, 999999)}
-
-
 def test_lsh_topk_recall(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
@@ -189,6 +177,36 @@ def test_embedding_dup_bucketed_no_cross_join(spark):
         for r in emb.filter(F.col("vec_id") % 10 == 0).select("vec_id").collect()
     }
     assert want <= got
+
+
+def test_embedding_dup_bucketed_matches_brute_force(spark):
+    """On a tiny input the bucketed path returns EXACTLY the brute-force
+    pair set: a x1.001-scaled copy of vec 0 plus vecs 1 and 2."""
+    import numpy as np
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    v0 = emb.filter(F.col("vec_id") == 0).head()["embedding"]
+    dup = spark.createDataFrame([(999999, [x * 1.001 for x in v0])], emb.schema)
+    df = emb.filter(F.col("vec_id").isin(0, 1, 2)).unionAll(dup)
+    vecs = {r["vec_id"]: np.array(r["embedding"]) for r in df.collect()}
+    want = {
+        (a, b)
+        for a in vecs
+        for b in vecs
+        if a < b
+        and round(
+            float(vecs[a] @ vecs[b])
+            / (np.linalg.norm(vecs[a]) * np.linalg.norm(vecs[b])),
+            6,
+        ) >= 0.99
+    }
+    assert (0, 999999) in want
+    pairs = S.embedding_dup_pairs_bucketed(
+        df, "embedding", "vec_id", threshold=0.99, bits=16, bands=4
+    )
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == want
 
 
 def test_no_rdd_access_in_package():

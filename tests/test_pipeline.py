@@ -46,6 +46,9 @@ def test_keep_drop_f1(audit_rows, golden):
 def test_rule_hits_exact(audit_rows, golden):
     for iid, e in golden.items():
         assert list(audit_rows[iid]["rule_hits"]) == e["rule_hits"], iid
+    # the URL rules are exercised, not vacuously matched by never firing
+    for code in ("P013", "P025"):
+        assert any(code in r["rule_hits"] for r in audit_rows.values()), code
 
 
 def test_scrubbed_captions_exact(audit_rows, golden):
@@ -145,25 +148,6 @@ def test_salted_repartition_splits_skewed_langs(spark, images_dir):
     # the hot language holds ~35-50% of kept rows; salt=4 splits it ~4x
     assert hot_share > 0.25
     assert biggest_key < hot_share * 0.6, (biggest_key, hot_share)
-
-
-def test_url_modes_agree(spark, images_dir):
-    """The broadcast-dict UDF path (scale default, zero shuffle) and the
-    relational explode+join path produce identical labels."""
-    images = spark.read.parquet(f"{images_dir}/images.parquet")
-    us = spark.read.parquet(f"{images_dir}/url_status.parquet")
-    a = {
-        r["image_id"]: list(r["rule_hits"])
-        for r in run_pipeline(spark, images, us, url_mode="udf")
-        .select("image_id", "rule_hits").collect()
-    }
-    b = {
-        r["image_id"]: list(r["rule_hits"])
-        for r in run_pipeline(spark, images, us, url_mode="join")
-        .select("image_id", "rule_hits").collect()
-    }
-    assert a == b
-    assert any("P013" in h or "P025" in h for h in a.values())
 
 
 def test_audit_write_and_resume(spark, images_dir, tmp_path):

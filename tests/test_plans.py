@@ -41,13 +41,13 @@ def test_join_revenue_broadcasts_dims(spark):
 
 
 def test_pipeline_udf_mode_is_shuffle_free(spark, images_dir):
-    """The full flag-assembly + labeling plan (url_mode='udf') is narrow:
+    """The full flag-assembly + labeling plan is narrow:
     zero Exchange operators anywhere — the only shuffles in the whole
     pipeline are the explicit bucketed/salted writes and the tiny metrics
     aggregation."""
     images = spark.read.parquet(f"{images_dir}/images.parquet")
     us = spark.read.parquet(f"{images_dir}/url_status.parquet")
-    audit = run_pipeline(spark, images, us, url_mode="udf")
+    audit = run_pipeline(spark, images, us)
     plan = _plan(audit)
     assert "Exchange" not in plan
 
@@ -58,7 +58,7 @@ def test_pipeline_single_caption_crossing(spark, images_dir):
     URL checks + scrub in a single crossing)."""
     images = spark.read.parquet(f"{images_dir}/images.parquet")
     us = spark.read.parquet(f"{images_dir}/url_status.parquet")
-    audit = run_pipeline(spark, images, us, url_mode="udf")
+    audit = run_pipeline(spark, images, us)
     plan = _plan(audit)
     assert plan.count("ArrowEvalPython") == 2
 

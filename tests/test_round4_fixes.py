@@ -3,9 +3,10 @@
 * binary_sanity_cols / codec.header_dims only trust the fixed JFIF SOF0
   dim offsets when the SOF0 marker is actually there — a wild JFIF
   (extra APP1/COM segments) must yield NULL dims, never a misread;
-* reconcile_kept treats ONLY path-not-found as "first run": any other
-  failure reading the kept table raises instead of silently duplicating
-  the entire kept output;
+* reconcile_kept and completed_buckets treat ONLY "nothing committed"
+  (missing directory, or a directory holding just a crashed commit's
+  _temporary/ tree) as a first run: any other failure reading the kept
+  or audit table raises instead of silently re-appending everything;
 * free_local_checkpoint refuses derived frames with a clear TypeError
   instead of an opaque Py4JError, and honors the blocking flag.
 """
@@ -17,7 +18,11 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from metacheck_spark.fixtures import codec
-from metacheck_spark.pipeline import binary_sanity_cols, reconcile_kept
+from metacheck_spark.pipeline import (
+    binary_sanity_cols,
+    completed_buckets,
+    reconcile_kept,
+)
 
 
 def _wild_jfif() -> bytes:
@@ -97,6 +102,42 @@ def test_reconcile_kept_raises_on_unreadable_kept_table(spark, tmp_path):
     # and nothing was appended by the failed call
     assert "PATH_NOT_FOUND" not in str(ei.value)
     assert not list(kept.glob("lang=*"))
+
+
+def _temporary_only(path) -> str:
+    """What a crash during a table's first commit leaves behind: only the
+    committer's _temporary/ staging tree, holding a half-written file."""
+    attempt = path / "_temporary" / "0" / "_temporary" / "attempt_0"
+    attempt.mkdir(parents=True)
+    (attempt / "part-00000.parquet").write_bytes(b"PAR1 truncated")
+    return str(path)
+
+
+def test_reconcile_kept_backfills_temporary_only_kept_table(spark, tmp_path):
+    """A kept table whose first commit crashed holds no committed rows:
+    reconcile must back-fill every keep=true audit row, not raise."""
+    audit = str(tmp_path / "audit")
+    _write_audit(spark, audit)
+    kept = _temporary_only(tmp_path / "kept")
+    assert reconcile_kept(spark, audit, kept, salt=2) == 6
+    assert spark.read.parquet(kept).count() == 6
+
+
+def test_completed_buckets_temporary_only_audit_is_empty(spark, tmp_path):
+    assert completed_buckets(spark, _temporary_only(tmp_path / "audit")) == []
+
+
+def test_completed_buckets_raises_on_corrupt_audit(spark, tmp_path):
+    """A corrupt audit table must RAISE, not read as "nothing committed":
+    write_audit appends, so the rerun would re-process and re-append
+    every bucket already committed."""
+    bucket = tmp_path / "audit" / "bucket=0"
+    bucket.mkdir(parents=True)
+    (bucket / "part-00000.parquet").write_bytes(b"this is not parquet")
+    with pytest.raises(Exception) as ei:
+        completed_buckets(spark, str(tmp_path / "audit"))
+    assert "PATH_NOT_FOUND" not in str(ei.value)
+    assert "UNABLE_TO_INFER_SCHEMA" not in str(ei.value)
 
 
 def test_free_local_checkpoint_guards_derived_frames(spark):

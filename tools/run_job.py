@@ -36,7 +36,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--run-ts", default="1970-01-01T00:00:00Z")
     ap.add_argument("--summary", default=None)
-    ap.add_argument("--url-mode", choices=["udf", "join"], default="udf")
     args = ap.parse_args(argv)
 
     # SparkSession comes from spark-submit's conf (master, executors, ...);
@@ -64,7 +63,7 @@ def main(argv: list[str] | None = None) -> None:
         print(f"[resume] {len(done)} buckets already committed: {sorted(done)}")
     todo = resume_filter(images, done, args.buckets)
 
-    labeled = with_labels(assemble_flags(todo, url_status, args.url_mode))
+    labeled = with_labels(assemble_flags(todo, url_status))
     audit = audit_frame(labeled, args.run_ts, args.buckets)
     write_audit(audit, args.audit, args.buckets)
     n_kept = reconcile_kept(spark, args.audit, args.kept, args.salt)
