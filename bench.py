@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line
+local[$SPARK_GRAFT_CPUS] (default: the host's cores) and prints ONE JSON line
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -32,7 +32,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+from metacheck_spark.session import default_cpus  # noqa: E402
+
+CPUS = default_cpus()
 IMAGES_ROWS = int(os.environ.get("BENCH_IMAGES_ROWS", "60000"))
 # Fixed input-split count for the images scan at every parallelism level
 # (same input, same splits — only the compute resources vary).

@@ -214,9 +214,6 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
 
 # --- WAV/PCM audio (REAL codec — RIFF/PCM16 is pure struct + numpy) ---------
 
-WAV_RIFF = b"RIFF"
-
-
 def wav_encode(samples: np.ndarray, rate: int = 16000) -> bytes:
     """mono int16 PCM -> canonical 44-byte-header WAV bytes."""
     pcm = samples.astype("<i2").tobytes()

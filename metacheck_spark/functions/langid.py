@@ -59,15 +59,6 @@ LANGS = list(LEXICONS.keys())
 UNKNOWN = "und"
 CONF_THRESHOLD = 0.5
 
-# Precompiled per-language alternation patterns (the "model").
-_PATTERNS = {
-    lang: re.compile(
-        r"(?<![\w])(" + "|".join(map(re.escape, words)) + r")(?![\w])",
-        re.IGNORECASE,
-    )
-    for lang, words in LEXICONS.items()
-}
-
 # Guard: disjoint lexicons are what make the scorer well-posed.
 _seen: dict[str, str] = {}
 for _lang, _words in LEXICONS.items():
@@ -81,7 +72,8 @@ for _lang, _words in LEXICONS.items():
 # token -> language index (the linear model's feature table). A lexicon
 # word matches `(?<!\w)w(?!\w)` exactly when a maximal \w+ token equals it
 # (lexicon words contain no non-word chars), so counting dict-mapped tokens
-# is equivalent to the per-language regex count — at ~1/30th the cost.
+# is equivalent to counting a per-language alternation regex — at ~1/30th
+# the cost.
 _WORD2LANG = {
     w.lower(): i for i, (_lang, words) in enumerate(LEXICONS.items()) for w in words
 }

@@ -11,7 +11,7 @@ shingle sets only for verification. Exact dedup is one hash-shuffle on a
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, Window
@@ -48,7 +48,7 @@ def normalized_text(c: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
-def _fan_out(df: DataFrame, num_partitions: int | str | None = None) -> DataFrame:
+def _fan_out(df: DataFrame, num_partitions: str | None = None) -> DataFrame:
     """Optional pre-shingle repartition. Default (None) is NO repartition:
     a production-scale table already arrives well-partitioned, and silently
     coalescing it down to #cores would add a full extra shuffle on every
@@ -57,14 +57,13 @@ def _fan_out(df: DataFrame, num_partitions: int | str | None = None) -> DataFram
     signature stages, which multiply work ~100x per row, so an
     under-partitioned source serializes them while the repartitioned frame
     is a 2-column projection whose shuffle is negligible next to that work.
-    A positive int overrides the target. No RDD partition probe to guess
-    for the caller: that breaks under Spark Connect and forces plan
-    conversion, so the choice is explicit."""
-    if num_partitions in (None, 0):
+    No RDD partition probe to guess for the caller: that breaks under
+    Spark Connect and forces plan conversion, so the choice is explicit."""
+    if num_partitions is None:
         return df
     if num_partitions == "auto":
         return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return df.repartition(int(num_partitions))
+    raise ValueError(f"num_partitions must be None or 'auto', got {num_partitions!r}")
 
 
 def exact_dedup(
@@ -134,24 +133,6 @@ def word_ngrams(c: Column, n: int = 2) -> Column:
     return F.array_distinct(grams)
 
 
-def char_shingles(c: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text — same
-    slice/zip construction as word_ngrams (substring(s, i, k) inside a
-    lambda would re-normalize the whole string per shingle): zip k
-    shifted char arrays, then drop the ragged tail below length k."""
-    s = normalized_text(c)
-    chars = F.split(s, "")
-    m = F.greatest(F.size(chars) - (k - 1), F.lit(1))
-    sh = F.slice(chars, 1, m)
-    for j in range(1, k):
-        sh = F.zip_with(
-            sh,
-            F.slice(chars, 1 + j, m),
-            lambda a, b: F.concat(a, F.coalesce(b, F.lit(""))),
-        )
-    return F.array_distinct(sh)
-
-
 def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
@@ -167,7 +148,7 @@ def ngram_jaccard_pairs(
     id_col: str,
     n: int = 2,
     threshold: float = 0.6,
-    num_partitions: int | str | None = None,
+    num_partitions: str | None = None,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard >= threshold. Quadratic — use only on
     bounded inputs (a bucket, a partition); the LSH operators below are
@@ -213,7 +194,7 @@ def minhash_signatures(
     num_hashes: int = 64,
     shingle_n: int = 2,
     seed: int = 42,
-    num_partitions: int | str | None = None,
+    num_partitions: str | None = None,
 ) -> DataFrame:
     """(id, sig: array<bigint>) MinHash signatures, fully native.
 
@@ -280,36 +261,64 @@ def _bucket_pairs(sorted_ids: Column) -> Column:
     )
 
 
+def _bucket_sizes(keyed: DataFrame, key: list[str]) -> DataFrame:
+    """The rows of an (id, *key) frame whose bucket holds two or more ids,
+    each annotated with its bucket's size `bsz` and min-id `hub`. One
+    window over the bucket key; singleton buckets carry no pair and drop
+    out here."""
+    w = Window.partitionBy(*key)
+    return (
+        keyed.withColumn("bsz", F.count(F.lit(1)).over(w))
+        .withColumn("hub", F.min("id").over(w))
+        .filter(F.col("bsz") > 1)
+    )
+
+
+def _expand_buckets(sized: DataFrame, key: list[str], max_bucket: int) -> DataFrame:
+    """(id_a, id_b) pairs from a _bucket_sizes frame, one row per bucket
+    per pair — the LSH bucket policy every pair operator here shares.
+
+    Buckets of at most max_bucket ids expand to all pairs. Oversized
+    buckets (boilerplate text duplicated millions of times is the common
+    web-scale case) are NOT dropped and NOT expanded quadratically: they
+    emit STAR pairs (hub -> every other id), which is O(bucket) rows,
+    never materializes the bucket as an array (the all-pairs path
+    collect_lists ids, which would blow the aggregation buffer on a
+    10^7-id bucket), and preserves cluster connectivity — downstream
+    verification confirms each member against the hub, which is exactly
+    what dedup needs from a boilerplate cluster. The small-bucket groupBy
+    reuses the window's exchange."""
+    small = (
+        sized.filter(F.col("bsz") <= max_bucket)
+        .groupBy(*key)
+        # sort ONCE in the aggregate: _bucket_pairs requires a bound
+        # pre-sorted column (see its precondition note)
+        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
+        .select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
+        .select("p.id_a", "p.id_b")
+    )
+    star = sized.filter(
+        (F.col("bsz") > max_bucket) & (F.col("id") != F.col("hub"))
+    ).select(F.col("hub").alias("id_a"), F.col("id").alias("id_b"))
+    return small.unionAll(star)
+
+
 def bucketed_candidate_pairs(
     banded: DataFrame, max_bucket: int = 1000, observation=None
 ) -> DataFrame:
     """(id_a, id_b) candidates from a (id, band, band_sig) frame — the
     canonical LSH shape: shuffle on the bucket key + in-bucket pair
-    expansion, instead of a self-join that executes the upstream signature
-    plan twice.
-
-    Oversized buckets (> max_bucket ids — boilerplate text duplicated
-    millions of times is the common web-scale case) are NOT dropped and
-    NOT expanded quadratically: they emit STAR pairs (smallest id -> every
-    other id), which is O(bucket) rows, never materializes the bucket as
-    an array (the all-pairs path collect_lists ids, which would blow the
-    aggregation buffer on a 10^7-id bucket), and preserves cluster
-    connectivity — downstream verification (jaccard/hamming/cosine)
-    confirms each member against the hub, which is exactly what dedup
-    needs from a boilerplate cluster. Routing uses one window over the
-    bucket key; the small-bucket groupBy reuses the same exchange.
+    expansion (_expand_buckets, star-routed above max_bucket), instead of
+    a self-join that executes the upstream signature plan twice. A pair
+    sharing several bands appears once.
 
     Pass a pyspark.sql.Observation as `observation` to collect routing
     metrics (bucket count, max size, ids routed via star) with the action.
     """
-    w = Window.partitionBy("band", "band_sig")
-    annotated = (
-        banded.withColumn("bsz", F.count(F.lit(1)).over(w))
-        .withColumn("hub", F.min("id").over(w))
-        .filter(F.col("bsz") > 1)
-    )
+    key = ["band", "band_sig"]
+    sized = _bucket_sizes(banded, key)
     if observation is not None:
-        annotated = annotated.observe(
+        sized = sized.observe(
             observation,
             # one row per bucket has id == hub (observe() forbids
             # distinct aggregates, so count hubs instead)
@@ -323,20 +332,54 @@ def bucketed_candidate_pairs(
                 ).otherwise(0)
             ).alias("star_routed_ids"),
         )
-    small = (
-        annotated.filter(F.col("bsz") <= max_bucket)
-        .groupBy("band", "band_sig")
-        # sort ONCE in the aggregate: _bucket_pairs requires a bound
-        # pre-sorted column (see its precondition note)
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
-        .select("p.id_a", "p.id_b")
+    return _expand_buckets(sized, key, max_bucket).distinct()
+
+
+def bit_bands(sigs: DataFrame, bands: int, band_bits: int) -> DataFrame:
+    """(id, band, band_sig) rows from an (id, sig: bigint) frame: band b
+    is the band_bits-wide slice of the signature starting at bit
+    b * band_bits. Pigeonhole: two signatures differing in fewer than
+    `bands` bits agree on at least one whole band."""
+    mask = (1 << band_bits) - 1
+    return sigs.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.shiftrightunsigned(F.col("sig"), b * band_bits)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("band_sig"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bv"),
+    ).select("id", "bv.band", "bv.band_sig")
+
+
+def verify_pairs(
+    cands: DataFrame,
+    feats: DataFrame,
+    feat: str,
+    score: Callable[[Column, Column], Column],
+    name: str,
+    keep: Callable[[Column], Column],
+) -> DataFrame:
+    """(id_a, id_b, <name>) for the candidate pairs whose score passes:
+    each side fetches its `feat` column from the (id, feat) frame by id,
+    `score(a, b)` compares them, and `keep(score)` filters. Two narrow
+    joins on the candidate set — the verify step of every LSH path."""
+    a = feats.select(F.col("id").alias("id_a"), F.col(feat).alias(f"{feat}_a"))
+    b = feats.select(F.col("id").alias("id_b"), F.col(feat).alias(f"{feat}_b"))
+    s = score(F.col(f"{feat}_a"), F.col(f"{feat}_b"))
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .select("id_a", "id_b", s.alias(name))
+        .filter(keep(F.col(name)))
     )
-    star = (
-        annotated.filter((F.col("bsz") > max_bucket) & (F.col("id") != F.col("hub")))
-        .select(F.col("hub").alias("id_a"), F.col("id").alias("id_b"))
-    )
-    return small.unionAll(star).distinct()
 
 
 def minhash_lsh_candidates(
@@ -346,7 +389,7 @@ def minhash_lsh_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 2,
-    num_partitions: int | str | None = None,
+    num_partitions: str | None = None,
     observation=None,
 ) -> DataFrame:
     """Candidate duplicate pairs via banding: rows sharing any band
@@ -384,7 +427,7 @@ def minhash_dedup_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 2,
-    num_partitions: int | str | None = None,
+    num_partitions: str | None = None,
     caches: CacheRegistry | None = None,
     observation=None,
 ) -> DataFrame:
@@ -426,22 +469,13 @@ def minhash_dedup_pairs(
         ).select("id", word_ngrams(F.col("t"), shingle_n).alias("sh")),
         caches,
     )
-    return (
-        cands.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return verify_pairs(
+        cands, sh, "sh", lambda a, b: F.round(jaccard(a, b), 6), "jaccard",
+        lambda s: s >= threshold,
     )
 
 
 # --- SimHash ----------------------------------------------------------------
-
-_SIMHASH_T = T.StructType([T.StructField("simhash", T.LongType())])
-
 
 # Token-hash spec, shared verbatim with the DuckDB oracle
 # (__spark_entry__._simhash_pairs_sql): two independent FNV-1a-style
@@ -520,7 +554,7 @@ def simhash_dup_pairs(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    num_partitions: int | str | None = None,
+    num_partitions: str | None = None,
     caches: CacheRegistry | None = None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming. Candidates via
@@ -534,31 +568,10 @@ def simhash_dup_pairs(
     )
     # feeds banding AND the signature-fetch verify join
     sh = persist_owned(sh, caches)
-    banded = sh.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("sig"), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("band_sig"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bv"),
-    ).select("id", "bv.band", "bv.band_sig")
-    cands = bucketed_candidate_pairs(banded)
-    a = sh.withColumnsRenamed({"id": "id_a", "sig": "sig_a"})
-    b = sh.withColumnsRenamed({"id": "id_b", "sig": "sig_b"})
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+    cands = bucketed_candidate_pairs(bit_bands(sh, bands=4, band_bits=16))
+    return verify_pairs(
+        cands, sh, "sig", lambda a, b: F.bit_count(a.bitwiseXOR(b)), "hamming",
+        lambda s: s <= max_hamming,
     )
 
 
@@ -656,7 +669,7 @@ def winnow_fingerprints(
     id_col: str,
     k: int = WINNOW_K,
     w: int = WINNOW_W,
-    num_partitions: int | str | None = None,
+    num_partitions: str | None = None,
 ) -> DataFrame:
     """(id, fp) winnowed fingerprints: one Arrow crossing (the
     winnow_batch kernel) + a native explode of the materialized list
@@ -696,7 +709,7 @@ def winnow_overlap_pairs(
     min_shared: int = 2,
     max_bucket: int = 1000,
     max_doc_freq: int | None = None,
-    num_partitions: int | str | None = None,
+    num_partitions: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b, shared_fps) document pairs ranked by how many winnowed
     fingerprints they share — the winnowing paper's overlap detector as
@@ -713,9 +726,10 @@ def winnow_overlap_pairs(
     None disables the cutoff — then the exact-count contract holds
     corpus-wide as long as buckets stay under max_bucket.
 
-    Scale shape mirrors bucketed_candidate_pairs: surviving buckets up
-    to max_bucket expand all-pairs (each bucket contributes 1 to its
-    pairs' shared count — multiplicity is the point here, so no global
+    Buckets go through the same routing as bucketed_candidate_pairs
+    (_bucket_sizes / _expand_buckets): surviving buckets up to
+    max_bucket expand all-pairs (each bucket contributes 1 to its pairs'
+    shared count — multiplicity is the point here, so no global
     distinct); buckets above max_bucket route O(bucket) star pairs
     around the min-id hub instead of O(bucket^2). In that regime
     shared_fps undercounts for non-hub pairs — the hub-anchored counts
@@ -724,27 +738,11 @@ def winnow_overlap_pairs(
     survives the cutoff.
     """
     fps = winnow_fingerprints(df, text_col, id_col, k, w, num_partitions)
-    wdw = Window.partitionBy("fp")
-    annotated = (
-        fps.withColumn("bsz", F.count(F.lit(1)).over(wdw))
-        .withColumn("hub", F.min("id").over(wdw))
-        .filter(F.col("bsz") > 1)
-    )
+    sized = _bucket_sizes(fps, ["fp"])
     if max_doc_freq is not None:
-        annotated = annotated.filter(F.col("bsz") <= max_doc_freq)
-    small = (
-        annotated.filter(F.col("bsz") <= max_bucket)
-        .groupBy("fp")
-        # sort ONCE in the aggregate: _bucket_pairs precondition
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
-        .select("p.id_a", "p.id_b")
-    )
-    star = annotated.filter(
-        (F.col("bsz") > max_bucket) & (F.col("id") != F.col("hub"))
-    ).select(F.col("hub").alias("id_a"), F.col("id").alias("id_b"))
+        sized = sized.filter(F.col("bsz") <= max_doc_freq)
     return (
-        small.unionAll(star)
+        _expand_buckets(sized, ["fp"], max_bucket)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)

@@ -12,7 +12,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metacheck_spark.operators.dedup import cosine
+from metacheck_spark.caching import persist_owned
+from metacheck_spark.operators.dedup import (
+    bit_bands,
+    bucketed_candidate_pairs,
+    cosine,
+    verify_pairs,
+)
 
 
 def _query_lit(query_vec: list[float]):
@@ -148,8 +154,6 @@ def embedding_dup_pairs_bucketed(
     pair hiding behind a non-duplicate hub in EVERY shared bucket would
     be missed (same honest boilerplate-cluster framing as
     bucketed_candidate_pairs)."""
-    from metacheck_spark.operators.dedup import bucketed_candidate_pairs
-
     assert bits % bands == 0, "bits must divide into equal bands"
     if dim is None:
         head = df.select(F.size(vec_col)).limit(1).collect()
@@ -160,10 +164,6 @@ def embedding_dup_pairs_bucketed(
             )
         dim = head[0][0]
     planes = hyperplanes(dim, bits, seed)
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
-    from metacheck_spark.caching import persist_owned
-
     v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     # cache ownership: the signature frame feeds banding AND the two
     # verify joins; it must stay persisted until the caller's action runs
@@ -171,34 +171,12 @@ def embedding_dup_pairs_bucketed(
     # release it afterwards; without one it stays persisted after return
     # (bench.py's clearCache-per-pass discipline handles that there).
     sig = persist_owned(v.withColumn("sig", signature("v", planes)), caches)
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("sig"), b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_sig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("id", "bv.band", "bv.band_sig")
-    cands = bucketed_candidate_pairs(banded, max_bucket=max_bucket)
-    a = sig.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    b = sig.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("v_a"), F.col("v_b")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
+    cands = bucketed_candidate_pairs(
+        bit_bands(sig, bands, bits // bands), max_bucket=max_bucket
+    )
+    return verify_pairs(
+        cands, sig, "v", lambda a, b: F.round(cosine(a, b), 6), "cos",
+        lambda s: s >= threshold,
     )
 
 

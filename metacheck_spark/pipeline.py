@@ -421,10 +421,6 @@ def kept_output(labeled: DataFrame, salt: int = 8) -> DataFrame:
     )
 
 
-def write_kept(labeled: DataFrame, path: str, salt: int = 8) -> None:
-    kept_output(labeled, salt).write.mode("append").partitionBy("lang").parquet(path)
-
-
 def reconcile_kept(
     spark: SparkSession, audit_path: str, kept_path: str, salt: int = 8
 ) -> int:

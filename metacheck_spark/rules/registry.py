@@ -33,7 +33,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from metacheck_spark.functions import patterns as P
-from metacheck_spark.functions.urlcheck import extract_urls as _urls_py
 from metacheck_spark.functions.urlcheck import url_flags_one
 
 # ---------------------------------------------------------------------------
@@ -56,10 +55,6 @@ def _rx(pattern: str):
     """Compile once; Python-side oracle predicate for an rlike analog."""
     cre = re.compile(pattern)
     return lambda s: s is not None and cre.search(s) is not None
-
-
-def _not_null_text(c: Column) -> Column:
-    return c.isNotNull()
 
 
 # --- text rules ------------------------------------------------------------
@@ -321,7 +316,7 @@ def _p001_py(_s, ctx):
     """Declared w/h column vs dims parsed from the image header bytes
     (analog of version-vs-release mismatch, reference p001.py:65-94).
     Header parse is byte-offset arithmetic — mirrored natively in Spark via
-    substring()/conv() on the binary column (see pipeline.binary_rule_cols)."""
+    substring()/conv() on the binary column (see pipeline.binary_sanity_cols)."""
     hdr = ctx.get("hdr_dims")  # (w, h) or None when unparseable
     if hdr is None:
         return False
@@ -442,9 +437,6 @@ REGISTRY: list[Rule] = [
 ]
 
 TEXT_RULES: list[Rule] = [r for r in REGISTRY if r.kind == "text"]
-URL_RULES: list[Rule] = [r for r in REGISTRY if r.kind == "url"]
-BINARY_RULES: list[Rule] = [r for r in REGISTRY if r.kind == "binary"]
-MODEL_RULES: list[Rule] = [r for r in REGISTRY if r.kind == "model"]
 # Rules whose predicate is RE2-expressible for the driver's DuckDB oracle
 DUCKDB_SAFE: list[Rule] = [r for r in REGISTRY if r.duckdb is not None]
 
@@ -456,8 +448,3 @@ def rule_dim_rows() -> list[tuple]:
     the analog of the reference's code->description/category mapping
     (json_ld_utils.py:54-88,318-353)."""
     return [(r.code, r.severity, r.category, r.description, r.rank) for r in REGISTRY]
-
-
-def extract_urls(s: str) -> list[str]:
-    """Python-side URL extraction (reference p013.py:58-82 semantics)."""
-    return _urls_py(s)

@@ -62,13 +62,11 @@ _LANG_ALIASES = {
 }
 
 
-# --- F1: category-presence predicate ---------------------------------------
+# --- F1: category presence ---------------------------------------------------
 # Reference: `if "version" not in somef_data` (p001.py:10-11, w015.py:15-16).
-# Fixed schema => absent category is NULL or empty array.
-
-
-def category_present(cat: Column) -> Column:
-    return cat.isNotNull() & (F.size(cat) > 0)
+# Fixed schema => absent category is NULL or empty array; the F2 filter and
+# F3 try_element_at selections below yield NULL for both, so the rules
+# abstain without a separate presence predicate.
 
 
 # --- F2: source/technique entry filter -------------------------------------
@@ -132,10 +130,6 @@ def metadata_entries(cat: Column) -> Column:
         cat,
         lambda e: (e["technique"] == "code_parser") & _source_is_metadata(e),
     )
-
-
-def technique_entries(cat: Column, technique: str) -> Column:
-    return F.filter(cat, lambda e: e["technique"] == technique)
 
 
 def scalar_value(e: Column) -> Column:
@@ -236,12 +230,6 @@ def _is_stringified_object(t: Column) -> Column:
 
 def first_match(filtered: Column) -> Column:
     return F.try_element_at(filtered, F.lit(1))
-
-
-def first_metadata_value(cat: Column) -> Column:
-    """First metadata-file entry's result.value (the selection every
-    version/license/author rule starts from)."""
-    return first_match(metadata_entries(cat))["result"]["value"]
 
 
 # --- F4: metadata-source filename projection --------------------------------
@@ -468,15 +456,6 @@ def w010_unversioned_names(langs_cat: Column) -> Column:
 from pyspark.sql import DataFrame  # noqa: E402
 
 from metacheck_spark.rules import registry as R  # noqa: E402
-
-def codemeta_entries(cat: Column) -> Column:
-    return F.filter(
-        cat,
-        lambda e: F.lower(F.coalesce(e["source"], F.lit(""))).contains(
-            "codemeta.json"
-        ),
-    )
-
 
 def codemeta_or_entries(cat: Column) -> Column:
     """The canonical codemeta entry filter of the value rules

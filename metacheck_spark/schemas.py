@@ -34,25 +34,6 @@ URL_STATUS_SCHEMA = T.StructType(
     ]
 )
 
-# One audit row per input row (the reference emits one JSON-LD document per
-# flagged repo, json_ld_utils.py:462-508; we keep one row per *input* row so
-# the audit table doubles as the resume ledger + lineage record).
-AUDIT_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("rule_hits", T.ArrayType(T.StringType()), False),
-        T.StructField("n_pitfalls", T.IntegerType(), False),
-        T.StructField("n_warnings", T.IntegerType(), False),
-        T.StructField("keep", T.BooleanType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("lang_conf", T.DoubleType(), True),
-        T.StructField("ppl", T.DoubleType(), True),
-        T.StructField("scrubbed_caption", T.StringType(), True),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("run_ts", T.StringType(), False),
-    ]
-)
-
 # Rule metadata dimension (code -> severity/description/category), the
 # analog of the reference's registry + JSON-LD description tables
 # (detect_pitfalls_main.py:262-290, json_ld_utils.py:54-88,318-353).

@@ -12,6 +12,30 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> str:
+    """Local-mode task slots: $SPARK_GRAFT_CPUS, else the host's cores."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """Driver heap: $SPARK_DRIVER_MEMORY, else half of the host's MemTotal
+    (/proc/meminfo) capped at 48g, so a session fits the host it starts on
+    and leaves the other half to the Python workers and the page cache.
+    Hosts without /proc/meminfo get the cap."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mb = min(mb, int(line.split()[1]) // 2048)  # kB -> MB / 2
+                    break
+    except OSError:
+        pass
+    return f"{mb}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "metacheck_spark",
@@ -20,15 +44,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Defaults: master from $SPARK_GRAFT_CPUS (local[N]); shuffle partitions
-    ~= cores in local mode (the 200 default over-parallelizes small local
-    runs and under-parallelizes big ones — on a real cluster, callers set
-    it to ~2-3x total cores or rely on AQE coalescing).
+    Defaults: master local[default_cpus()], driver heap
+    default_driver_memory() — both derived from the host unless
+    $SPARK_GRAFT_CPUS / $SPARK_DRIVER_MEMORY override them; shuffle
+    partitions ~= cores in local mode (the 200 default over-parallelizes
+    small local runs and under-parallelizes big ones — on a real cluster,
+    callers set it to ~2-3x total cores or rely on AQE coalescing).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count() or 1
 
     builder = (
         SparkSession.builder.master(master)
@@ -40,7 +66,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -83,16 +83,3 @@ def read_url_status(spark: SparkSession, path: str) -> DataFrame:
     from metacheck_spark.schemas import URL_STATUS_SCHEMA
 
     return spark.read.schema(URL_STATUS_SCHEMA).parquet(path)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = True
-) -> DataFrame:
-    """CSV scan with explicit schema + PERMISSIVE isolation (engine
-    completeness; the reference has no CSV surface)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .csv(path)
-    )

@@ -24,6 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from metacheck_spark.session import default_cpus  # noqa: E402
+
 BOILER = (
     "all images on this site are provided as is without warranty of any "
     "kind contact the site administrator to request removal or takedown"
@@ -35,7 +37,7 @@ def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-dup", type=int, default=100_000)
     ap.add_argument("--n-uniq", type=int, default=10_000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(default_cpus()))
     ap.add_argument("--out", default=os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "BENCH_MEGABUCKET.json"))
