@@ -11,8 +11,12 @@ the flat images table (rules/registry.py). Reference citations per item.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from metacheck_spark.rules import registry as R
 
 # The 8 metadata filenames the reference recognizes as metadata sources —
 # the canonical list repeated in p001.py:18, w003.py:17, p005.py:55,
@@ -48,18 +52,8 @@ ENTRY_DDL = (
     " version:string>>"
 )
 
-# Target language set + aliases (pitfall_utils.py:5-38, target set :10).
+# Target language set (pitfall_utils.py:10).
 TARGET_LANGUAGES = ["Python", "Java", "C++", "C", "R", "Rust"]
-_LANG_ALIASES = {
-    "python": "Python",
-    "python3": "Python",
-    "java": "Java",
-    "c++": "C++",
-    "cpp": "C++",
-    "c": "C",
-    "r": "R",
-    "rust": "Rust",
-}
 
 
 # --- F1: category presence ---------------------------------------------------
@@ -123,13 +117,51 @@ def _technique_is_filename(e: Column) -> Column:
     return F.coalesce(e["technique"], F.lit("")).isin(_METADATA_FILES_CS)
 
 
+def _is_metadata_cp(e: Column) -> Column:
+    """Parsed by the code parser from one of the 8 metadata files — the
+    reference's canonical entry filter (p005/p013, SURVEY.md §2.2 F2)."""
+    return (e["technique"] == "code_parser") & _source_is_metadata(e)
+
+
 def metadata_entries(cat: Column) -> Column:
-    """Entries originating from one of the 8 metadata files, parsed by the
-    code parser — the reference's canonical entry filter."""
-    return F.filter(
-        cat,
-        lambda e: (e["technique"] == "code_parser") & _source_is_metadata(e),
+    return F.filter(cat, _is_metadata_cp)
+
+
+def _is_metadata_cp_cs(e: Column) -> Column:
+    """code_parser AND case-sensitive metadata source (w021.py:32-35,
+    p022.py:41-43)."""
+    return (e["technique"] == "code_parser") & _source_is_metadata_cs(e)
+
+
+def _is_codemeta_or(e: Column) -> Column:
+    """The canonical codemeta entry filter of the value rules
+    (p007/p018/p020/p024/p025/p027/p028/w015, e.g. p024.py:55):
+    `"codemeta.json" in source OR (technique == "code_parser" and
+    "codemeta" in source.lower())` — note the case-sensitive first arm."""
+    return F.coalesce(e["source"], F.lit("")).contains("codemeta.json") | (
+        (e["technique"] == "code_parser")
+        & F.lower(F.coalesce(e["source"], F.lit(""))).contains("codemeta")
     )
+
+
+def codemeta_or_entries(cat: Column) -> Column:
+    return F.filter(cat, _is_codemeta_or)
+
+
+def _is_codemeta_cp(e: Column) -> Column:
+    """technique == code_parser AND case-sensitive 'codemeta.json' in
+    source — stricter than _is_codemeta_or (p006.py:71-73, w010.py:26 —
+    `CodeMeta.json` sources are invisible; p011.py:28-35)."""
+    return (e["technique"] == "code_parser") & F.coalesce(
+        e["source"], F.lit("")
+    ).contains("codemeta.json")
+
+
+def _is_metadata_or(e: Column) -> Column:
+    """technique == code_parser OR source contains a metadata filename —
+    the OR-form entry filter of p023.py:58-63 and p008.py:63-68 (contrast
+    _is_metadata_cp's AND form used by p013/p005)."""
+    return (e["technique"] == "code_parser") | _source_is_metadata(e)
 
 
 def scalar_value(e: Column) -> Column:
@@ -162,11 +194,14 @@ def string_value(e: Column) -> Column:
     ).otherwise(v)
 
 
-def _is_structured(e: Column) -> Column:
+def is_structured_value(v: Column) -> Column:
     """value present but not a plain JSON string (stringified list/dict)."""
-    v = e["result"]["value"]
     t = F.trim(v)
     return v.isNotNull() & (_is_stringified_array(t) | _is_stringified_object(t))
+
+
+def _is_structured(e: Column) -> Column:
+    return is_structured_value(e["result"]["value"])
 
 
 def let(value: Column, body) -> Column:
@@ -191,13 +226,16 @@ def crash_aware_exists(entries: Column, fires) -> Column:
     scan iff it precedes the first firing entry — expressed as: find the
     first decisive entry (structured OR firing); the rule fires iff it is
     a firing one."""
-    decisive = first_match(
-        F.filter(
-            entries,
-            lambda e: _is_structured(e) | F.coalesce(fires(e), F.lit(False)),
-        )
+    decisive = crash_aware_first(
+        entries, lambda e: F.coalesce(fires(e), F.lit(False))
     )
     return let(decisive, lambda d: d.isNotNull() & ~_is_structured(d))
+
+
+def crash_aware_first(entries: Column, fires) -> Column:
+    """The decisive entry of crash_aware_exists: the first structured or
+    firing one."""
+    return first_match(F.filter(entries, lambda e: _is_structured(e) | fires(e)))
 
 
 def _is_stringified_array(t: Column) -> Column:
@@ -234,15 +272,8 @@ def first_match(filtered: Column) -> Column:
 
 # --- F4: metadata-source filename projection --------------------------------
 # Reference: map source URL -> one of the 8 filenames else 'metadata files'
-# (pitfall_utils.py:73-96).
-
-
-def source_filename(src: Column) -> Column:
-    low = F.lower(F.coalesce(src, F.lit("")))
-    branches = [
-        F.when(low.contains(fname), F.lit(fname)) for fname in METADATA_FILES
-    ]
-    return F.coalesce(*branches, F.lit("metadata files"))
+# (pitfall_utils.py:73-96). Only evidence text renders it:
+# sources/jsonld.py:metadata_source_filename.
 
 
 # --- F5: version normalization ----------------------------------------------
@@ -256,43 +287,36 @@ def normalize_version(v: Column) -> Column:
 
 
 # --- F6: language extraction + normalization + order-preserving dedup -------
-# Reference: pitfall_utils.py:5-38 (target set :10), :41-60.
-
-
-def extract_languages(langs_cat: Column) -> Column:
-    """Normalized target-language names from the programming_languages
-    category, order-preserving dedup (array_distinct keeps first
-    occurrence order, matching the reference's manual seen-set loop)."""
-    alias_map = F.create_map(
-        *[F.lit(x) for kv in _LANG_ALIASES.items() for x in kv]
-    )
-    names = F.transform(
-        langs_cat,
-        lambda e: alias_map[
-            F.lower(F.trim(F.coalesce(e["result"]["value"], e["result"]["name"])))
-        ],
-    )
-    return F.array_distinct(F.filter(names, lambda n: n.isNotNull()))
+# Reference: pitfall_utils.py:5-38 (target set :10), :41-60. Only the
+# summary's language tallies read it:
+# sources/jsonld.py:extract_target_languages.
 
 
 # --- Representative rules over the nested schema ----------------------------
 
 
+def p001_selected(version_cat: Column, releases_cat: Column) -> tuple[Column, Column]:
+    """P001's two selections: the first metadata-file version entry —
+    source-filename-only with CASE-SENSITIVE contains (p001.py:24 —
+    `CodeMeta.json` sources are invisible), value key required (:26) —
+    and the raw tag of the latest release, positional releases[0] (:54)."""
+    meta = first_match(
+        F.filter(
+            version_cat,
+            lambda e: _source_is_metadata_cs(e) & e["result"]["value"].isNotNull(),
+        )
+    )
+    return meta, F.try_element_at(releases_cat, F.lit(1))["result"]["tag"]
+
+
 def p001_version_mismatch(version_cat: Column, releases_cat: Column) -> Column:
     """First metadata-file version != releases[0].tag after v-strip
-    (p001.py:65-94; 'latest release' is positional releases[0], :54).
-    Selection is source-filename-only with CASE-SENSITIVE contains
-    (p001.py:24 — `CodeMeta.json` sources are invisible) and requires the
-    value key (:26); the release side must be truthy BEFORE normalization
-    (:85 — a bare 'v' tag still compares, an empty tag abstains)."""
-    meta_sel = F.filter(
-        version_cat,
-        lambda e: _source_is_metadata_cs(e) & e["result"]["value"].isNotNull(),
-    )
-    meta_v = normalize_version(first_match(meta_sel)["result"]["value"])
-    rel_raw = F.try_element_at(releases_cat, F.lit(1))["result"]["tag"]
+    (p001.py:65-94; selections: p001_selected). The release side must be
+    truthy BEFORE normalization (:85 — a bare 'v' tag still compares, an
+    empty tag abstains)."""
+    meta, rel_raw = p001_selected(version_cat, releases_cat)
     return let(
-        meta_v,
+        normalize_version(meta["result"]["value"]),
         lambda mv: let(
             rel_raw,
             lambda rr: mv.isNotNull()
@@ -303,27 +327,25 @@ def p001_version_mismatch(version_cat: Column, releases_cat: Column) -> Column:
     )
 
 
+def p027_selected(version_cat: Column) -> Column:
+    """P027's codemeta side: the FIRST entry passing the codemeta OR
+    filter (p027.py:20) that carries a value."""
+    return first_match(
+        F.filter(
+            version_cat, lambda e: _is_codemeta_or(e) & e["result"]["value"].isNotNull()
+        )
+    )
+
+
 def p027_codemeta_version_mismatch(version_cat: Column) -> Column:
     """Codemeta version != any OTHER metadata-file version under STRICT
     compare (no v-strip — p027.py:84, the documented quirk vs P001).
 
-    Selections per p027.py: the codemeta side is the FIRST entry passing
-    the OR filter (`codemeta.json` in source OR code_parser+`codemeta`
-    lower, :20) with a non-empty value (:73 falsy check); the other side
-    is every non-codemeta entry with technique == code_parser OR a
-    metadata source filename (:48 — OR, not AND)."""
-    cm = F.filter(
-        version_cat,
-        lambda e: (
-            F.coalesce(e["source"], F.lit("")).contains("codemeta.json")
-            | (
-                (e["technique"] == "code_parser")
-                & F.lower(F.coalesce(e["source"], F.lit(""))).contains("codemeta")
-            )
-        )
-        & e["result"]["value"].isNotNull(),
-    )
-    cm_first = first_match(cm)
+    Selections per p027.py: the codemeta side is p027_selected, with a
+    non-empty value (:73 falsy check); the other side is every
+    non-codemeta entry with technique == code_parser OR a metadata source
+    filename (:48 — OR, not AND)."""
+    cm_first = p027_selected(version_cat)
     # other side: NOT codemeta.json (case-sensitive skip, :46), then
     # code_parser OR metadata source — p027.py:48's list compares its
     # uppercase 'DESCRIPTION' against source.lower(), a dead arm, so the
@@ -379,6 +401,16 @@ def _normalize_repo_url(u: Column) -> Column:
     return F.regexp_replace(x, "/$", "")
 
 
+def p026_api_entries(code_repository_cat: Column) -> Column:
+    """The GitHub_API side of P026: every GitHub_API entry with a value;
+    the LAST one wins (the loop overwrites, p026.py:56-57)."""
+    return F.filter(
+        code_repository_cat,
+        lambda e: (e["technique"] == "GitHub_API")
+        & e["result"]["value"].isNotNull(),
+    )
+
+
 def p026_repo_mismatch(code_repository_cat: Column) -> Column:
     """Normalized codemeta code_repository != normalized GitHub_API repo
     URL (p026.py:27-82): the LAST GitHub_API entry wins (the loop
@@ -388,11 +420,7 @@ def p026_repo_mismatch(code_repository_cat: Column) -> Column:
     .lower() (p026.py:13), so a structured value on either side aborts
     the whole rule (both sides are normalized unconditionally before the
     compare loop)."""
-    apis = F.filter(
-        code_repository_cat,
-        lambda e: (e["technique"] == "GitHub_API")
-        & e["result"]["value"].isNotNull(),
-    )
+    apis = p026_api_entries(code_repository_cat)
     metas = F.filter(
         code_repository_cat,
         lambda e: (F.coalesce(e["technique"], F.lit("")) != "GitHub_API")
@@ -420,66 +448,18 @@ def p026_repo_mismatch(code_repository_cat: Column) -> Column:
     )
 
 
-def w010_language_without_version(langs_cat: Column) -> Column:
-    """Codemeta programming_languages entry with NULL result.version ->
-    fires; filter is code_parser AND case-sensitive 'codemeta.json' in
-    source (w010.py:26 — `CodeMeta.json` sources are invisible)."""
-    cm = F.filter(
-        langs_cat,
-        lambda e: (e["technique"] == "code_parser")
-        & F.coalesce(e["source"], F.lit("")).contains("codemeta.json"),
-    )
-    return F.exists(cm, lambda e: e["result"]["version"].isNull())
-
-
-def w010_unversioned_names(langs_cat: Column) -> Column:
-    cm = F.filter(
-        langs_cat,
-        lambda e: (e["technique"] == "code_parser")
-        & F.coalesce(e["source"], F.lit("")).contains("codemeta.json")
-        & e["result"]["version"].isNull(),
-    )
-    return F.transform(cm, lambda e: F.coalesce(e["result"]["name"], e["result"]["value"]))
-
-
 # ---------------------------------------------------------------------------
 # Full 27-rule battery over the nested schema.
 #
-# The caption-recast registry (rules/registry.py) already carries each text
-# pattern as a Column->Column predicate; here each rule applies that same
-# predicate to the VALUE SELECTED THE REFERENCE'S WAY — first qualifying
-# entry of the right category (F2+F3) — so the nested surface composes
-# selection semantics with the shared pattern logic instead of duplicating
-# either. Rules needing cross-entry or binary context get bespoke builders
-# (p001/p019/p026/p027 above and below).
-
-from pyspark.sql import DataFrame  # noqa: E402
-
-from metacheck_spark.rules import registry as R  # noqa: E402
-
-def codemeta_or_entries(cat: Column) -> Column:
-    """The canonical codemeta entry filter of the value rules
-    (p007/p018/p020/p024/p025/p027/p028/w015, e.g. p024.py:55):
-    `"codemeta.json" in source OR (technique == "code_parser" and
-    "codemeta" in source.lower())` — note the case-sensitive first arm."""
-    return F.filter(
-        cat,
-        lambda e: F.coalesce(e["source"], F.lit("")).contains("codemeta.json")
-        | (
-            (e["technique"] == "code_parser")
-            & F.lower(F.coalesce(e["source"], F.lit(""))).contains("codemeta")
-        ),
-    )
-
-
-def metadata_or_entries(cat: Column) -> Column:
-    """technique == code_parser OR source contains a metadata filename —
-    the OR-form entry filter of p023.py:58-63 and p008.py:63-68 (contrast
-    metadata_entries' AND form used by p013/p005/p022)."""
-    return F.filter(
-        cat,
-        lambda e: (e["technique"] == "code_parser") | _source_is_metadata(e),
-    )
+# Each rule's selection — which entries qualify and which of them fire,
+# or which value it picks first — is written once, in this module, and
+# both outputs derive from it: nested_rule_flags computes hit_<code>, and
+# sources/jsonld.py:evidence_columns quotes the entry the same selection
+# picks. SELECTORS holds (category, entry predicate, fires predicate) for
+# the scan-all rules; the *_selected functions return the first-match
+# picks of P001/W003/W004/W014/P019/P027. Rules needing cross-entry or
+# binary context get bespoke builders (p001/p019/p026/p027 above and
+# below).
 
 
 # --- Faithful value predicates for the codemeta value rules -----------------
@@ -642,49 +622,22 @@ def p017_flag(license_cat: Column) -> Column:
     return p017_copyright_only(lic["result"]["value"])
 
 
-# rule code -> (category, entry-filter builder, value extractor, predicate)
-# for the scan-ALL-entries / break-on-fire value rules (the reference loops
-# fire on ANY qualifying entry, e.g. p020.py:46-62, p024.py:50-66) —
-# expressed as F.exists, never first_match.
-_VALUE_RULES = {
-    # P006's filter is stricter than the others: technique == code_parser
-    # AND case-sensitive 'codemeta.json' in source (p006.py:71-73).
-    "P006": (
-        "readme_url",
-        lambda cat: F.filter(
-            cat,
-            lambda e: (e["technique"] == "code_parser")
-            & F.coalesce(e["source"], F.lit("")).contains("codemeta.json"),
-        ),
-        string_value,
-        p006_is_homepage_url,
-    ),
-    "P007": ("reference_publication", codemeta_or_entries, string_value,
-             p007_is_software_archive_url),
-    "P018": ("issues_url", codemeta_or_entries, string_value,
-             p018_has_format_violation),
-    "P020": ("development_status", codemeta_or_entries, string_value,
-             p020_is_url),
-    "P023": ("code_repository", metadata_or_entries, string_value,
-             p023_is_git_remote_shorthand),
-    "P024": ("identifier", codemeta_or_entries, string_value,
-             p024_is_bare_doi),
-    "P028": ("identifier", codemeta_or_entries, string_value,
-             p028_is_raw_swhid),
-}
-
-
-def w003_unversioned_requirement(req_cat: Column) -> Column:
+def w003_selected(req_cat: Column) -> Column:
     """FIRST metadata-source requirements entry (w003.py:20-28, source-
-    filename match only, CASE-SENSITIVE contains, break on first) is
-    unversioned: no non-blank version field and no operator in the value
-    (w003.py:33-52 — operators {== >= <= > < ~= != ^ ~})."""
-    first = first_match(
+    filename match only, CASE-SENSITIVE contains, break on first)."""
+    return first_match(
         F.filter(
             req_cat,
             lambda e: e["source"].isNotNull() & _source_is_metadata_cs(e),
         )
     )
+
+
+def w003_unversioned_requirement(req_cat: Column) -> Column:
+    """w003_selected is unversioned: no non-blank version field and no
+    operator in the value (w003.py:33-52 — operators
+    {== >= <= > < ~= != ^ ~})."""
+    first = w003_selected(req_cat)
     has_version = (
         first["result"]["version"].isNotNull()
         & (F.trim(first["result"]["version"]) != "")
@@ -697,16 +650,12 @@ def w003_unversioned_requirement(req_cat: Column) -> Column:
 _P005_SEPARATORS = r"(?i)( and | & |;|\n|,(?!\s+Jr\.?))"
 
 
-def p005_multi_author(authors_cat: Column) -> Column:
-    """ANY code_parser metadata author entry whose value (plain string or
-    structured $.name) holds multiple entities: ' and ', ' & ', ';',
-    newline, or ',' unless followed by Jr. — the Jr. comma exception and
-    IGNORECASE matching are p005.py:14-29; the scan-all-entries loop is
-    p005.py:58-89."""
-    return F.exists(
-        metadata_entries(authors_cat),
-        lambda e: F.coalesce(scalar_value(e), F.lit("")).rlike(_P005_SEPARATORS),
-    )
+def _p005_fires(e: Column) -> Column:
+    """The author value (plain string or structured $.name) holds multiple
+    entities: ' and ', ' & ', ';', newline, or ',' unless followed by Jr.
+    — the Jr. comma exception and IGNORECASE matching are p005.py:14-29;
+    the scan-all loop over code_parser metadata authors is p005.py:58-89."""
+    return F.coalesce(scalar_value(e), F.lit("")).rlike(_P005_SEPARATORS)
 
 
 def w012_packed_requirements(req_cat: Column) -> Column:
@@ -753,26 +702,14 @@ def w012_packed_requirements(req_cat: Column) -> Column:
     return F.exists(req_cat, fires)
 
 
-def w021_author_bracket_list(authors_cat: Column) -> Column:
+def _w021_fires(e: Column) -> Column:
     """Metadata author STRING embedding a bracketed comma list like
     "['William', 'Michael'] Landau" (w021.py:41-54: lazy `\\[(.*?)\\]`
     findall — content stops at the first ], cannot span newlines — fires
     when any content holds a comma). Entry filter: code_parser AND
     case-sensitive source contains (w021.py:32-35); genuine structured
     values are skipped by the isinstance-str guard."""
-
-    def fires(e: Column) -> Column:
-        return F.coalesce(string_value(e), F.lit("")).rlike(
-            r"\[[^\]\n]*,[^\]\n]*\]"
-        )
-
-    return F.exists(
-        F.filter(
-            authors_cat,
-            lambda e: (e["technique"] == "code_parser") & _source_is_metadata_cs(e),
-        ),
-        fires,
-    )
+    return F.coalesce(string_value(e), F.lit("")).rlike(r"\[[^\]\n]*,[^\]\n]*\]")
 
 
 # The 13 placeholder patterns of p002.py:37-51, as one alternation over
@@ -816,28 +753,18 @@ _P022_FAMILIES_FULL = [
 ]
 
 
-def p022_license_no_version(license_cat: Column) -> Column:
-    """ANY code_parser + case-sensitive-metadata-source license entry
+def _p022_fires(e: Column) -> Column:
+    """A code_parser + case-sensitive-metadata-source license entry
     (p022.py:41-43) naming a license family without its version
     (p022.py:48-61, scan-all; string values only)."""
-
-    def entry_fires(e: Column) -> Column:
-        up = F.upper(F.coalesce(string_value(e), F.lit("")))
-        cond = F.lit(False)
-        for fam, pat in _P022_FAMILIES_FULL:
-            hit = up.contains(fam)
-            if pat is not None:
-                hit = hit & ~up.rlike(pat)
-            cond = cond | hit
-        return cond
-
-    return F.exists(
-        F.filter(
-            license_cat,
-            lambda e: (e["technique"] == "code_parser") & _source_is_metadata_cs(e),
-        ),
-        entry_fires,
-    )
+    up = F.upper(F.coalesce(string_value(e), F.lit("")))
+    cond = F.lit(False)
+    for fam, pat in _P022_FAMILIES_FULL:
+        hit = up.contains(fam)
+        if pat is not None:
+            hit = hit & ~up.rlike(pat)
+        cond = cond | hit
+    return cond
 
 
 _P016_REPO_INDICATORS = [
@@ -850,26 +777,20 @@ _P016_HOME_INDICATORS = [
 ]
 
 
-def p016_homepage_as_repo(code_repo_cat: Column) -> Column:
-    """ANY metadata code_repository entry that looks like a homepage, not
-    a repo (p016.py:14-22 repo indicators, :41-51 homepage indicators,
+def _p016_qualifies(e: Column) -> Column:
+    """technique-in-filenames quirk OR lowercase source contains with the
+    dead-DESCRIPTION list (p016.py:92-94)."""
+    return _technique_is_filename(e) | _source_is_metadata_nodesc(e)
+
+
+def _p016_fires(e: Column) -> Column:
+    """The metadata code_repository value looks like a homepage, not a
+    repo (p016.py:14-22 repo indicators, :41-51 homepage indicators,
     :88-107 scan-all loop with break-on-fire; repo indicator wins).
-    Entry filter: technique-in-filenames quirk OR lowercase source
-    contains with the dead-DESCRIPTION list (p016.py:92-94); crash-aware
-    because is_homepage_url_repo calls .lower() (p016.py:38)."""
-
-    def fires(e: Column) -> Column:
-        v = F.lower(F.coalesce(string_value(e), F.lit("")))
-        return ~_contains_any(v, _P016_REPO_INDICATORS) & _contains_any(
-            v, _P016_HOME_INDICATORS
-        )
-
-    return crash_aware_exists(
-        F.filter(
-            code_repo_cat,
-            lambda e: _technique_is_filename(e) | _source_is_metadata_nodesc(e),
-        ),
-        fires,
+    Crash-aware because is_homepage_url_repo calls .lower() (p016.py:38)."""
+    v = F.lower(F.coalesce(string_value(e), F.lit("")))
+    return ~_contains_any(v, _P016_REPO_INDICATORS) & _contains_any(
+        v, _P016_HOME_INDICATORS
     )
 
 
@@ -894,16 +815,12 @@ def p008_is_local(v: Column) -> Column:
     return v.isNotNull() & not_http & (rel | slash | named | ext)
 
 
-def p008_local_license(license_cat: Column) -> Column:
-    """ANY license entry from code_parser OR a metadata source whose value
-    is a local file reference instead of a license name (p008.py:63-77
-    entry loop — note the OR between technique and source, unlike
-    p005/p022's AND)."""
-    return F.exists(
-        license_cat,
-        lambda e: ((e["technique"] == "code_parser") | _source_is_metadata(e))
-        & p008_is_local(e["result"]["value"]),
-    )
+def _p008_fires(e: Column) -> Column:
+    """A license entry from code_parser OR a metadata source whose value is
+    a local file reference instead of a license name (p008.py:63-77 entry
+    loop — note the OR between technique and source, unlike p005/p022's
+    AND)."""
+    return p008_is_local(e["result"]["value"])
 
 
 _W004_FORMATS = [
@@ -931,18 +848,12 @@ def w004_parse_date(raw: Column) -> Column:
     )
 
 
-def w004_stale_vs_codemeta(date_updated_cat: Column) -> Column:
-    """GitHub_API date_updated newer than codemeta dateModified by more
-    than 1 full day (w004.py:104-145).
-
-    Selections: first GitHub_API entry with a value (w004.py:19-22);
-    codemeta side is the first entry with a source containing
-    'codemeta.json' CASE-SENSITIVELY, or — only when the source key is
-    absent entirely — any code_parser entry (w004.py:39-52's if/elif).
-    Parse ladder: the 5 strptime formats of w004.py:71-77 plus the
-    date-prefix regex fallback (:85-90), so any value starting
-    YYYY-MM-DD parses. Fire: api > codemeta AND floor-days diff > 1
-    (timestamp subtraction, not calendar datediff — w004.py:96-100)."""
+def w004_selected(date_updated_cat: Column) -> tuple[Column, Column]:
+    """W004's two raw date values: the first GitHub_API entry with a value
+    (w004.py:19-22), and the codemeta side — the first entry with a source
+    containing 'codemeta.json' CASE-SENSITIVELY, or (only when the source
+    key is absent entirely) any code_parser entry (w004.py:39-52's
+    if/elif)."""
     api_raw = first_match(
         F.filter(
             date_updated_cat,
@@ -963,7 +874,17 @@ def w004_stale_vs_codemeta(date_updated_cat: Column) -> Column:
             & e["result"]["value"].isNotNull(),
         )
     )["result"]["value"]
+    return api_raw, cm_raw
 
+
+def w004_stale_vs_codemeta(date_updated_cat: Column) -> Column:
+    """GitHub_API date_updated newer than codemeta dateModified by more
+    than 1 full day (w004.py:104-145; selections: w004_selected).
+    Parse ladder: the 5 strptime formats of w004.py:71-77 plus the
+    date-prefix regex fallback (:85-90), so any value starting
+    YYYY-MM-DD parses. Fire: api > codemeta AND floor-days diff > 1
+    (timestamp subtraction, not calendar datediff — w004.py:96-100)."""
+    api_raw, cm_raw = w004_selected(date_updated_cat)
     return let(
         w004_parse_date(api_raw),
         lambda upd: let(
@@ -1011,30 +932,33 @@ def _w014_is_valid_identifier(raw: Column) -> Column:
     )
 
 
-def w014_name_id_while_valid_exists(identifier_cat: Column) -> Column:
-    """Codemeta identifier is invalid per the w014 ladder while a valid
-    DOI/URL identifier exists in ANOTHER (non-codemeta) entry
-    (w014.py:73-112). The codemeta side is the first code_parser +
-    lowercase-'codemeta.json' entry with a value; a structured value is
-    invalid (isinstance-str guard returns False => 'not valid' fires)."""
-    cm_first = first_match(
+def _w014_is_codemeta(e: Column) -> Column:
+    return (e["technique"] == "code_parser") & F.lower(
+        F.coalesce(e["source"], F.lit(""))
+    ).contains("codemeta.json")
+
+
+def w014_selected(identifier_cat: Column) -> Column:
+    """W014's codemeta side (w014.py:73-112): the first code_parser +
+    lowercase-'codemeta.json' entry with a value."""
+    return first_match(
         F.filter(
             identifier_cat,
-            lambda e: (e["technique"] == "code_parser")
-            & F.lower(F.coalesce(e["source"], F.lit(""))).contains("codemeta.json")
-            & e["result"]["value"].isNotNull(),
+            lambda e: _w014_is_codemeta(e) & e["result"]["value"].isNotNull(),
         )
     )
+
+
+def w014_name_id_while_valid_exists(identifier_cat: Column) -> Column:
+    """Codemeta identifier (w014_selected) is invalid per the w014 ladder
+    while a valid DOI/URL identifier exists in ANOTHER (non-codemeta)
+    entry (w014.py:73-112); a structured value is invalid (isinstance-str
+    guard returns False => 'not valid' fires)."""
+    cm_first = w014_selected(identifier_cat)
     other_valid = F.exists(
         F.filter(
             identifier_cat,
-            lambda e: ~(
-                (e["technique"] == "code_parser")
-                & F.lower(F.coalesce(e["source"], F.lit(""))).contains(
-                    "codemeta.json"
-                )
-            )
-            & e["result"]["value"].isNotNull(),
+            lambda e: ~_w014_is_codemeta(e) & e["result"]["value"].isNotNull(),
         ),
         lambda e: ~_is_structured(e)
         & _w014_is_valid_identifier(e["result"]["value"]),
@@ -1059,11 +983,7 @@ def p011_citation_missing_reference(
     (appears as a source in any of authors/title/description/version/
     license, :40-52) AND no code_parser reference_publication entry is
     CITATION.cff-sourced (:33-37 elif — case-sensitive 'CITATION.cff')."""
-    codemeta_has = F.exists(
-        reference_publication_cat,
-        lambda e: (e["technique"] == "code_parser")
-        & F.coalesce(e["source"], F.lit("")).contains("codemeta.json"),
-    )
+    codemeta_has = F.exists(reference_publication_cat, _is_codemeta_cp)
     cff_has = F.exists(
         reference_publication_cat,
         lambda e: (e["technique"] == "code_parser")
@@ -1086,6 +1006,17 @@ def p011_citation_missing_reference(
     return codemeta_has & cff_exists & ~cff_has
 
 
+def p019_selected(download_url_cat: Column) -> Column:
+    """P019's codemeta downloadURL: the first codemeta-OR entry with a
+    value (p019.py:85-94)."""
+    return first_match(
+        F.filter(
+            download_url_cat,
+            lambda e: _is_codemeta_or(e) & e["result"]["value"].isNotNull(),
+        )
+    )
+
+
 def p019_download_url_version_mismatch(download_url_cat: Column,
                                        releases_cat: Column) -> Column:
     """Version parsed from the codemeta downloadURL != latest release
@@ -1095,25 +1026,11 @@ def p019_download_url_version_mismatch(download_url_cat: Column,
     trailing anchor) and '-1.2.3.tar.gz' extracts '1.2.3.tar' (pattern 2
     backtracks one dot) — mismatches by construction.
 
-    Selection: first codemeta-OR entry with a value (p019.py:85-94);
-    a structured value crashes re.search => rule not fired. Release
-    side (p019.py:28-57): releases[0].result.tag if truthy (strip one
-    leading LOWERCASE 'v'), else a version re.search over result.name."""
-    cm_first = first_match(
-        F.filter(
-            download_url_cat,
-            lambda e: (
-                F.coalesce(e["source"], F.lit("")).contains("codemeta.json")
-                | (
-                    (e["technique"] == "code_parser")
-                    & F.lower(F.coalesce(e["source"], F.lit(""))).contains(
-                        "codemeta"
-                    )
-                )
-            )
-            & e["result"]["value"].isNotNull(),
-        )
-    )
+    Selection: p019_selected; a structured value crashes re.search =>
+    rule not fired. Release side (p019.py:28-57): releases[0].result.tag
+    if truthy (strip one leading LOWERCASE 'v'), else a version re.search
+    over result.name."""
+    cm_first = p019_selected(download_url_cat)
     _VER = r"(\d+\.\d+(?:\.\d+)?(?:[a-zA-Z0-9\-\.]*)?)"
 
     def _url_v(url: Column) -> Column:
@@ -1152,8 +1069,172 @@ def p019_download_url_version_mismatch(download_url_cat: Column,
     )
 
 
-def w010_flag(langs_cat: Column) -> Column:
-    return w010_language_without_version(langs_cat)
+
+
+# --- URL-accessibility rules against the frozen dimension -------------------
+# Quirk pair: P013 2xx∪301 ok (p013.py:47), P025 strict 2xx (p025.py:40-41).
+# Faithful semantics per ADVICE r01: P013 scans ALL code_parser+
+# metadata-source software_requirements entries (p013.py:105-114),
+# P025 scans ALL codemeta continuous_integration entries (p025.py:73);
+# a URL that is invalid (no http(s) scheme — urlparse gate,
+# p013.py:8-22) or ABSENT from the frozen dimension (reference:
+# request error => inaccessible, p013.py:50-53) FIRES rather than
+# abstains. With no dimension at all the rules abstain.
+
+
+def url_status_literal(url_status_map: dict[str, int]) -> Column:
+    """The frozen URL-status dimension as one map literal (url -> status)."""
+    return F.create_map(
+        *[F.lit(x) for url, code in url_status_map.items() for x in (url, code)]
+    )
+
+
+def entry_urls(e: Column) -> Column:
+    """The URLs of an entry's value. The reference extracts them with TWO
+    independent findall passes (https?:// and www., p013.py:66-71), so a
+    www. host inside an https URL is re-extracted bare (and, lacking a
+    scheme, is always invalid => fires); one trailing punct char is
+    stripped (p013.py:78)."""
+    text = F.coalesce(e["result"]["value"], F.lit(""))
+    u1 = F.regexp_extract_all(text, F.lit(r"(?i)(https?://[^\s<>\"']+)"), 0)
+    u2 = F.regexp_extract_all(text, F.lit(r"(?i)(www\.[^\s<>\"']+)"), 0)
+    return F.transform(
+        F.concat(u1, u2), lambda u: F.regexp_replace(u, r"[,;.!?)]$", "")
+    )
+
+
+def url_accessible(u: Column, status_map: Column, *ok) -> Column:
+    """`u` is a valid http(s) URL whose frozen status is known and passes
+    every `ok` test, each ANDed on in turn."""
+    s = status_map[F.trim(u)]
+    cond = u.rlike(r"^(?i)https?://[^/\s]+") & s.isNotNull()
+    for test in ok:
+        cond = cond & test(s)
+    return cond
+
+
+def p013_url_bad(u: Column, status_map: Column) -> Column:
+    return ~url_accessible(
+        u, status_map, lambda s: ((s >= 200) & (s < 300)) | (s == 301)
+    )
+
+
+def p013_fires(e: Column, status_map: Column) -> Column:
+    urls = entry_urls(e)
+    return (F.size(urls) > 0) & F.exists(urls, lambda u: p013_url_bad(u, status_map))
+
+
+def p013_inaccessible_requirement(sw_req_cat: Column, status_map: Column) -> Column:
+    return F.exists(
+        metadata_entries(sw_req_cat), lambda e: p013_fires(e, status_map)
+    )
+
+
+def p025_inaccessible_ci(ci_cat: Column, status_map: Column) -> Column:
+    return F.exists(
+        codemeta_or_entries(ci_cat),
+        lambda e: e["result"]["value"].isNotNull()
+        & ~url_accessible(
+            e["result"]["value"], status_map, lambda s: (s >= 200) & (s < 300)
+        ),
+    )
+
+
+def _on_string(pred):
+    """Per-entry fires of a value rule: `pred` over the plain-string value
+    (structured values null out, matching the isinstance-str guards).
+    A closure factory, not a lambda default: PySpark derives a
+    higher-order function's arity from the Python signature."""
+    return lambda e: pred(string_value(e))
+
+
+# The scan-all rules whose evidence quotes a firing entry: code ->
+# (category, entry predicate, per-entry fires predicate). The reference
+# loops fire on ANY qualifying entry (e.g. p020.py:46-62, p024.py:50-66),
+# so the flag is an exists() over the qualifying entries, never
+# first_match; the evidence quotes the first firing entry, or the last
+# where the reference loop never breaks (w021, p022).
+SELECTORS: dict[str, tuple[str, Callable[[Column], Column], Callable[[Column], Column]]] = {
+    "P005": ("authors", _is_metadata_cp, _p005_fires),
+    "P006": ("readme_url", _is_codemeta_cp, _on_string(p006_is_homepage_url)),
+    "P007": ("reference_publication", _is_codemeta_or,
+             _on_string(p007_is_software_archive_url)),
+    "P008": ("license", _is_metadata_or, _p008_fires),
+    # a codemeta language entry with NULL result.version (w010.py:26, :32-34)
+    "W010": ("programming_languages", _is_codemeta_cp,
+             lambda e: e["result"]["version"].isNull()),
+    "P016": ("code_repository", _p016_qualifies, _p016_fires),
+    "P018": ("issues_url", _is_codemeta_or, _on_string(p018_has_format_violation)),
+    "P020": ("development_status", _is_codemeta_or, _on_string(p020_is_url)),
+    "W021": ("authors", _is_metadata_cp_cs, _w021_fires),
+    "P022": ("license", _is_metadata_cp_cs, _p022_fires),
+    "P023": ("code_repository", _is_metadata_or,
+             _on_string(p023_is_git_remote_shorthand)),
+    "P024": ("identifier", _is_codemeta_or, _on_string(p024_is_bare_doi)),
+    "P028": ("identifier", _is_codemeta_or, _on_string(p028_is_raw_swhid)),
+}
+
+
+def _scan_rule(code: str, form: str = "exists"):
+    """FLAG_RULES entry of SELECTORS rule `code`. The forms differ in plan
+    shape only — a null fire reads as not-fired under nested_rule_flags'
+    coalesce either way: 'value' coalesces inside the scan, 'unfiltered'
+    tests the entry predicate inside exists() (p008.py:63-77's single
+    loop), 'crash' is crash_aware_exists (P016)."""
+    category, qualifies, fires = SELECTORS[code]
+
+    def build(cat: Column) -> Column:
+        if form == "unfiltered":
+            return F.exists(cat, lambda e: qualifies(e) & fires(e))
+        entries = F.filter(cat, qualifies)
+        if form == "crash":
+            return crash_aware_exists(entries, fires)
+        if form == "value":
+            return F.exists(entries, lambda e: F.coalesce(fires(e), F.lit(False)))
+        return F.exists(entries, fires)
+
+    return (category,), build
+
+
+# Pseudo-inputs of FLAG_RULES besides the category columns: the frozen
+# URL-status map literal, and P011's CITATION.cff probe categories (each
+# one optional, p011.py:40-52).
+URL_STATUS = "<url_status>"
+CITATION_SOURCES = "<citation_sources>"
+_CITATION_CATEGORIES = ("authors", "title", "description", "version", "license")
+
+# code -> (required inputs, builder over them). A rule abstains (false)
+# when a required input is absent, mirroring F1.
+FLAG_RULES: dict[str, tuple[tuple[str, ...], Callable[..., Column]]] = {
+    "P001": (("version", "releases"), p001_version_mismatch),
+    "P002": (("license",), p002_license_placeholders),
+    "W003": (("requirements",), w003_unversioned_requirement),
+    "W004": (("date_updated",), w004_stale_vs_codemeta),
+    "P005": _scan_rule("P005"),
+    "P006": _scan_rule("P006", "value"),
+    "P007": _scan_rule("P007", "value"),
+    "P008": _scan_rule("P008", "unfiltered"),
+    "W010": _scan_rule("W010"),
+    "P011": (("reference_publication", CITATION_SOURCES),
+             p011_citation_missing_reference),
+    "W012": (("requirements",), w012_packed_requirements),
+    "P013": (("software_requirements", URL_STATUS), p013_inaccessible_requirement),
+    "W014": (("identifier",), w014_name_id_while_valid_exists),
+    "W015": (("identifier",), w015_empty_identifier),
+    "P016": _scan_rule("P016", "crash"),
+    "P017": (("license",), p017_flag),
+    "P018": _scan_rule("P018", "value"),
+    "P019": (("download_url", "releases"), p019_download_url_version_mismatch),
+    "P020": _scan_rule("P020", "value"),
+    "W021": _scan_rule("W021"),
+    "P022": _scan_rule("P022"),
+    "P023": _scan_rule("P023", "value"),
+    "P024": _scan_rule("P024", "value"),
+    "P025": (("continuous_integration", URL_STATUS), p025_inaccessible_ci),
+    "P026": (("code_repository",), p026_repo_mismatch),
+    "P027": (("version",), p027_codemeta_version_mismatch),
+    "P028": _scan_rule("P028", "value"),
+}
 
 
 def nested_rule_flags(df: DataFrame, url_status_map: dict[str, int] | None = None) -> DataFrame:
@@ -1167,208 +1248,17 @@ def nested_rule_flags(df: DataFrame, url_status_map: dict[str, int] | None = Non
     (the dimension the pipeline's fused caption stage broadcasts), else
     abstain.
     """
-    cols = set(df.columns)
-
-    def cat(name: str) -> Column | None:
-        return F.col(name) if name in cols else None
-
-    flags: dict[str, Column] = {}
-    for code, (category, entry_filter, extract, pred) in _VALUE_RULES.items():
-        c = cat(category)
-        if c is None:
-            flags[code] = F.lit(False)
-            continue
-        # scan ALL qualifying entries, fire on ANY (the reference loops
-        # break only on fire) — null predicate results (structured/absent
-        # values) are non-fires, not aborts. NB: bind pred/extract via a
-        # closure factory, not lambda defaults — PySpark derives the
-        # higher-order function's arity from the Python signature.
-        def _fires(p, x):
-            return lambda e: F.coalesce(p(x(e)), F.lit(False))
-
-        flags[code] = F.coalesce(
-            F.exists(entry_filter(c), _fires(pred, extract)),
-            F.lit(False),
-        )
-    flags["W015"] = (
-        F.coalesce(w015_empty_identifier(F.col("identifier")), F.lit(False))
-        if cat("identifier") is not None
-        else F.lit(False)
-    )
-    flags["P017"] = (
-        F.coalesce(p017_flag(F.col("license")), F.lit(False))
-        if cat("license") is not None
-        else F.lit(False)
-    )
-
-    if cat("version") is not None:
-        rel = cat("releases")
-        flags["P001"] = (
-            F.coalesce(p001_version_mismatch(F.col("version"), rel), F.lit(False))
-            if rel is not None
-            else F.lit(False)
-        )
-        flags["P027"] = F.coalesce(
-            p027_codemeta_version_mismatch(F.col("version")), F.lit(False)
-        )
-    else:
-        flags["P001"] = flags["P027"] = F.lit(False)
-
-    flags["W003"] = (
-        F.coalesce(w003_unversioned_requirement(F.col("requirements")), F.lit(False))
-        if cat("requirements") is not None
-        else F.lit(False)
-    )
-    flags["W012"] = (
-        F.coalesce(w012_packed_requirements(F.col("requirements")), F.lit(False))
-        if cat("requirements") is not None
-        else F.lit(False)
-    )
-    flags["W021"] = (
-        F.coalesce(w021_author_bracket_list(F.col("authors")), F.lit(False))
-        if cat("authors") is not None
-        else F.lit(False)
-    )
-    flags["P005"] = (
-        F.coalesce(p005_multi_author(F.col("authors")), F.lit(False))
-        if cat("authors") is not None
-        else F.lit(False)
-    )
-    flags["P016"] = (
-        F.coalesce(p016_homepage_as_repo(F.col("code_repository")), F.lit(False))
-        if cat("code_repository") is not None
-        else F.lit(False)
-    )
-    flags["P002"] = (
-        F.coalesce(p002_license_placeholders(F.col("license")), F.lit(False))
-        if cat("license") is not None
-        else F.lit(False)
-    )
-    flags["P008"] = (
-        F.coalesce(p008_local_license(F.col("license")), F.lit(False))
-        if cat("license") is not None
-        else F.lit(False)
-    )
-    flags["P022"] = (
-        F.coalesce(p022_license_no_version(F.col("license")), F.lit(False))
-        if cat("license") is not None
-        else F.lit(False)
-    )
-    flags["W004"] = (
-        F.coalesce(w004_stale_vs_codemeta(F.col("date_updated")), F.lit(False))
-        if cat("date_updated") is not None
-        else F.lit(False)
-    )
-    flags["W010"] = (
-        F.coalesce(w010_flag(F.col("programming_languages")), F.lit(False))
-        if cat("programming_languages") is not None
-        else F.lit(False)
-    )
-    flags["W014"] = (
-        F.coalesce(w014_name_id_while_valid_exists(F.col("identifier")), F.lit(False))
-        if cat("identifier") is not None
-        else F.lit(False)
-    )
-    flags["P011"] = (
-        F.coalesce(
-            p011_citation_missing_reference(
-                F.col("reference_publication"),
-                [
-                    cat(c)
-                    for c in ("authors", "title", "description", "version", "license")
-                ],
-            ),
-            F.lit(False),
-        )
-        if cat("reference_publication") is not None
-        else F.lit(False)
-    )
-    flags["P026"] = (
-        F.coalesce(p026_repo_mismatch(F.col("code_repository")), F.lit(False))
-        if cat("code_repository") is not None
-        else F.lit(False)
-    )
-    flags["P019"] = (
-        F.coalesce(
-            p019_download_url_version_mismatch(
-                F.col("download_url"), F.col("releases")
-            ),
-            F.lit(False),
-        )
-        if cat("download_url") is not None and cat("releases") is not None
-        else F.lit(False)
-    )
-
-    # URL-accessibility rules against the frozen dimension (quirk pair:
-    # P013 2xx∪301 ok, p013.py:47; P025 strict 2xx, p025.py:40-41).
-    # Faithful semantics per ADVICE r01: P013 scans ALL code_parser+
-    # metadata-source software_requirements entries (p013.py:105-114),
-    # P025 scans ALL codemeta continuous_integration entries (p025.py:73);
-    # a URL that is invalid (no http(s) scheme — urlparse gate,
-    # p013.py:8-22) or ABSENT from the frozen dimension (reference:
-    # request error => inaccessible, p013.py:50-53) FIRES rather than
-    # abstains. With no dimension at all the rules abstain.
+    present = set(df.columns)
+    inputs = {c: F.col(c) for c in CORPUS_CATEGORIES if c in present}
+    inputs[CITATION_SOURCES] = [inputs.get(c) for c in _CITATION_CATEGORIES]
     if url_status_map:
-        status_map = F.create_map(
-            *[
-                F.lit(x)
-                for url, code_ in url_status_map.items()
-                for x in (url, code_)
-            ]
-        )
+        inputs[URL_STATUS] = url_status_literal(url_status_map)
 
-        def accessible(u: Column, ok) -> Column:
-            valid = u.rlike(r"^(?i)https?://[^/\s]+")
-            s = status_map[F.trim(u)]
-            return valid & s.isNotNull() & ok(s)
+    def flag(code: str) -> Column:
+        needs, build = FLAG_RULES[code]
+        if not all(n in inputs for n in needs):
+            return F.lit(False)
+        return F.coalesce(build(*(inputs[n] for n in needs)), F.lit(False))
 
-        def p013_entry_fires(e: Column) -> Column:
-            # Reference extracts URLs with TWO independent findall passes
-            # (https?:// and www., p013.py:66-71) so a www. host inside an
-            # https URL is re-extracted bare (and, lacking a scheme, is
-            # always invalid => fires); one trailing punct char stripped
-            # (p013.py:78).
-            text = F.coalesce(e["result"]["value"], F.lit(""))
-            u1 = F.regexp_extract_all(text, F.lit(r"(?i)(https?://[^\s<>\"']+)"), 0)
-            u2 = F.regexp_extract_all(text, F.lit(r"(?i)(www\.[^\s<>\"']+)"), 0)
-            urls = F.transform(
-                F.concat(u1, u2),
-                lambda u: F.regexp_replace(u, r"[,;.!?)]$", ""),
-            )
-            ok13 = lambda s: ((s >= 200) & (s < 300)) | (s == 301)  # noqa: E731
-            return (F.size(urls) > 0) & F.exists(
-                urls, lambda u: ~accessible(u, ok13)
-            )
-
-        flags["P013"] = (
-            F.coalesce(
-                F.exists(
-                    metadata_entries(F.col("software_requirements")),
-                    p013_entry_fires,
-                ),
-                F.lit(False),
-            )
-            if cat("software_requirements") is not None
-            else F.lit(False)
-        )
-        ok25 = lambda s: (s >= 200) & (s < 300)  # noqa: E731
-        flags["P025"] = (
-            F.coalesce(
-                F.exists(
-                    codemeta_or_entries(F.col("continuous_integration")),
-                    lambda e: e["result"]["value"].isNotNull()
-                    & ~accessible(e["result"]["value"], ok25),
-                ),
-                F.lit(False),
-            )
-            if cat("continuous_integration") is not None
-            else F.lit(False)
-        )
-    else:
-        flags["P013"] = F.lit(False)
-        flags["P025"] = F.lit(False)
-
-    out = df
-    for code in [r.code for r in R.REGISTRY if not r.code.startswith("X")]:
-        out = out.withColumn(f"hit_{code}", flags.get(code, F.lit(False)))
-    return out
+    codes = [r.code for r in R.REGISTRY if not r.code.startswith("X")]
+    return df.withColumns({f"hit_{code}": flag(code) for code in codes})

@@ -110,8 +110,12 @@ def evidence_columns(
     expressions reference (each level is name -> Column, to be added
     with .select("*", ...) before the next level / the renders). Each
     evidence string reproduces format_evidence_text's branch for that
-    code (json_ld_utils.py:141-315), selecting the same firing entry the
-    detector stored its payload from.
+    code (json_ld_utils.py:141-315). The entry it quotes comes from the
+    rule's own selection in rules/somef.py — SELECTORS' entry and fires
+    predicates, picked first (or last, where the reference loop never
+    breaks), and the *_selected first-match picks — the same definitions
+    nested_rule_flags derives hit_<code> from, so the quoted entry is the
+    one the detector stored its payload from.
 
     Task-binary discipline (round-5): a render used to be ONE
     self-contained Column tree, and wrappers like _q (3 references of
@@ -142,18 +146,17 @@ def evidence_columns(
     def guard(code: str, c: Column) -> Column:
         return F.when(cols(f"hit_{code}"), c)
 
+    def scan(code: str, pick=_first_firing) -> Column:
+        """Materialize the entry SELECTORS rule `code` quotes."""
+        category, qualifies, fires = M.SELECTORS[code]
+        name = f"_evs_{code.lower()}"
+        lvl1[name] = guard(code, pick(F.filter(cols(category), qualifies), fires))
+        return cols(name)
+
     # P001 — normalized versions + metadata_source_file (p001.py:88-99)
-    meta_sel = _first_firing(
-        cols("version"),
-        lambda e: M._source_is_metadata_cs(e) & e["result"]["value"].isNotNull(),
-    )
-    lvl1["_evs_p001"] = guard("P001", meta_sel)
-    lvl1["_evs_p001_rv"] = guard(
-        "P001",
-        M.normalize_version(
-            F.try_element_at(cols("releases"), F.lit(1))["result"]["tag"]
-        ),
-    )
+    p001_meta, p001_tag = M.p001_selected(cols("version"), cols("releases"))
+    lvl1["_evs_p001"] = guard("P001", p001_meta)
+    lvl1["_evs_p001_rv"] = guard("P001", M.normalize_version(p001_tag))
     lvl2["_evd_p001_mv"] = M.normalize_version(
         cols("_evs_p001")["result"]["value"]
     )
@@ -170,11 +173,7 @@ def evidence_columns(
     )
 
     # W003 — the single selected requirement's name-else-value (w003.py:78)
-    w003_sel = _first_firing(
-        cols("requirements"),
-        lambda e: e["source"].isNotNull() & M._source_is_metadata_cs(e),
-    )
-    lvl1["_evs_w003"] = guard("W003", w003_sel)
+    lvl1["_evs_w003"] = guard("W003", M.w003_selected(cols("requirements")))
     # w003 label: req.get("name", req.get("value", "unknown")) — SoMEF
     # requirement results virtually always CARRY a name key (often null),
     # and a present-null name renders the fallback text (the None is
@@ -196,23 +195,7 @@ def evidence_columns(
     )
 
     # W004 — parsed isoformat dates (w004 evidence, json_ld_utils.py:172-176)
-    api_raw = M.first_match(
-        F.filter(
-            cols("date_updated"),
-            lambda e: (e["technique"] == "GitHub_API")
-            & e["result"]["value"].isNotNull(),
-        )
-    )["result"]["value"]
-    cm_raw = M.first_match(
-        F.filter(
-            cols("date_updated"),
-            lambda e: (
-                (e["source"].isNotNull() & e["source"].contains("codemeta.json"))
-                | (e["source"].isNull() & (e["technique"] == "code_parser"))
-            )
-            & e["result"]["value"].isNotNull(),
-        )
-    )["result"]["value"]
+    api_raw, cm_raw = M.w004_selected(cols("date_updated"))
     lvl1["_evs_w004_api"] = guard("W004", api_raw)
     lvl1["_evs_w004_cm"] = guard("W004", cm_raw)
     lvl2["_evd_w004_api_ts"] = M.w004_parse_date(cols("_evs_w004_api"))
@@ -225,73 +208,44 @@ def evidence_columns(
     )
 
     # P005 — the firing author value (scalar; dict -> $.name)
-    p005_sel = _first_firing(
-        M.metadata_entries(cols("authors")),
-        lambda e: F.coalesce(M.scalar_value(e), F.lit("")).rlike(
-            M._P005_SEPARATORS
-        ),
-    )
-    lvl1["_evs_p005"] = guard("P005", p005_sel)
-    lvl2["_evd_p005_val"] = M.scalar_value(cols("_evs_p005"))
+    p005 = scan("P005")
+    lvl2["_evd_p005_val"] = M.scalar_value(p005)
     ev["P005"] = F.concat(
         base("P005"),
-        metadata_source_filename(cols("_evs_p005")["source"]),
+        metadata_source_filename(p005["source"]),
         F.lit(" Multiple authors found in single field: '"),
         _q(cols("_evd_p005_val")), F.lit("'"),
     )
 
-    p006_sel = _first_firing(
-        F.filter(
-            cols("readme_url"),
-            lambda e: (e["technique"] == "code_parser")
-            & F.coalesce(e["source"], F.lit("")).contains("codemeta.json"),
-        ),
-        lambda e: M.p006_is_homepage_url(M.string_value(e)),
-    )
-    lvl1["_evs_p006"] = guard("P006", p006_sel)
     ev["P006"] = F.concat(
         base("P006"),
         F.lit(" codemeta.json README property points to homepage/wiki instead of README file: "),
-        F.coalesce(M.string_value(cols("_evs_p006")), F.lit("unknown URL")),
+        F.coalesce(M.string_value(scan("P006")), F.lit("unknown URL")),
     )
 
-    p007_sel = _first_firing(
-        M.codemeta_or_entries(cols("reference_publication")),
-        lambda e: M.p007_is_software_archive_url(M.string_value(e)),
-    )
-    lvl1["_evs_p007"] = guard("P007", p007_sel)
     ev["P007"] = F.concat(
         base("P007"),
         F.lit("codemeta.json Reference publication points to software archive instead of paper: "),
-        F.coalesce(M.string_value(cols("_evs_p007")), F.lit("unknown URL")),
+        F.coalesce(M.string_value(scan("P007")), F.lit("unknown URL")),
     )
 
-    p008_sel = _first_firing(
-        F.filter(
-            cols("license"),
-            lambda e: (e["technique"] == "code_parser") | M._source_is_metadata(e),
-        ),
-        lambda e: M.p008_is_local(e["result"]["value"]),
-    )
-    lvl1["_evs_p008"] = guard("P008", p008_sel)
+    p008 = scan("P008")
     ev["P008"] = F.concat(
         base("P008"),
-        metadata_source_filename(cols("_evs_p008")["source"]),
+        metadata_source_filename(p008["source"]),
         F.lit(" License points to local file instead of license name: '"),
-        _q(cols("_evs_p008")["result"]["value"]), F.lit("'"),
+        _q(p008["result"]["value"]), F.lit("'"),
     )
 
     # W010 — every null-version codemeta language name (w010.py:32-34)
-    w010_names = F.transform(
-        F.filter(
-            cols("programming_languages"),
-            lambda e: (e["technique"] == "code_parser")
-            & F.coalesce(e["source"], F.lit("")).contains("codemeta.json")
-            & e["result"]["version"].isNull(),
+    w010_cat, w010_codemeta, w010_fires = M.SELECTORS["W010"]
+    lvl1["_evs_w010_names"] = guard(
+        "W010",
+        F.transform(
+            F.filter(cols(w010_cat), lambda e: w010_codemeta(e) & w010_fires(e)),
+            lambda e: F.coalesce(e["result"]["name"], F.lit("Unknown")),
         ),
-        lambda e: F.coalesce(e["result"]["name"], F.lit("Unknown")),
     )
-    lvl1["_evs_w010_names"] = guard("W010", w010_names)
     ev["W010"] = F.when(
         F.size(cols("_evs_w010_names")) > 0,
         F.concat(
@@ -320,32 +274,16 @@ def evidence_columns(
 
     # P013 — invalid URLs of the firing entry, first 3 (json_ld_utils:219-235)
     if url_status_map:
-        lvl0["_evm_status"] = F.create_map(
-            *[F.lit(x) for u, c in url_status_map.items() for x in (u, c)]
-        )
+        lvl0["_evm_status"] = M.url_status_literal(url_status_map)
         smap = cols("_evm_status")
-
-        def _urls(e: Column) -> Column:
-            text = F.coalesce(e["result"]["value"], F.lit(""))
-            u1 = F.regexp_extract_all(text, F.lit(r"(?i)(https?://[^\s<>\"']+)"), 0)
-            u2 = F.regexp_extract_all(text, F.lit(r"(?i)(www\.[^\s<>\"']+)"), 0)
-            return F.transform(
-                F.concat(u1, u2), lambda u: F.regexp_replace(u, r"[,;.!?)]$", "")
-            )
-
-        def _inaccessible(u: Column) -> Column:
-            valid = u.rlike(r"^(?i)https?://[^/\s]+")
-            s = smap[F.trim(u)]
-            ok = ((s >= 200) & (s < 300)) | (s == 301)
-            return ~(valid & s.isNotNull() & ok)
 
         p013_sel = _first_firing(
             M.metadata_entries(cols("software_requirements")),
-            lambda e: (F.size(_urls(e)) > 0) & F.exists(_urls(e), _inaccessible),
+            lambda e: M.p013_fires(e, smap),
         )
         lvl1["_evs_p013"] = guard("P013", p013_sel)
         lvl2["_evd_p013_bad"] = F.filter(
-            _urls(cols("_evs_p013")), _inaccessible
+            M.entry_urls(cols("_evs_p013")), lambda u: M.p013_url_bad(u, smap)
         )
         bad = cols("_evd_p013_bad")
         ev["P013"] = F.concat(
@@ -359,20 +297,18 @@ def evidence_columns(
         # P025 — status of the firing CI url (json_ld_utils:295-299)
         def _ci_status(e: Column) -> Column:
             u = e["result"]["value"]
-            s = smap[F.trim(u)]
             return F.when(
-                u.rlike(r"^(?i)https?://[^/\s]+") & s.isNotNull() & (s >= 0),
-                s.cast("string"),
+                M.url_accessible(u, smap, lambda s: s >= 0),
+                smap[F.trim(u)].cast("string"),
             ).otherwise(F.lit("unknown"))
 
+        # Not M.p025_inaccessible_ci's fires: the flag tests 2xx as one
+        # conjunct, this selector as two, and the plans print them apart.
         p025_sel = _first_firing(
             M.codemeta_or_entries(cols("continuous_integration")),
             lambda e: e["result"]["value"].isNotNull()
-            & ~(
-                e["result"]["value"].rlike(r"^(?i)https?://[^/\s]+")
-                & smap[F.trim(e["result"]["value"])].isNotNull()
-                & (smap[F.trim(e["result"]["value"])] >= 200)
-                & (smap[F.trim(e["result"]["value"])] < 300)
+            & ~M.url_accessible(
+                e["result"]["value"], smap, lambda s: s >= 200, lambda s: s < 300
             ),
         )
         lvl1["_evs_p025"] = guard("P025", p025_sel)
@@ -395,15 +331,7 @@ def evidence_columns(
         )
         ev["P025"] = F.concat(base("P025"), F.lit("Issue detected in "), cols("_file"))
 
-    w014_cm = M.first_match(
-        F.filter(
-            cols("identifier"),
-            lambda e: (e["technique"] == "code_parser")
-            & F.lower(F.coalesce(e["source"], F.lit(""))).contains("codemeta.json")
-            & e["result"]["value"].isNotNull(),
-        )
-    )["result"]["value"]
-    lvl1["_evs_w014"] = guard("W014", w014_cm)
+    lvl1["_evs_w014"] = guard("W014", M.w014_selected(cols("identifier"))["result"]["value"])
     lvl2["_evd_w014_rep"] = _pyrepr(cols("_evs_w014"))
     ev["W014"] = F.concat(
         base("W014"),
@@ -415,29 +343,13 @@ def evidence_columns(
         base("W015"), F.lit("codemeta.json identifier field is empty or missing")
     )
 
-    p016_sel = _first_firing(
-        F.filter(
-            cols("code_repository"),
-            lambda e: M._technique_is_filename(e) | M._source_is_metadata_nodesc(e),
-        ),
-        lambda e: M._is_structured(e)
-        | (
-            ~M._contains_any(
-                F.lower(F.coalesce(M.string_value(e), F.lit(""))),
-                M._P016_REPO_INDICATORS,
-            )
-            & M._contains_any(
-                F.lower(F.coalesce(M.string_value(e), F.lit(""))),
-                M._P016_HOME_INDICATORS,
-            )
-        ),
-    )
-    lvl1["_evs_p016"] = guard("P016", p016_sel)
+    # the entry P016's crash-aware scan decides on
+    p016 = scan("P016", M.crash_aware_first)
     ev["P016"] = F.concat(
         base("P016"),
-        metadata_source_filename(cols("_evs_p016")["source"]),
+        metadata_source_filename(p016["source"]),
         F.lit(" codeRepository points to homepage instead of repository: "),
-        F.coalesce(M.string_value(cols("_evs_p016")), F.lit("unknown URL")),
+        F.coalesce(M.string_value(p016), F.lit("unknown URL")),
     )
 
     ev["P017"] = F.concat(
@@ -445,42 +357,19 @@ def evidence_columns(
         F.lit("LICENSE file only contains copyright information without actual license terms"),
     )
 
-    p018_sel = _first_firing(
-        M.codemeta_or_entries(cols("issues_url")),
-        lambda e: M.p018_has_format_violation(M.string_value(e)),
-    )
-    lvl1["_evs_p018"] = guard("P018", p018_sel)
     ev["P018"] = F.concat(
         base("P018"),
         F.lit("codemeta.json IssueTracker URL violates expected format: "),
-        F.coalesce(M.string_value(cols("_evs_p018")), F.lit("unknown URL")),
+        F.coalesce(M.string_value(scan("P018")), F.lit("unknown URL")),
     )
 
-    p019_sel = M.first_match(
-        F.filter(
-            cols("download_url"),
-            lambda e: (
-                F.coalesce(e["source"], F.lit("")).contains("codemeta.json")
-                | (
-                    (e["technique"] == "code_parser")
-                    & F.lower(F.coalesce(e["source"], F.lit(""))).contains("codemeta")
-                )
-            )
-            & e["result"]["value"].isNotNull(),
-        )
-    )
-    lvl1["_evs_p019"] = guard("P019", p019_sel)
+    lvl1["_evs_p019"] = guard("P019", M.p019_selected(cols("download_url")))
     ev["P019"] = F.concat(
         base("P019"), F.lit("codemeta.json downloadURL is outdated or invalid: "),
         F.coalesce(cols("_evs_p019")["result"]["value"], F.lit("unknown URL")),
     )
 
-    p020_sel = _first_firing(
-        M.codemeta_or_entries(cols("development_status")),
-        lambda e: M.p020_is_url(M.string_value(e)),
-    )
-    lvl1["_evs_p020"] = guard("P020", p020_sel)
-    lvl2["_evd_p020_val"] = M.string_value(cols("_evs_p020"))
+    lvl2["_evd_p020_val"] = M.string_value(scan("P020"))
     ev["P020"] = F.concat(
         base("P020"),
         F.lit("codemeta.json developmentStatus is a URL instead of status string: "),
@@ -489,80 +378,42 @@ def evidence_columns(
 
     # w021's entry loop never breaks, so the LAST firing entry's payload
     # survives (w021.py:29-54)
-    w021_sel = _last_firing(
-        F.filter(
-            cols("authors"),
-            lambda e: (e["technique"] == "code_parser") & M._source_is_metadata_cs(e),
-        ),
-        lambda e: F.coalesce(M.string_value(e), F.lit("")).rlike(
-            r"\[[^\]\n]*,[^\]\n]*\]"
-        ),
-    )
-    lvl1["_evs_w021"] = guard("W021", w021_sel)
-    lvl2["_evd_w021_val"] = M.string_value(cols("_evs_w021"))
+    w021 = scan("W021", _last_firing)
+    lvl2["_evd_w021_val"] = M.string_value(w021)
     ev["W021"] = F.concat(
         base("W021"),
-        metadata_source_filename(cols("_evs_w021")["source"]),
+        metadata_source_filename(w021["source"]),
         F.lit(" GivenName is a list instead of string: "),
         _q(cols("_evd_w021_val")),
     )
 
-    def _p022_fires(e: Column) -> Column:
-        up = F.upper(F.coalesce(M.string_value(e), F.lit("")))
-        cond = F.lit(False)
-        for fam, pat in M._P022_FAMILIES_FULL:
-            hit = up.contains(fam)
-            if pat is not None:
-                hit = hit & ~up.rlike(pat)
-            cond = cond | hit
-        return cond
-
     # p022's entry loop never breaks either — LAST firing entry wins
     # (p022.py:37-61)
-    p022_sel = _last_firing(
-        F.filter(
-            cols("license"),
-            lambda e: (e["technique"] == "code_parser") & M._source_is_metadata_cs(e),
-        ),
-        _p022_fires,
-    )
-    lvl1["_evs_p022"] = guard("P022", p022_sel)
-    lvl2["_evd_p022_val"] = M.string_value(cols("_evs_p022"))
+    p022 = scan("P022", _last_firing)
+    lvl2["_evd_p022_val"] = M.string_value(p022)
     ev["P022"] = F.concat(
         base("P022"),
-        metadata_source_filename(cols("_evs_p022")["source"]),
+        metadata_source_filename(p022["source"]),
         F.lit(" License does not specify version: '"),
         _q(cols("_evd_p022_val")), F.lit("'"),
     )
 
-    p023_sel = _first_firing(
-        M.metadata_or_entries(cols("code_repository")),
-        lambda e: M.p023_is_git_remote_shorthand(M.string_value(e)),
-    )
-    lvl1["_evs_p023"] = guard("P023", p023_sel)
+    p023 = scan("P023")
     ev["P023"] = F.concat(
         base("P023"),
-        metadata_source_filename(cols("_evs_p023")["source"]),
+        metadata_source_filename(p023["source"]),
         F.lit(" codeRepository uses Git shorthand instead of full URL: '"),
-        F.coalesce(M.string_value(cols("_evs_p023")), F.lit("unknown URL")),
+        F.coalesce(M.string_value(p023), F.lit("unknown URL")),
         F.lit("'"),
     )
 
-    p024_sel = _first_firing(
-        M.codemeta_or_entries(cols("identifier")),
-        lambda e: M.p024_is_bare_doi(M.string_value(e)),
-    )
-    lvl1["_evs_p024"] = guard("P024", p024_sel)
-    lvl2["_evd_p024_val"] = M.string_value(cols("_evs_p024"))
+    lvl2["_evd_p024_val"] = M.string_value(scan("P024"))
     ev["P024"] = F.concat(
         base("P024"), F.lit("Identifier uses bare DOI instead of full URL: '"),
         _q(cols("_evd_p024_val")), F.lit("'"),
     )
 
-    apis = F.filter(
-        cols("code_repository"),
-        lambda e: (e["technique"] == "GitHub_API") & e["result"]["value"].isNotNull(),
-    )
+    apis = M.p026_api_entries(cols("code_repository"))
     api_v = F.when(
         F.size(apis) > 0, F.try_element_at(apis, F.size(apis))["result"]["value"]
     )
@@ -572,31 +423,13 @@ def evidence_columns(
         F.coalesce(cols("_evs_p026"), F.lit("unknown URL")),
     )
 
-    p027_cm = M.first_match(
-        F.filter(
-            cols("version"),
-            lambda e: (
-                F.coalesce(e["source"], F.lit("")).contains("codemeta.json")
-                | (
-                    (e["technique"] == "code_parser")
-                    & F.lower(F.coalesce(e["source"], F.lit(""))).contains("codemeta")
-                )
-            )
-            & e["result"]["value"].isNotNull(),
-        )
-    )["result"]["value"]
-    lvl1["_evs_p027"] = guard("P027", p027_cm)
+    lvl1["_evs_p027"] = guard("P027", M.p027_selected(cols("version"))["result"]["value"])
     ev["P027"] = F.concat(
         base("P027"), F.lit("codemeta.json version '"), _q(cols("_evs_p027")),
         F.lit("' does not match package version"),
     )
 
-    p028_sel = _first_firing(
-        M.codemeta_or_entries(cols("identifier")),
-        lambda e: M.p028_is_raw_swhid(M.string_value(e)),
-    )
-    lvl1["_evs_p028"] = guard("P028", p028_sel)
-    lvl2["_evd_p028_val"] = M.string_value(cols("_evs_p028"))
+    lvl2["_evd_p028_val"] = M.string_value(scan("P028"))
     ev["P028"] = F.concat(
         base("P028"),
         F.lit("codemeta Identifier uses raw SWHID without resolvable URL: '"),
@@ -676,10 +509,8 @@ def corpus_summary(
     partial); only the single summary row reaches the driver, where
     percentages use Python round (banker's) exactly as json.dump saw
     them."""
-    for cat in M.CORPUS_CATEGORIES:
-        if cat not in df.columns:
-            df = df.withColumn(cat, F.array().cast(f"array<{M.ENTRY_DDL}>"))
-    lang_crash = language_extraction_crash(F.col("programming_languages"))
+    df = _with_all_categories(df)
+    lang_crash, ident_crash = _reference_skips()
     flagged = (
         M.nested_rule_flags(df, url_status_map)
         .withColumn("_skip", lang_crash)
@@ -692,11 +523,6 @@ def corpus_summary(
             ),
         )
     )
-    ident = _first_value(F.col("identifier"))
-    ident_crashes = ident.isNotNull() & (
-        M._is_stringified_array(F.trim(ident))
-        | M._is_stringified_object(F.trim(ident))
-    )
     any_hit = F.lit(False)
     for code in CODES:
         any_hit = any_hit | F.col(f"hit_{code}")
@@ -705,9 +531,7 @@ def corpus_summary(
         F.count(F.lit(1)).alias("_total"),
         F.sum(F.when(F.size("_langs") > 0, 1).otherwise(0)).alias("_with_langs"),
         F.sum(
-            F.when(
-                ok & any_hit & ~F.coalesce(ident_crashes, F.lit(False)), 1
-            ).otherwise(0)
+            F.when(ok & any_hit & ~ident_crash, 1).otherwise(0)
         ).alias("_files_created"),
     ]
     for code in CODES:
@@ -758,6 +582,29 @@ def corpus_summary(
             for code in CODES
         ],
     }
+
+
+def _with_all_categories(df: DataFrame) -> DataFrame:
+    """Every category the rule and evidence expressions reference exists
+    (absent -> empty array), so missing-category documents analyze and
+    abstain exactly like F1."""
+    for cat in M.CORPUS_CATEGORIES:
+        if cat not in df.columns:
+            df = df.withColumn(cat, F.array().cast(f"array<{M.ENTRY_DDL}>"))
+    return df
+
+
+def _reference_skips() -> tuple[Column, Column]:
+    """The two per-document crashes of the reference main loop, as
+    (language, identifier) predicates: the language extraction that runs
+    BEFORE the detectors (language_extraction_crash), and the identifier
+    startswith probe on a structured first value
+    (detect_pitfalls_main.py:352-354)."""
+    ident = _first_value(F.col("identifier"))
+    return (
+        language_extraction_crash(F.col("programming_languages")),
+        F.coalesce(M.is_structured_value(ident), F.lit(False)),
+    )
 
 
 def _first_value(cat: Column) -> Column:
@@ -814,33 +661,13 @@ def nested_assessments(
     first identifier value would crash the reference's startswith probe
     (structured value) are dropped, as the reference's caught exception
     drops them (detect_pitfalls_main.py:352-354)."""
-    # normalize: every category the evidence expressions reference exists
-    # (absent -> empty array), so missing-category documents analyze and
-    # abstain exactly like F1
-    df = df.withColumnRenamed(file_col, "_file")
-    for cat in M.CORPUS_CATEGORIES:
-        if cat not in df.columns:
-            df = df.withColumn(cat, F.array().cast(f"array<{M.ENTRY_DDL}>"))
-    # Document-level skips, applied BELOW the giant checks projection (a
-    # filter added ABOVE it makes Catalyst's CollapseProject inline the
-    # whole evidence expression tree into the predicate — minutes of
-    # single-core optimizer time):
-    # 1. the main loop's language extraction runs BEFORE the detectors; a
-    #    crash there skips the whole document (no JSON-LD file)
-    df = df.filter(~language_extraction_crash(F.col("programming_languages")))
-    # 2. the reference's identifier startswith probe crashes on a
-    #    structured first value -> document skipped
-    ident_early = _first_value(F.col("identifier"))
-    df = df.filter(
-        ~F.coalesce(
-            ident_early.isNotNull()
-            & (
-                M._is_stringified_array(F.trim(ident_early))
-                | M._is_stringified_object(F.trim(ident_early))
-            ),
-            F.lit(False),
-        )
-    )
+    df = _with_all_categories(df.withColumnRenamed(file_col, "_file"))
+    # Document-level skips (no JSON-LD file), applied BELOW the giant
+    # checks projection (a filter added ABOVE it makes Catalyst's
+    # CollapseProject inline the whole evidence expression tree into the
+    # predicate — minutes of single-core optimizer time)
+    lang_crash, ident_crash = _reference_skips()
+    df = df.filter(~lang_crash).filter(~ident_crash)
     flagged = M.nested_rule_flags(df, url_status_map)
     levels, ev = evidence_columns(url_status_map)
     # Each level materializes selector/derived subtrees as named columns

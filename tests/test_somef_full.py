@@ -1,6 +1,8 @@
 """Full 27-rule nested-schema battery (rules/somef.py nested_rule_flags):
 one trigger + one non-trigger document per rule, table-driven."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -230,3 +232,75 @@ def test_json_ingest_to_battery_e2e(spark, tmp_path):
     assert not any(
         v for k, v in got["repo2"].items() if k.startswith("hit_") and k != "hit_P022"
     )
+
+
+# code -> the evidence_columns level-1 columns holding the entry (or
+# value) the rule's evidence quotes
+EVIDENCE_SELECTION = {
+    "P001": ["_evs_p001"],
+    "W003": ["_evs_w003"],
+    "W004": ["_evs_w004_api", "_evs_w004_cm"],
+    "P005": ["_evs_p005"],
+    "P006": ["_evs_p006"],
+    "P007": ["_evs_p007"],
+    "P008": ["_evs_p008"],
+    "W010": ["_evs_w010_names"],
+    "P013": ["_evs_p013"],
+    "P025": ["_evs_p025"],
+    "W014": ["_evs_w014"],
+    "P016": ["_evs_p016"],
+    "P018": ["_evs_p018"],
+    "P019": ["_evs_p019"],
+    "P020": ["_evs_p020"],
+    "W021": ["_evs_w021"],
+    "P022": ["_evs_p022"],
+    "P023": ["_evs_p023"],
+    "P024": ["_evs_p024"],
+    "P026": ["_evs_p026"],
+    "P027": ["_evs_p027"],
+    "P028": ["_evs_p028"],
+}
+# scan-all value rules: the selector finds an entry exactly when the rule
+# fires
+BOTH_WAYS = {"P006", "P007", "P018", "P020", "P023", "P024", "P028"}
+FIXTURE_DIR = os.path.join(os.path.dirname(__file__), os.pardir, "perfbench", "data")
+
+
+def test_flags_and_evidence_select_alike(spark):
+    """hit_<code> and the JSON-LD evidence read one selection per rule
+    (rules/somef.py). Over the nested fixture and its URL dimension, every
+    fired rule's unguarded evidence selector finds an entry, and for the
+    scan-all value rules a found entry means the rule fired."""
+    import __spark_entry__ as E
+    from metacheck_spark.sources.jsonld import evidence_columns
+
+    fx = E._nested_fixture_df(spark, FIXTURE_DIR)
+    flagged = nested_rule_flags(fx, E._NESTED_URL_STATUS)
+    # every guard true: the level-1 columns are the bare selectors
+    df = flagged.select(
+        *fx.columns,
+        *[F.col(f"hit_{c}").alias(f"fired_{c}") for c in EVIDENCE_SELECTION],
+        *[F.lit(True).alias(f"hit_{c}") for c in EVIDENCE_SELECTION],
+    )
+    levels, _ = evidence_columns(E._NESTED_URL_STATUS)
+    for lvl in levels[:2]:
+        df = df.select("*", *[c.alias(n) for n, c in lvl.items()])
+
+    aggs = []
+    for code, names in EVIDENCE_SELECTION.items():
+        if code == "W010":
+            found = F.size(names[0]) > 0
+        else:
+            found = F.lit(True)
+            for n in names:
+                found = found & F.col(n).isNotNull()
+        fired = F.col(f"fired_{code}")
+        aggs += [
+            F.sum(fired.cast("int")).alias(f"n_{code}"),
+            F.sum((fired & ~found).cast("int")).alias(f"miss_{code}"),
+            F.sum((found & ~fired).cast("int")).alias(f"extra_{code}"),
+        ]
+    row = df.agg(*aggs).collect()[0]
+    assert {c for c in EVIDENCE_SELECTION if not row[f"n_{c}"]} == set()
+    assert {c: row[f"miss_{c}"] for c in EVIDENCE_SELECTION if row[f"miss_{c}"]} == {}
+    assert {c: row[f"extra_{c}"] for c in BOTH_WAYS if row[f"extra_{c}"]} == {}

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metacheck_spark.rules import somef as M
+from metacheck_spark.sources import jsonld as J
 
 ENTRY = (
     "struct<confidence:double, technique:string, source:string,"
@@ -126,22 +127,30 @@ def test_p026_two_selections_same_array(spark):
 def test_w010_and_language_extraction(spark):
     rows = [
         ("unversioned", [], [], [], [],
-         [e("Python", version=None), e("Java", version="17")]),
+         [e("Python", name="Python", version=None), e("Java", version="17")]),
         ("all_versioned", [], [], [], [],
          [e("Python", version="3.11")]),
         ("alias_dedup", [], [], [], [],
          [e("python3"), e("Python"), e("cpp"), e("ruby")]),
     ]
     df = docs(spark, rows)
-    got = flags(df, M.w010_language_without_version(F.col("programming_languages")))
+    got = flags(M.nested_rule_flags(df), F.col("hit_W010"))
     assert got["unversioned"] is True and got["all_versioned"] is False
 
-    langs = flags(df, M.extract_languages(F.col("programming_languages")))
+    langs = flags(df, J.extract_target_languages(F.col("programming_languages")))
     # alias folding + order-preserving dedup + non-target (ruby) dropped
     assert langs["alias_dedup"] == ["Python", "C++"]
 
-    names = flags(df, M.w010_unversioned_names(F.col("programming_languages")))
-    assert names["unversioned"] == ["Python"]
+    # the W010 evidence names every unversioned codemeta language
+    levels, ev = J.evidence_columns()
+    out = M.nested_rule_flags(J._with_all_categories(df))
+    for lvl in levels:
+        if lvl:
+            out = out.select("*", *[c.alias(n) for n, c in lvl.items()])
+    names = flags(out, F.when(F.col("hit_W010"), ev["W010"]))
+    assert names["unversioned"] == (
+        "W010 detected: codemeta.json Programming languages without versions: Python"
+    )
 
 
 def test_source_filename_projection(spark):
@@ -149,5 +158,5 @@ def test_source_filename_projection(spark):
         [("https://x/codemeta.json",), ("https://x/setup.py",), ("https://x/README.md",)],
         "src string",
     )
-    got = [r["f"] for r in df.select(M.source_filename(F.col("src")).alias("f")).collect()]
+    got = [r["f"] for r in df.select(J.metadata_source_filename(F.col("src")).alias("f")).collect()]
     assert got == ["codemeta.json", "setup.py", "metadata files"]
