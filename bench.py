@@ -10,11 +10,8 @@ over a synthesized `images` table (BASELINE.json input_hint schema) — the
 table is generated distributed (mapInPandas over spark.range) and cached as
 parquet under .bench/ so repeated runs time the queries, not the generator.
 
-Modes:
+Usage:
   python bench.py                   # full battery, one JSON line to stdout
-  python bench.py --pipeline-only   # just the images pipeline; JSON includes
-                                    # rows/s (used by tools/run_scaling.py to
-                                    # evidence the N -> 4N scaling criterion)
 
 Each query reports the min of 3 passes (the first pass also warms plan,
 codegen and the Python worker pools), and every pass is recorded under
@@ -35,10 +32,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 from metacheck_spark.session import default_cpus  # noqa: E402
 
 CPUS = default_cpus()
-IMAGES_ROWS = int(os.environ.get("BENCH_IMAGES_ROWS", "60000"))
+IMAGES_ROWS = 60_000
 # Fixed input-split count for the images scan at every parallelism level
-# (same input, same splits — only the compute resources vary).
-BENCH_SPLITS = int(os.environ.get("BENCH_SPLITS", "64"))
+# (same input, same splits — only the compute resources vary): one file
+# per split, with file packing disabled in ensure_images.
+SPLITS = 64
 CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench")
 
 
@@ -63,7 +61,7 @@ def ensure_images(spark, n: int) -> str:
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         log(f"[bench] generating images table n={n} -> {path}")
-        gen_images_df(spark, n, partitions=BENCH_SPLITS).write.mode(
+        gen_images_df(spark, n, partitions=SPLITS).write.mode(
             "overwrite"
         ).parquet(path)
     us_path = os.path.join(CACHE_DIR, "url_status")
@@ -83,7 +81,7 @@ def ensure_images(spark, n: int) -> str:
         for f in os.listdir(path)
         if f.endswith(".parquet")
     )
-    per_file = max(4 * 1024 * 1024, total // BENCH_SPLITS)
+    per_file = max(4 * 1024 * 1024, total // SPLITS)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(per_file))
     spark.conf.set("spark.sql.files.openCostInBytes", str(per_file))
     return path
@@ -137,8 +135,6 @@ def bench_pipeline(spark) -> tuple[float, list[float], int]:
 
 
 def main() -> None:
-    pipeline_only = "--pipeline-only" in sys.argv
-
     from metacheck_spark.session import get_spark
 
     spark = get_spark(master=f"local[{CPUS}]", app_name="metacheck_bench")
@@ -153,22 +149,6 @@ def main() -> None:
     psec, pobs, prows = bench_pipeline(spark)
     queries["quality_pipeline"] = psec
     observations["quality_pipeline"] = pobs
-
-    if pipeline_only:
-        out = {
-            "metric": "quality_pipeline_sec",
-            "value": psec,
-            "unit": "sec",
-            "queries": queries,
-            "sf": sf,
-            "cpus": int(CPUS),
-            "images_rows": prows,
-            "rows_per_sec": round(prows / psec, 1),
-            "observations": observations,
-        }
-        print(json.dumps(out), flush=True)
-        spark.stop()
-        return
 
     import __spark_entry__ as E
     from metacheck_spark.operators import dedup as D

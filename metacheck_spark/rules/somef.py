@@ -210,7 +210,7 @@ def let(value: Column, body) -> Column:
     expression TREE, so `f(x) & g(x)` embeds x's whole subtree at every
     use site — runtime subexpression elimination dedups the WORK, but
     nothing dedups the PLAN, and serialized task binaries grow with
-    every reuse (measured: tools/measure_task_binary.py / the
+    every reuse (measured: perfbench's plan.max_task_binary_kib / the
     18.6 MiB somef_jsonld stage). transform(array(x), v -> body(v))[1]
     keeps one copy of x; every reference inside body is a single
     NamedLambdaVariable node. Nesting is fine (inner bodies may close
@@ -1073,7 +1073,7 @@ def p019_download_url_version_mismatch(download_url_cat: Column,
 
 # --- URL-accessibility rules against the frozen dimension -------------------
 # Quirk pair: P013 2xx∪301 ok (p013.py:47), P025 strict 2xx (p025.py:40-41).
-# Faithful semantics per ADVICE r01: P013 scans ALL code_parser+
+# Faithful semantics: P013 scans ALL code_parser+
 # metadata-source software_requirements entries (p013.py:105-114),
 # P025 scans ALL codemeta continuous_integration entries (p025.py:73);
 # a URL that is invalid (no http(s) scheme — urlparse gate,

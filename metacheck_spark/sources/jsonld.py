@@ -121,8 +121,8 @@ def evidence_columns(
     self-contained Column tree, and wrappers like _q (3 references of
     their argument) and _pyrepr (~5) cloned each ~80-node selector
     subtree into it 3-15x — the collapsed document projection
-    serialized to 18.6 MiB of Catalyst nodes (measured,
-    tools/measure_task_binary.py). Materializing every selected entry /
+    serialized to 18.6 MiB of Catalyst nodes (measured by perfbench's
+    plan.max_task_binary_kib). Materializing every selected entry /
     derived scalar as a named column one level below keeps one copy of
     each: CollapseProject never inlines a non-cheap alias referenced
     more than once (canCollapseExpressions), so the lower projections
@@ -683,11 +683,12 @@ def nested_assessments(
     # Task-binary discipline (round-5): the serialized stage plan must
     # carry the 27 evidence expression trees exactly ONCE — and, since
     # the level split above, each selector subtree once rather than the
-    # 3-15 clones the _q/_pyrepr wrappers used to make (18.6 MiB -> see
-    # TASKBINARY.json). The old shape inlined the full check structs
-    # into BOTH the materialized `checks` column and the to_json(doc)
-    # projection, and filter(size(checks)>0) substituted the tree a
-    # third time via predicate pushdown — a 35.7 MiB broadcast task
+    # 3-15 clones the _q/_pyrepr wrappers used to make (18.6 MiB; see
+    # perfbench's plan.max_task_binary_kib). The old shape inlined the
+    # full check structs into BOTH the materialized `checks` column and
+    # the to_json(doc) projection, and filter(size(checks)>0)
+    # substituted the tree a third time via predicate pushdown — a
+    # 35.7 MiB broadcast task
     # binary per stage. (An explode + broadcast rule-text-dimension
     # join was measured WORSE: optimizer rules around Generate
     # re-duplicate the generator's child, 26.8 MiB and minutes of

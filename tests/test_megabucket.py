@@ -14,10 +14,6 @@ metrics (dedup.bucketed_candidate_pairs):
   (star edges preserve connectivity) — one cluster, min-id label, all
   n_dup members — alongside untouched unique docs.
 
-The 100k-scale wall-clock artifact lives in BENCH_MEGABUCKET.json
-(tools/run_megabucket.py); this test pins the same invariants at a
-CI-sized n.
-
 All four LSH pair operators (minhash, simhash, winnow, sign-LSH
 embeddings) share one bucket policy (dedup._expand_buckets), so the
 parameterized test below pins the star-routing invariants on each: a
