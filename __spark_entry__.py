@@ -27,7 +27,6 @@ from metacheck_spark.functions.text import (
 )
 from metacheck_spark.operators import dedup as D
 from metacheck_spark.operators import similarity as S
-from metacheck_spark.plans.quality import rule_counts
 from metacheck_spark.rules.registry import DUCKDB_SAFE
 
 SF0001 = "/root/testdata/sf0.001"
@@ -93,21 +92,33 @@ def _seeded_caption_sql() -> str:
     return "CASE " + " ".join(cases) + " ELSE text END"
 
 
-def q_rule_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-rule hit counts over trigger-seeded captions — one aggregation
-    pass, no explode/shuffle of per-hit rows (map-side partial agg)."""
-    df = _documents(spark, sf_dir).withColumn("caption", _seeded_caption_col())
-    return rule_counts(df, "caption", DUCKDB_SAFE)
+def _rule_count_aggs() -> list[F.Column]:
+    """One conditional count per DuckDB-expressible rule over `caption`
+    (A1 analog, detect_pitfalls_main.py:317-318): N counts in one
+    aggregation pass instead of an explode+groupBy, so no exploded rows
+    are shuffled and the map-side partial aggregate is one row per
+    partition (per group)."""
+    c = F.col("caption")
+    return [F.count(F.when(r.spark(c), 1)).alias(r.code.lower()) for r in DUCKDB_SAFE]
 
 
-def _rule_counts_sql() -> str:
-    exprs = ",\n  ".join(
+def _rule_count_sql_exprs() -> str:
+    return ",\n  ".join(
         f"count(CASE WHEN {r.duckdb.format(c='caption')} THEN 1 END) AS {r.code.lower()}"
         for r in DUCKDB_SAFE
     )
+
+
+def q_rule_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-rule hit counts over trigger-seeded captions."""
+    df = _documents(spark, sf_dir).withColumn("caption", _seeded_caption_col())
+    return df.agg(*_rule_count_aggs())
+
+
+def _rule_counts_sql() -> str:
     return (
-        f"SELECT\n  {exprs}\nFROM (SELECT {_seeded_caption_sql()} AS caption"
-        " FROM documents)"
+        f"SELECT\n  {_rule_count_sql_exprs()}\nFROM (SELECT {_seeded_caption_sql()}"
+        " AS caption FROM documents)"
     )
 
 
@@ -1152,23 +1163,15 @@ FROM (SELECT {_seeded_caption_sql()} AS caption FROM documents)
 
 def q_rule_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 analog: per-language per-rule hit counts as one grouped pass
-    (conditional counts, no explode — map-side partial agg)."""
+    (the same conditional counts as q_rule_counts, no explode)."""
     df = _documents(spark, sf_dir).withColumn("caption", _seeded_caption_col())
-    c = F.col("caption")
-    aggs = [
-        F.count(F.when(r.spark(c), 1)).alias(r.code.lower()) for r in DUCKDB_SAFE
-    ]
-    return df.groupBy("lang").agg(*aggs)
+    return df.groupBy("lang").agg(*_rule_count_aggs())
 
 
 def _rule_lang_counts_sql() -> str:
-    exprs = ",\n  ".join(
-        f"count(CASE WHEN {r.duckdb.format(c='caption')} THEN 1 END) AS {r.code.lower()}"
-        for r in DUCKDB_SAFE
-    )
     return (
-        f"SELECT lang,\n  {exprs}\nFROM (SELECT lang, {_seeded_caption_sql()}"
-        " AS caption FROM documents) GROUP BY lang"
+        f"SELECT lang,\n  {_rule_count_sql_exprs()}\nFROM (SELECT lang,"
+        f" {_seeded_caption_sql()} AS caption FROM documents) GROUP BY lang"
     )
 
 

@@ -270,9 +270,7 @@ def assemble_flags(images: DataFrame, url_status: DataFrame) -> DataFrame:
 
     Fully narrow — no shuffle anywhere in the flag assembly: the URL check
     is a broadcast-dict lookup inside the fused caption UDF."""
-    df = images
-    for name, col in binary_sanity_cols().items():
-        df = df.withColumn(name, col)
+    df = images.withColumns(binary_sanity_cols())
     df = df.withColumn("dec", decode_udf(F.col("bytes"))).select(
         "*", "dec.decoded_ok", "dec.phash_calc"
     ).drop("dec")
@@ -283,36 +281,29 @@ def assemble_flags(images: DataFrame, url_status: DataFrame) -> DataFrame:
         F.col("m.scrubbed").alias("scrubbed_all"),
     ).drop("m")
 
-    text_flags = {r.code: r.spark(F.col("caption")) for r in TEXT_RULES}
-    sanity = sanity_rule_flags()
-    flag_cols: dict[str, Column] = {}
-    for r in REGISTRY:
-        if r.kind == "text":
-            flag_cols[r.code] = text_flags[r.code]
-        elif r.code in sanity:
-            flag_cols[r.code] = sanity[r.code]
-        elif r.code == "P019":
-            flag_cols[r.code] = (
-                F.col("phash_calc").isNotNull()
-                & (F.col("phash_calc") != F.col("phash"))
-            )
-        elif r.code == "X001":
-            flag_cols[r.code] = ~F.coalesce(F.col("decoded_ok"), F.lit(False))
-        elif r.code in ("P013", "P025"):
-            flag_cols[r.code] = F.coalesce(F.col(r.code), F.lit(False))
-        elif r.code == "X002":
-            flag_cols[r.code] = F.col("lang") == "und"
-        elif r.code == "X003":
-            flag_cols[r.code] = F.col("ppl") > F.lit(PPL_THRESHOLD)
-        else:  # pragma: no cover
-            raise ValueError(f"unwired rule {r.code}")
-    for code, col in flag_cols.items():
-        df = df.withColumn(f"hit_{code}", F.coalesce(col, F.lit(False)))
-    return df
+    # One predicate per rule code; a null predicate (missing input) is a
+    # non-hit, the reference's per-detector abstention.
+    caption = F.col("caption")
+    flags: dict[str, Column] = {
+        **sanity_rule_flags(),
+        "P019": F.col("phash_calc").isNotNull()
+        & (F.col("phash_calc") != F.col("phash")),
+        "X001": ~F.coalesce(F.col("decoded_ok"), F.lit(False)),
+        "P013": F.col("P013"),
+        "P025": F.col("P025"),
+        "X002": F.col("lang") == "und",
+        "X003": F.col("ppl") > F.lit(PPL_THRESHOLD),
+        **{r.code: r.spark(caption) for r in TEXT_RULES},
+    }
+    return df.withColumns(
+        {f"hit_{r.code}": F.coalesce(flags[r.code], F.lit(False)) for r in REGISTRY}
+    )
 
 
 def with_labels(flagged: DataFrame) -> DataFrame:
-    """rule_hits (ordered array), n_pitfalls/n_warnings, keep, scrubbed."""
+    """rule_hits (fired codes in registry order — the analog of the
+    reference's ordered `checks` array, json_ld_utils.py:462-508),
+    n_pitfalls/n_warnings, keep, scrubbed."""
     hit_structs = [
         F.when(F.col(f"hit_{r.code}"), F.lit(r.code)) for r in REGISTRY
     ]
@@ -392,22 +383,31 @@ def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
-def completed_buckets(spark: SparkSession, path: str) -> list[int]:
-    """Bucket ids already committed to the audit table at `path`."""
+def completed_buckets(spark: SparkSession, path: str) -> list[int | None]:
+    """Bucket ids already committed to the audit table at `path` (None
+    for the bucket of null-phash rows)."""
     audit = read_committed(spark, path)
     if audit is None:
         return []
     return [r.bucket for r in audit.select("bucket").distinct().collect()]
 
 
-def resume_filter(images: DataFrame, done: list[int], buckets: int = 32) -> DataFrame:
+def resume_filter(
+    images: DataFrame, done: list[int | None], buckets: int = 32
+) -> DataFrame:
     """Drop rows whose bucket already committed — the anti-join resume of
     SURVEY.md §7.5 (a literal isin here since the ledger is a tiny list;
-    with an Iceberg ledger table this is a broadcast left_anti join)."""
+    with an Iceberg ledger table this is a broadcast left_anti join).
+
+    A null phash falls in the null bucket, which completed_buckets reports
+    as None: those rows stay to do until None is in `done`."""
     if not done:
         return images
     b = F.pmod(F.col("phash"), F.lit(buckets)).cast("int")
-    return images.filter(~b.isin(done))
+    ids = [d for d in done if d is not None]
+    return images.filter(
+        F.when(b.isNull(), F.lit(None not in done)).otherwise(~b.isin(ids))
+    )
 
 
 def kept_output(labeled: DataFrame, salt: int = 8) -> DataFrame:

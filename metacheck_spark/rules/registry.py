@@ -44,9 +44,9 @@ class Rule:
     severity: str  # 'P' = pitfall (drop), 'W' = warning (record only)
     category: str
     description: str
-    kind: str  # 'text' | 'binary' | 'url'
+    kind: str  # 'text' | 'binary' | 'url' | 'model'
     spark: Optional[Callable[[Column], Column]] = None  # caption col -> bool col
-    py: Optional[Callable] = None  # (caption:str|None, ctx:dict) -> bool
+    py: Optional[Callable] = None  # text: (caption) -> bool; else (caption, ctx) -> bool
     duckdb: Optional[str] = None  # boolean SQL over {c}, RE2-safe
     rank: int = field(default=-1)
 
@@ -316,18 +316,22 @@ def _p001_py(_s, ctx):
     """Declared w/h column vs dims parsed from the image header bytes
     (analog of version-vs-release mismatch, reference p001.py:65-94).
     Header parse is byte-offset arithmetic — mirrored natively in Spark via
-    substring()/conv() on the binary column (see pipeline.binary_sanity_cols)."""
+    substring()/conv() on the binary column (see pipeline.binary_sanity_cols).
+
+    A null declared value is never a mismatch (as for P026): the rule
+    fires only when a non-null declared dimension differs from the header."""
     hdr = ctx.get("hdr_dims")  # (w, h) or None when unparseable
     if hdr is None:
         return False
-    return hdr != (ctx["w"], ctx["h"])
+    return any(d is not None and d != v for d, v in zip((ctx["w"], ctx["h"]), hdr))
 
 
 def _p019_py(_s, ctx):
     """Stored phash vs phash recomputed from decoded pixels (analog of the
-    download-url-version vs release-version mismatch, reference p019.py)."""
-    ph = ctx.get("phash_calc")
-    return ph is not None and ph != ctx["phash"]
+    download-url-version vs release-version mismatch, reference p019.py).
+    Abstains when either is null: a null stored phash is never a mismatch."""
+    ph, stored = ctx.get("phash_calc"), ctx["phash"]
+    return ph is not None and stored is not None and ph != stored
 
 
 def _p026_py(_s, ctx):
@@ -337,7 +341,7 @@ def _p026_py(_s, ctx):
     return magic is not None and ctx["fmt"] is not None and magic != ctx["fmt"]
 
 
-def _p027_py(s, _ctx=None):
+def _p027_py(s):
     """Two version tokens that differ strictly but match after v-strip —
     preserves the reference quirk pair: P001 normalizes the leading 'v',
     P027 compares strictly (p027.py:84 vs pitfall_utils.py:63-71)."""
@@ -383,42 +387,42 @@ def _x001_py(_s, ctx):
 
 _RULES = [
     Rule("P001", "P", "sanity", "declared w/h mismatch vs image header dims", "binary", py=_p001_py),
-    Rule("P002", "P", "caption", "placeholder token in caption", "text", _p002_spark, lambda s, ctx=None: _p002_py(s),
+    Rule("P002", "P", "caption", "placeholder token in caption", "text", _p002_spark, _p002_py,
          duckdb="regexp_matches(lower({c}), '(<year>|<program>|<name>|<owner>|<copyright holders?>|\\[year\\]|\\[fullname\\]|\\[name of copyright owner\\]|\\[yyyy\\])')"),
-    Rule("W003", "W", "caption", "requirement named without version constraint", "text", _w003_spark, lambda s, ctx=None: _w003_py(s),
+    Rule("W003", "W", "caption", "requirement named without version constraint", "text", _w003_spark, _w003_py,
          duckdb="(regexp_matches(lower({c}), 'requires [a-z][a-z0-9_-]*') AND NOT regexp_matches(lower({c}), 'requires [a-z][a-z0-9_-]*\\s*(==|>=|<=|~=|!=|[><^~]|v?[0-9])'))"),
-    Rule("W004", "W", "caption", "updated timestamp >1 day after modified", "text", _w004_spark, lambda s, ctx=None: _w004_py(s)),
-    Rule("P005", "P", "caption", "multiple entities in credit segment", "text", _p005_spark, lambda s, ctx=None: _p005_py(s)),
-    Rule("P006", "P", "caption", "documentation/homepage URL where content link belongs", "text", _p006_spark, lambda s, ctx=None: _p006_py(s),
+    Rule("W004", "W", "caption", "updated timestamp >1 day after modified", "text", _w004_spark, _w004_py),
+    Rule("P005", "P", "caption", "multiple entities in credit segment", "text", _p005_spark, _p005_py),
+    Rule("P006", "P", "caption", "documentation/homepage URL where content link belongs", "text", _p006_spark, _p006_py,
          duckdb="regexp_matches(lower({c}), '(https?://|www\\.)[^ ]*(readthedocs\\.io|github\\.io|/wiki|docs\\.|documentation)')"),
-    Rule("P007", "P", "caption", "software-archive URL in caption", "text", _p007_spark, lambda s, ctx=None: _p007_py(s),
+    Rule("P007", "P", "caption", "software-archive URL in caption", "text", _p007_spark, _p007_py,
          duckdb="regexp_matches(lower({c}), '(zenodo\\.org|figshare\\.com|sourceforge\\.net|archive\\.org|codeocean\\.com|osf\\.io|doi\\.org/10\\.5281|github\\.com/[^ ]+/releases)')"),
-    Rule("P008", "P", "caption", "local license-file path where URL belongs", "text", _p008_spark, lambda s, ctx=None: _p008_py(s)),
-    Rule("W010", "W", "caption", "language named without version", "text", _w010_spark, lambda s, ctx=None: _w010_py(s),
+    Rule("P008", "P", "caption", "local license-file path where URL belongs", "text", _p008_spark, _p008_py),
+    Rule("W010", "W", "caption", "language named without version", "text", _w010_spark, _w010_py,
          duckdb="(regexp_matches(lower({c}), 'written in (python|java|rust|c\\+\\+|ruby|go)') AND NOT regexp_matches(lower({c}), 'written in (python|java|rust|c\\+\\+|ruby|go) v?[0-9]'))"),
-    Rule("P011", "P", "caption", "citation requested, URL present, no DOI", "text", _p011_spark, lambda s, ctx=None: _p011_py(s)),
-    Rule("W012", "W", "caption", "multiple requirements packed in one string", "text", _w012_spark, lambda s, ctx=None: _w012_py(s),
+    Rule("P011", "P", "caption", "citation requested, URL present, no DOI", "text", _p011_spark, _p011_py),
+    Rule("W012", "W", "caption", "multiple requirements packed in one string", "text", _w012_spark, _w012_py,
          duckdb="regexp_matches({c}, 'deps:\\s*[A-Z][A-Za-z0-9._-]*(\\s[A-Z][A-Za-z0-9._-]*)+')"),
     Rule("P013", "P", "url", "caption URL inaccessible (2xx∪301 accessible)", "url", py=_p013_py),
-    Rule("W014", "W", "caption", "name-like identifier while valid DOI present", "text", _w014_spark, lambda s, ctx=None: _w014_py(s)),
-    Rule("W015", "W", "caption", "caption empty or blank", "text", _w015_spark, lambda s, ctx=None: _w015_py(s),
+    Rule("W014", "W", "caption", "name-like identifier while valid DOI present", "text", _w014_spark, _w014_py),
+    Rule("W015", "W", "caption", "caption empty or blank", "text", _w015_spark, _w015_py,
          duckdb="({c} IS NULL OR trim({c}) = '')"),
-    Rule("P016", "P", "caption", "homepage URL where repository link belongs", "text", _p016_spark, lambda s, ctx=None: _p016_py(s)),
-    Rule("P017", "P", "caption", "copyright-only short caption", "text", _p017_spark, lambda s, ctx=None: _p017_py(s)),
-    Rule("P018", "P", "caption", "malformed whitespace in caption", "text", _p018_spark, lambda s, ctx=None: _p018_py(s),
+    Rule("P016", "P", "caption", "homepage URL where repository link belongs", "text", _p016_spark, _p016_py),
+    Rule("P017", "P", "caption", "copyright-only short caption", "text", _p017_spark, _p017_py),
+    Rule("P018", "P", "caption", "malformed whitespace in caption", "text", _p018_spark, _p018_py,
          duckdb="(regexp_matches({c}, '[\\n\\r]') OR {c} != trim({c}) OR contains({c}, '  '))"),
     Rule("P019", "P", "sanity", "stored phash mismatch vs recomputed phash", "binary", py=_p019_py),
-    Rule("P020", "P", "caption", "caption is a bare URL", "text", _p020_spark, lambda s, ctx=None: _p020_py(s),
+    Rule("P020", "P", "caption", "caption is a bare URL", "text", _p020_spark, _p020_py,
          duckdb="regexp_matches(lower({c}), '^\\s*(https?://|www\\.)[^ ]+\\s*$')"),
-    Rule("W021", "W", "caption", "bracketed comma list in caption", "text", _w021_spark, lambda s, ctx=None: _w021_py(s),
+    Rule("W021", "W", "caption", "bracketed comma list in caption", "text", _w021_spark, _w021_py,
          duckdb="regexp_matches({c}, '\\[[^\\]\\[]*,[^\\]\\[]*\\]')"),
-    Rule("P022", "P", "caption", "license family named without version", "text", _p022_spark, lambda s, ctx=None: _p022_py(s)),
-    Rule("P023", "P", "caption", "git-remote shorthand instead of URL", "text", _p023_spark, lambda s, ctx=None: _p023_py(s)),
-    Rule("P024", "P", "caption", "bare DOI instead of doi.org URL", "text", _p024_spark, lambda s, ctx=None: _p024_py(s)),
+    Rule("P022", "P", "caption", "license family named without version", "text", _p022_spark, _p022_py),
+    Rule("P023", "P", "caption", "git-remote shorthand instead of URL", "text", _p023_spark, _p023_py),
+    Rule("P024", "P", "caption", "bare DOI instead of doi.org URL", "text", _p024_spark, _p024_py),
     Rule("P025", "P", "url", "caption URL not strictly 2xx (301 rejected)", "url", py=_p025_py),
     Rule("P026", "P", "sanity", "declared fmt mismatch vs magic bytes", "binary", py=_p026_py),
     Rule("P027", "P", "caption", "version tokens differing only by v-prefix", "text", _p027_spark, _p027_py),
-    Rule("P028", "P", "caption", "raw SWHID in caption", "text", _p028_spark, lambda s, ctx=None: _p028_py(s),
+    Rule("P028", "P", "caption", "raw SWHID in caption", "text", _p028_spark, _p028_py,
          duckdb="regexp_matches({c}, '(^| )swh:1:[a-z]{{3}}:[0-9a-f]{{40}}($|[ .,;])')"),
     Rule("X001", "P", "sanity", "image bytes fail to decode (engine extension)", "binary", py=_x001_py),
     # Model-stage rules (engine extensions; the north_star's fastText-style

@@ -7,10 +7,11 @@ images table directory are processed exactly once via a file-source stream
 with Trigger.AvailableNow + checkpointing — the idiomatic Spark way to run
 "only the rows that arrived since the last run" without hand-rolled ledgers.
 
-Everything downstream of readStream is the SAME declarative plan as batch
-(text rules are pure Column expressions), so batch/stream parity is by
-construction, not duplication. Stages that need a join or pandas UDF state
-run fine in streams too (broadcast joins of static dims are supported);
+run_available_now streams the batch plan itself: pipeline.assemble_flags
+and pipeline.with_labels over readStream, with every rule (text, binary,
+URL, model) and the same keep label, so batch/stream parity is by
+construction, not duplication. Both UDF stages are narrow, and the
+url_status dimension is broadcast, so the plan needs no stream join;
 windowed counts demonstrate watermarking for late data.
 """
 
@@ -19,69 +20,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metacheck_spark.plans.quality import with_text_rules
+from metacheck_spark.pipeline import assemble_flags, with_labels
 from metacheck_spark.schemas import IMAGES_SCHEMA
 
 
-def read_images_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def incremental_rule_flags(images_stream: DataFrame) -> DataFrame:
-    """The text-rule battery over a stream — identical Column expressions
-    as the batch plan (plans/quality.py), appended per micro-batch."""
-    return with_text_rules(images_stream, "caption").select(
-        "image_id",
-        "caption",
-        "rule_hits",
-        (F.size(F.filter("rule_hits", lambda c: ~c.startswith("W"))) == 0).alias(
-            "keep"
-        ),
-    )
-
-
 def run_available_now(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Process exactly the files not yet seen (per the checkpoint), then
-    stop — the incremental batch pattern (Trigger.AvailableNow). Re-running
-    after new files land processes only the delta."""
-    flags = incremental_rule_flags(read_images_stream(spark, input_path))
-    q = (
-        flags.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_full_pipeline_available_now(
     spark: SparkSession,
     input_path: str,
     url_status: DataFrame,
     output_path: str,
     checkpoint_path: str,
 ) -> None:
-    """The FULL quality-filter pipeline (binary sanity + decode + fused
-    caption-model UDF + keep/drop + scrub) over the file stream — the same
+    """Process exactly the files not yet seen (per the checkpoint), then
+    stop — the incremental batch pattern (Trigger.AvailableNow). Runs the
+    full quality-filter pipeline (binary sanity + decode + fused
+    caption-model UDF + keep/drop + scrub), the same
     assemble_flags/with_labels plan as batch, which Structured Streaming
-    accepts unchanged because every stage is narrow (no shuffle). Each
-    AvailableNow run processes exactly the new files since the checkpoint:
-    the streaming counterpart of the bucket-ledger resume."""
-    from metacheck_spark.pipeline import assemble_flags, with_labels
-
-    stream = read_images_stream(spark, input_path)
+    accepts unchanged because every stage is narrow (no shuffle): the
+    streaming counterpart of the bucket-ledger resume."""
+    stream = spark.readStream.schema(IMAGES_SCHEMA).parquet(input_path)
     labeled = with_labels(assemble_flags(stream, url_status))
     out = labeled.select(
         "image_id",

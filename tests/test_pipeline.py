@@ -169,3 +169,63 @@ def test_audit_write_and_resume(spark, images_dir, tmp_path):
     final = spark.read.parquet(out)
     assert final.count() == N
     assert final.select("image_id").distinct().count() == N
+
+
+def test_null_declared_values_are_never_a_mismatch(spark):
+    """A null declared w, h or phash abstains in the pipeline and the oracle
+    alike: P001 compares only the non-null declared dimension with the
+    header, and P019 never fires on a null stored phash."""
+    from metacheck_spark.fixtures.gen_images import url_status_rows
+    from metacheck_spark.schemas import IMAGES_SCHEMA, URL_STATUS_SCHEMA
+
+    rows = gen_rows(40)
+    clean = [
+        r for r in rows
+        if codec.header_dims(r["bytes"]) == (r["w"], r["h"])
+        and codec.decode(r["bytes"]) is not None
+    ]
+    a, b, c, d = (r["image_id"] for r in clean[:4])
+    by_id = {r["image_id"]: r for r in rows}
+    by_id[a]["w"] = None                          # h matches the header
+    by_id[b]["h"], by_id[b]["w"] = None, by_id[b]["w"] + 1
+    by_id[c]["w"], by_id[c]["h"] = None, by_id[c]["h"] + 1
+    by_id[d]["phash"] = None
+
+    images = spark.createDataFrame(rows, IMAGES_SCHEMA)
+    us = spark.createDataFrame(url_status_rows(), URL_STATUS_SCHEMA)
+    got = {
+        r["image_id"]: (list(r["rule_hits"]), r["keep"])
+        for r in run_pipeline(spark, images, us).collect()
+    }
+    want = {
+        e["image_id"]: (e["rule_hits"], e["keep"])
+        for e in label_rows(rows, url_status_map())
+    }
+    assert got == want
+    assert "P001" not in got[a][0]
+    assert "P001" in got[b][0] and "P001" in got[c][0]
+    assert "P019" not in got[d][0]
+
+
+def test_resume_keeps_null_phash_rows_until_their_bucket_commits(spark, tmp_path):
+    """A null phash lands in the null bucket; resume_filter keeps the row to
+    do until completed_buckets reports that bucket (as None)."""
+    images = spark.createDataFrame(
+        [(f"r{i}", i or None) for i in range(16)], "image_id string, phash long"
+    )
+    ledger = images.select(
+        "image_id", F.pmod("phash", F.lit(8)).cast("int").alias("bucket")
+    )
+    out = str(tmp_path / "audit")
+
+    write_audit(ledger.filter(F.col("bucket") == 0), out, buckets=8)
+    done = completed_buckets(spark, out)
+    assert done == [0]
+    todo = {r.image_id for r in resume_filter(images, done, buckets=8).collect()}
+    assert todo == {f"r{i}" for i in range(16)} - {"r8"}
+
+    rest = F.col("bucket").isNull() | (F.col("bucket") != 0)
+    write_audit(ledger.filter(rest), out, buckets=8)
+    done = completed_buckets(spark, out)
+    assert sorted(done, key=lambda b: -1 if b is None else b) == [None, *range(8)]
+    assert resume_filter(images, done, buckets=8).count() == 0

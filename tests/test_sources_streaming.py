@@ -13,8 +13,6 @@ from metacheck_spark.schemas import IMAGES_SCHEMA, URL_STATUS_SCHEMA
 from metacheck_spark.sources.readers import corrupt_records, read_json_dir
 from metacheck_spark.sources.sinks import summary_dict, write_assessments
 from metacheck_spark.streaming.incremental import (
-    incremental_rule_flags,
-    read_images_stream,
     run_available_now,
     stateful_stream_dedup,
     windowed_hit_counts,
@@ -94,17 +92,21 @@ def test_available_now_is_incremental(spark, tmp_path):
         )
         pq.write_table(t, str(src / name))
 
+    us = spark.createDataFrame(url_status_rows(), URL_STATUS_SCHEMA)
     write_batch("b0.parquet", gen_rows(50, start=0))
-    run_available_now(spark, str(src), out, ckpt)
+    run_available_now(spark, str(src), us, out, ckpt)
     assert spark.read.parquet(out).count() == 50
 
     # second run with 30 NEW rows: only the delta is processed
     write_batch("b1.parquet", gen_rows(30, start=1000))
-    run_available_now(spark, str(src), out, ckpt)
+    run_available_now(spark, str(src), us, out, ckpt)
     got = spark.read.parquet(out)
     assert got.count() == 80
     assert got.select("image_id").distinct().count() == 80
-    assert set(got.columns) == {"image_id", "caption", "rule_hits", "keep"}
+    assert set(got.columns) == {
+        "image_id", "rule_hits", "n_pitfalls", "n_warnings", "keep",
+        "lang", "lang_conf", "ppl", "scrubbed_caption",
+    }
 
 
 def test_full_pipeline_stream_matches_batch(spark, images_dir, tmp_path):
@@ -113,9 +115,6 @@ def test_full_pipeline_stream_matches_batch(spark, images_dir, tmp_path):
     import shutil
 
     from metacheck_spark.pipeline import assemble_flags, with_labels
-    from metacheck_spark.streaming.incremental import (
-        run_full_pipeline_available_now,
-    )
 
     src = tmp_path / "full_src"
     src.mkdir()
@@ -124,9 +123,7 @@ def test_full_pipeline_stream_matches_batch(spark, images_dir, tmp_path):
         f"{images_dir}/url_status.parquet"
     )
     out = str(tmp_path / "full_out")
-    run_full_pipeline_available_now(
-        spark, str(src), us, out, str(tmp_path / "full_ckpt")
-    )
+    run_available_now(spark, str(src), us, out, str(tmp_path / "full_ckpt"))
     got = {
         r.image_id: (list(r.rule_hits), r.keep, r.lang, r.scrubbed_caption)
         for r in spark.read.parquet(out).collect()
@@ -189,30 +186,3 @@ def test_windowed_hit_counts_batch_semantics(spark):
     assert got[(0, "W015")] == 1
     assert got[(5, "P002")] == 1
 
-
-def test_stream_plan_matches_batch_plan(spark, images_dir, tmp_path):
-    """Batch/stream parity by construction: the same rows get the same
-    rule_hits whether scanned as a stream or a table."""
-    import shutil
-
-    stream_dir = tmp_path / "stream_src"  # file stream source needs a dir
-    stream_dir.mkdir()
-    shutil.copy(f"{images_dir}/images.parquet", stream_dir / "images.parquet")
-    batch = spark.read.schema(IMAGES_SCHEMA).parquet(f"{images_dir}/images.parquet")
-    stream = read_images_stream(spark, str(stream_dir))
-    flags = incremental_rule_flags(stream)
-    q = (
-        flags.writeStream.format("memory")
-        .queryName("parity_t")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from metacheck_spark.plans.quality import with_text_rules
-
-    want = {
-        r.image_id: list(r.rule_hits)
-        for r in with_text_rules(batch, "caption").select("image_id", "rule_hits").collect()
-    }
-    got = {r.image_id: list(r.rule_hits) for r in spark.sql("SELECT * FROM parity_t").collect()}
-    assert got == want

@@ -11,10 +11,11 @@ from __future__ import annotations
 import hashlib
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from metacheck_spark import get_spark  # noqa: E402
