@@ -28,6 +28,7 @@ from metacheck_spark.functions.text import (
 from metacheck_spark.operators import dedup as D
 from metacheck_spark.operators import similarity as S
 from metacheck_spark.rules.registry import DUCKDB_SAFE
+from metacheck_spark.tally import fold, hit_histogram, label_hits
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -92,14 +93,20 @@ def _seeded_caption_sql() -> str:
     return "CASE " + " ".join(cases) + " ELSE text END"
 
 
-def _rule_count_aggs() -> list[F.Column]:
-    """One conditional count per DuckDB-expressible rule over `caption`
-    (A1 analog, detect_pitfalls_main.py:317-318): N counts in one
-    aggregation pass instead of an explode+groupBy, so no exploded rows
-    are shuffled and the map-side partial aggregate is one row per
-    partition (per group)."""
+def _docs_histogram(spark: SparkSession, sf_dir: str, *by: str) -> list:
+    """The trigger-seeded documents labelled with the DuckDB-expressible
+    rules (tally.label_hits; a null predicate is a non-hit), as a
+    (*by, rule_hits) histogram — one Spark action. The three count
+    queries fold it (A1/A3-A7 analogs, detect_pitfalls_main.py:317-330)."""
+    df = _documents(spark, sf_dir).withColumn("caption", _seeded_caption_col())
     c = F.col("caption")
-    return [F.count(F.when(r.spark(c), 1)).alias(r.code.lower()) for r in DUCKDB_SAFE]
+    flagged = df.withColumns(
+        {f"hit_{r.code}": F.coalesce(r.spark(c), F.lit(False)) for r in DUCKDB_SAFE}
+    )
+    return hit_histogram(label_hits(flagged, [r.code for r in DUCKDB_SAFE]), *by)
+
+
+_RULE_COUNT_DDL = ", ".join(f"{r.code.lower()} bigint" for r in DUCKDB_SAFE)
 
 
 def _rule_count_sql_exprs() -> str:
@@ -111,8 +118,10 @@ def _rule_count_sql_exprs() -> str:
 
 def q_rule_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule hit counts over trigger-seeded captions."""
-    df = _documents(spark, sf_dir).withColumn("caption", _seeded_caption_col())
-    return df.agg(*_rule_count_aggs())
+    t = fold(_docs_histogram(spark, sf_dir))
+    return spark.createDataFrame(
+        [[t.rules[r.code] for r in DUCKDB_SAFE]], _RULE_COUNT_DDL
+    )
 
 
 def _rule_counts_sql() -> str:
@@ -1113,30 +1122,11 @@ WHERE round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) /
 
 
 def q_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _documents(spark, sf_dir).withColumn("caption", _seeded_caption_col())
-    c = F.col("caption")
-    flags = [(r, r.spark(c)) for r in DUCKDB_SAFE]
-    any_hit = flags[0][1]
-    any_pit = F.lit(False)
-    for r, f in flags[1:]:
-        any_hit = any_hit | f
-    for r, f in flags:
-        if r.severity == "P":
-            any_pit = any_pit | f
-    n_pit = sum(
-        (F.when(f, 1).otherwise(0) for r, f in flags if r.severity == "P"),
-        start=F.lit(0),
-    )
-    n_warn = sum(
-        (F.when(f, 1).otherwise(0) for r, f in flags if r.severity == "W"),
-        start=F.lit(0),
-    )
-    return df.agg(
-        F.count(F.lit(1)).alias("total_rows"),
-        F.count(F.when(any_hit, 1)).alias("flagged_rows"),
-        F.count(F.when(~any_pit, 1)).alias("kept_rows"),
-        F.sum(n_pit).cast("long").alias("total_pitfalls"),
-        F.sum(n_warn).cast("long").alias("total_warnings"),
+    t = fold(_docs_histogram(spark, sf_dir))
+    return spark.createDataFrame(
+        [(t.rows, t.flagged, t.kept, t.pitfalls, t.warnings)],
+        "total_rows bigint, flagged_rows bigint, kept_rows bigint, "
+        "total_pitfalls bigint, total_warnings bigint",
     )
 
 
@@ -1162,10 +1152,16 @@ FROM (SELECT {_seeded_caption_sql()} AS caption FROM documents)
 
 
 def q_rule_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 analog: per-language per-rule hit counts as one grouped pass
-    (the same conditional counts as q_rule_counts, no explode)."""
-    df = _documents(spark, sf_dir).withColumn("caption", _seeded_caption_col())
-    return df.groupBy("lang").agg(*_rule_count_aggs())
+    """A3 analog: per-language per-rule hit counts, one row per language."""
+    hist = _docs_histogram(spark, sf_dir, "lang")
+    t = fold(hist, lambda row: [row["lang"]])
+    return spark.createDataFrame(
+        [
+            [lang] + [t.by_group[r.code, lang] for r in DUCKDB_SAFE]
+            for lang in {row["lang"] for row in hist}
+        ],
+        f"lang string, {_RULE_COUNT_DDL}",
+    )
 
 
 def _rule_lang_counts_sql() -> str:

@@ -40,6 +40,7 @@ from metacheck_spark.functions.langid import langid_batch
 from metacheck_spark.functions.perplexity import PPL_THRESHOLD, ppl_batch
 from metacheck_spark.functions.scrub import scrub_batch
 from metacheck_spark.rules.registry import REGISTRY, TEXT_RULES
+from metacheck_spark.tally import label_hits
 
 # ---------------------------------------------------------------------------
 # stage 1: sanity predicates — native header parses on the binary column
@@ -301,21 +302,9 @@ def assemble_flags(images: DataFrame, url_status: DataFrame) -> DataFrame:
 
 
 def with_labels(flagged: DataFrame) -> DataFrame:
-    """rule_hits (fired codes in registry order — the analog of the
-    reference's ordered `checks` array, json_ld_utils.py:462-508),
-    n_pitfalls/n_warnings, keep, scrubbed."""
-    hit_structs = [
-        F.when(F.col(f"hit_{r.code}"), F.lit(r.code)) for r in REGISTRY
-    ]
-    hits = F.filter(F.array(*hit_structs), lambda x: x.isNotNull())
-    n_pit = F.size(F.filter(hits, lambda c: ~c.startswith("W")))
-    n_warn = F.size(F.filter(hits, lambda c: c.startswith("W")))
-    df = (
-        flagged.withColumn("rule_hits", hits)
-        .withColumn("n_pitfalls", n_pit)
-        .withColumn("n_warnings", n_warn)
-        .withColumn("keep", n_pit == 0)
-    )
+    """rule_hits/n_pitfalls/n_warnings/keep over the registry's flags
+    (tally.label_hits), plus the scrubbed caption."""
+    df = label_hits(flagged, [r.code for r in REGISTRY])
     # Scrubbed caption exposed for kept rows only (reference semantics:
     # dropped rows carry no scrubbed text); the fused caption stage
     # already computed it for every row.
@@ -326,7 +315,7 @@ def with_labels(flagged: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stage 8: audit table (phash-bucketed, resume ledger) + metrics
+# stage 8: audit table (phash-bucketed, resume ledger) + kept output
 
 
 def audit_frame(labeled: DataFrame, run_ts: str, buckets: int = 32) -> DataFrame:
@@ -449,34 +438,6 @@ def reconcile_kept(
     out = kept_output(missing, salt).observe(obs, F.count(F.lit(1)).alias("n"))
     out.write.mode("append").partitionBy("lang").parquet(kept_path)
     return int(obs.get["n"])
-
-
-def metrics_frame(audit: DataFrame) -> DataFrame:
-    """A1-A7 analog in one pass: per-rule counts + totals
-    (detect_pitfalls_main.py:364-373)."""
-    aggs = [
-        F.count(F.when(F.array_contains("rule_hits", r.code), 1)).alias(r.code.lower())
-        for r in REGISTRY
-    ]
-    aggs += [
-        F.count(F.lit(1)).alias("total_rows"),
-        F.count(F.when(F.col("keep"), 1)).alias("kept_rows"),
-        F.sum("n_pitfalls").cast("long").alias("total_pitfalls"),
-        F.sum("n_warnings").cast("long").alias("total_warnings"),
-        F.count(F.when(F.size("rule_hits") > 0, 1)).alias("flagged_rows"),
-    ]
-    return audit.agg(*aggs)
-
-
-def per_language_rule_counts(audit: DataFrame) -> DataFrame:
-    """A3 analog: rule x language counts (the reference's per-language
-    tallies, detect_pitfalls_main.py:325-330). Explodes only flagged rows."""
-    return (
-        audit.filter(F.size("rule_hits") > 0)
-        .select("lang", F.explode("rule_hits").alias("code"))
-        .groupBy("code", "lang")
-        .count()
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -24,9 +24,7 @@ from metacheck_spark.sources.jsonld_text import (  # noqa: F401
     SUGGESTIONS,
     SUMMARY_DESCRIPTIONS,
 )
-
-
-
+from metacheck_spark.tally import fold, hit_histogram, label_hits
 
 _META_EXTS = [".json", ".xml", ".yml", ".toml", ".txt"]
 
@@ -504,64 +502,42 @@ def corpus_summary(
 ) -> dict:
     """The reference's analysis_results.json (detect_pitfalls_main.py:
     52-253 shell, :325-330 language tallies, :364-391 totals/percentages)
-    over a nested corpus frame — ONE distributed aggregation (27 count
-    exprs + 27x6 language-conditioned counts + totals, all map-side
-    partial); only the single summary row reaches the driver, where
-    percentages use Python round (banker's) exactly as json.dump saw
-    them."""
+    over a nested corpus frame — one (target languages, identifier crash,
+    rule_hits) histogram, folded on the driver, where percentages use
+    Python round (banker's) exactly as json.dump saw them. A document
+    whose language extraction crashes counts in the total only; one whose
+    identifier crashes is tallied but gets no JSON-LD file."""
     df = _with_all_categories(df)
     lang_crash, ident_crash = _reference_skips()
-    flagged = (
-        M.nested_rule_flags(df, url_status_map)
-        .withColumn("_skip", lang_crash)
-        .withColumn(
-            "_langs",
-            F.when(
-                F.col("_skip"), F.array().cast("array<string>")
-            ).otherwise(
-                extract_target_languages(F.col("programming_languages"))
-            ),
-        )
+    none = F.array().cast("array<string>")
+    labeled = label_hits(M.nested_rule_flags(df, url_status_map), CODES)
+    skipped = labeled.withColumn("_skip", lang_crash)
+    hist = hit_histogram(
+        skipped.select(
+            F.when(F.col("_skip"), none)
+            .otherwise(F.col("rule_hits"))
+            .alias("rule_hits"),
+            F.when(F.col("_skip"), none)
+            .otherwise(extract_target_languages(F.col("programming_languages")))
+            .alias("langs"),
+            ident_crash.alias("ident_crash"),
+        ),
+        "langs",
+        "ident_crash",
     )
-    any_hit = F.lit(False)
-    for code in CODES:
-        any_hit = any_hit | F.col(f"hit_{code}")
-    ok = ~F.col("_skip")
-    aggs = [
-        F.count(F.lit(1)).alias("_total"),
-        F.sum(F.when(F.size("_langs") > 0, 1).otherwise(0)).alias("_with_langs"),
-        F.sum(
-            F.when(ok & any_hit & ~ident_crash, 1).otherwise(0)
-        ).alias("_files_created"),
-    ]
-    for code in CODES:
-        aggs.append(
-            F.sum(F.when(ok & F.col(f"hit_{code}"), 1).otherwise(0)).alias(
-                f"_c_{code}"
-            )
-        )
-        for lang in TARGET_LANGUAGES:
-            aggs.append(
-                F.sum(
-                    F.when(
-                        ok
-                        & F.col(f"hit_{code}")
-                        & F.array_contains("_langs", lang),
-                        1,
-                    ).otherwise(0)
-                ).alias(f"_l_{code}_{lang}")
-            )
-    row = flagged.agg(*aggs).collect()[0].asDict()
-    total = row["_total"]
-    total_p = sum(row[f"_c_{c}"] for c in CODES if c.startswith("P"))
-    total_w = sum(row[f"_c_{c}"] for c in CODES if c.startswith("W"))
+    t = fold(hist, lambda row: row["langs"] or ())  # null: no languages entry
+    total = t.rows
     return {
         "summary": {
             "total_repositories_analyzed": total,
-            "repositories_with_target_languages": row["_with_langs"],
-            "individual_jsonld_files_created": row["_files_created"],
-            "total_pitfalls_detected": total_p,
-            "total_warnings_detected": total_w,
+            "repositories_with_target_languages": sum(
+                r["count"] for r in hist if r["langs"]
+            ),
+            "individual_jsonld_files_created": sum(
+                r["count"] for r in hist if r["rule_hits"] and not r["ident_crash"]
+            ),
+            "total_pitfalls_detected": t.pitfalls,
+            "total_warnings_detected": t.warnings,
             "target_languages": list(TARGET_LANGUAGES),
         },
         "pitfalls & warnings": [
@@ -569,14 +545,14 @@ def corpus_summary(
                 ("warning_code" if code.startswith("W") else "pitfall_code"): code,
                 ("warning_desc" if code.startswith("W") else "pitfall_desc"):
                     SUMMARY_DESCRIPTIONS[code],
-                "count": row[f"_c_{code}"],
-                "percentage": round((row[f"_c_{code}"] / total) * 100, 2)
+                "count": t.rules[code],
+                "percentage": round((t.rules[code] / total) * 100, 2)
                 if total > 0
                 else 0.0,
                 "languages": {
-                    lang: row[f"_l_{code}_{lang}"]
+                    lang: t.by_group[code, lang]
                     for lang in TARGET_LANGUAGES
-                    if row[f"_l_{code}_{lang}"] > 0
+                    if t.by_group[code, lang] > 0
                 },
             }
             for code in CODES

@@ -3,8 +3,8 @@
 The reference writes one JSON-LD file per flagged repo plus a single
 summary JSON (json_ld_utils.py:511-530, detect_pitfalls_main.py:375-391).
 Here the per-row assessments are one audit table write (bucketed, see
-pipeline.write_audit) and the assessment document itself is reproduced as
-a JSON string column via to_json(struct(...)) — no driver-side loop.
+pipeline.write_audit; the JSON-LD documents themselves are
+sources/jsonld.py:nested_assessments), and the summary is this module's.
 """
 
 from __future__ import annotations
@@ -12,77 +12,37 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from metacheck_spark.rules.registry import REGISTRY
-
-_RULE_DESC = {r.code: r.description for r in REGISTRY}
-_RULE_CAT = {r.code: r.category for r in REGISTRY}
-
-
-def assessment_json_col(run_ts: str) -> F.Column:
-    """Per-row JSON-LD-shaped assessment document (the analog of
-    json_ld_utils.py:462-508) built natively: one `checks` entry per fired
-    rule in registry order, via transform() over rule_hits against inline
-    code->description maps (Catalyst folds the map literals)."""
-    desc_map = F.create_map(
-        *[F.lit(x) for kv in _RULE_DESC.items() for x in kv]
-    )
-    cat_map = F.create_map(*[F.lit(x) for kv in _RULE_CAT.items() for x in kv])
-    checks = F.transform(
-        F.col("rule_hits"),
-        lambda code: F.struct(
-            code.alias("checkId"),
-            desc_map[code].alias("process"),
-            cat_map[code].alias("assessesIndicator"),
-        ),
-    )
-    return F.to_json(
-        F.struct(
-            F.lit("SoftwareQualityAssessment").alias("@type"),
-            F.col("image_id").alias("assessedItem"),
-            F.lit(run_ts).alias("dateCreated"),
-            checks.alias("checks"),
-        )
-    )
-
-
-def write_assessments(audit: DataFrame, path: str, run_ts: str) -> None:
-    """One JSON document per flagged row (S5 analog), written as JSON-lines
-    partitions — the per-file-per-repo layout of the reference does not
-    scale past ~10^6 rows; a table with a document column does."""
-    (
-        audit.filter(F.size("rule_hits") > 0)
-        .select("image_id", assessment_json_col(run_ts).alias("assessment"))
-        .write.mode("overwrite")
-        .json(path)
-    )
+from metacheck_spark.tally import fold, hit_histogram
 
 
 def summary_dict(audit: DataFrame) -> dict:
-    """Corpus summary (S6 analog, detect_pitfalls_main.py:364-391): the
-    per-rule counts + totals collapse to ONE row on the cluster; only that
-    row reaches the driver."""
-    from metacheck_spark.pipeline import metrics_frame
-
-    row = metrics_frame(audit).collect()[0].asDict()
-    total = row["total_rows"] or 1
+    """Corpus summary (S6 analog, detect_pitfalls_main.py:317-330,
+    :364-391): per-rule counts with their per-language tallies, and the
+    totals — one (lang, rule_hits) histogram, folded on the driver."""
+    t = fold(hit_histogram(audit, "lang"), lambda row: [row["lang"]])
+    total = t.rows or 1
     rules = [
         {
             "code": r.code,
             "desc": r.description,
-            "count": row[r.code.lower()],
-            "percentage": round(100.0 * row[r.code.lower()] / total, 2),
+            "count": t.rules[r.code],
+            "percentage": round(100.0 * t.rules[r.code] / total, 2),
+            "languages": {
+                lang: n for (code, lang), n in sorted(t.by_group.items())
+                if code == r.code
+            },
         }
         for r in REGISTRY
     ]
     return {
         "summary": {
-            "total_rows": row["total_rows"],
-            "kept_rows": row["kept_rows"],
-            "flagged_rows": row["flagged_rows"],
-            "total_pitfalls": row["total_pitfalls"],
-            "total_warnings": row["total_warnings"],
+            "total_rows": t.rows,
+            "kept_rows": t.kept,
+            "flagged_rows": t.flagged,
+            "total_pitfalls": t.pitfalls,
+            "total_warnings": t.warnings,
         },
         "pitfalls & warnings": rules,
     }

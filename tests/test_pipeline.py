@@ -12,12 +12,11 @@ from metacheck_spark.fixtures.gen_images import gen_rows, source_pixels, url_sta
 from metacheck_spark.fixtures.oracle import label_rows
 from metacheck_spark.pipeline import (
     completed_buckets,
-    metrics_frame,
-    per_language_rule_counts,
     resume_filter,
     run_pipeline,
     write_audit,
 )
+from metacheck_spark.sources.sinks import summary_dict
 
 N = 600
 
@@ -28,6 +27,13 @@ def audit_rows(spark, images_dir):
     us = spark.read.parquet(f"{images_dir}/url_status.parquet")
     audit = run_pipeline(spark, images, us)
     return {r["image_id"]: r for r in audit.collect()}
+
+
+@pytest.fixture(scope="module")
+def summary(spark, images_dir):
+    images = spark.read.parquet(f"{images_dir}/images.parquet")
+    us = spark.read.parquet(f"{images_dir}/url_status.parquet")
+    return summary_dict(run_pipeline(spark, images, us))
 
 
 @pytest.fixture(scope="module")
@@ -86,22 +92,23 @@ def test_decoded_pixels_psnr(images_dir, spark):
     assert checked > 40 and lossy > 5
 
 
-def test_metrics_frame(spark, images_dir, golden):
-    images = spark.read.parquet(f"{images_dir}/images.parquet")
-    us = spark.read.parquet(f"{images_dir}/url_status.parquet")
-    m = metrics_frame(run_pipeline(spark, images, us)).collect()[0]
-    assert m["total_rows"] == N
-    assert m["kept_rows"] == sum(1 for e in golden.values() if e["keep"])
-    assert m["p018"] == sum(1 for e in golden.values() if "P018" in e["rule_hits"])
-    assert m["total_pitfalls"] == sum(e["n_pitfalls"] for e in golden.values())
+def test_summary_totals(summary, golden):
+    """The totals and per-rule counts of sinks.summary_dict against the
+    oracle's labels."""
+    s = summary["summary"]
+    counts = {r["code"]: r["count"] for r in summary["pitfalls & warnings"]}
+    assert s["total_rows"] == N
+    assert s["kept_rows"] == sum(1 for e in golden.values() if e["keep"])
+    assert counts["P018"] == sum(1 for e in golden.values() if "P018" in e["rule_hits"])
+    assert s["total_pitfalls"] == sum(e["n_pitfalls"] for e in golden.values())
 
 
-def test_per_language_rule_counts(spark, images_dir, golden):
-    images = spark.read.parquet(f"{images_dir}/images.parquet")
-    us = spark.read.parquet(f"{images_dir}/url_status.parquet")
+def test_summary_language_tallies(summary, golden):
+    """Every (rule, language) tally of sinks.summary_dict, exactly."""
     got = {
-        (r["code"], r["lang"]): r["count"]
-        for r in per_language_rule_counts(run_pipeline(spark, images, us)).collect()
+        (r["code"], lang): n
+        for r in summary["pitfalls & warnings"]
+        for lang, n in r["languages"].items()
     }
     exp: dict = {}
     for e in golden.values():
@@ -169,6 +176,27 @@ def test_audit_write_and_resume(spark, images_dir, tmp_path):
     final = spark.read.parquet(out)
     assert final.count() == N
     assert final.select("image_id").distinct().count() == N
+
+
+def test_write_audit_commits_each_bucket_from_one_task(spark, images_dir, tmp_path):
+    """write_audit repartitions by bucket, so one task writes each bucket
+    directory whole: exactly one data file per `bucket=` directory. A
+    bucket directory is the resume ledger's unit, so no bucket can be
+    left half written by one of several tasks."""
+    import os
+
+    images = spark.read.parquet(f"{images_dir}/images.parquet")
+    us = spark.read.parquet(f"{images_dir}/url_status.parquet")
+    audit = run_pipeline(spark, images, us, buckets=32)
+    out = str(tmp_path / "audit")
+    write_audit(audit, out, buckets=32)
+
+    dirs = sorted(d for d in os.listdir(out) if d.startswith("bucket="))
+    n_buckets = audit.select("bucket").distinct().count()
+    assert len(dirs) == n_buckets > 1
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(out, d)) if not f.startswith(".")]
+        assert len(files) == 1 and files[0].startswith("part-"), (d, files)
 
 
 def test_null_declared_values_are_never_a_mismatch(spark):

@@ -4,6 +4,9 @@ on DuckDB over the same parquet tables, compare row count, column names,
 and an order-insensitive value hash.
 
 Usage: python tools/check_entry.py [sf_dir] [name ...]
+
+`oracle_connection` and `compare_query` are the comparison itself, shared
+with tests/test_entry_queries.py.
 """
 
 from __future__ import annotations
@@ -18,7 +21,6 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from metacheck_spark import get_spark  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -48,45 +50,52 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per input table of `sf_dir`."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
+    return con
 
+
+def compare_query(spark, con, name: str, sf_dir: str) -> tuple[bool, str]:
+    """Run queries()[name] on Spark and oracle_sql()[name] on `con`:
+    (whether rows, columns and hash all match, a printable report)."""
+    sdf = entry_mod.queries()[name](spark, sf_dir)
+    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    orel = con.execute(entry_mod.oracle_sql()[name])
+    ocols, orows = [d[0] for d in orel.description], orel.fetchall()
+    ok_rows = len(srows) == len(orows)
+    ok_cols = sorted(scols) == sorted(ocols)
+    ok_hash = ok_cols and value_hash(scols, srows) == value_hash(ocols, orows)
+    report = (
+        f"{name:28s} rows={len(srows):7d}/{len(orows):<7d} "
+        f"cols={'ok' if ok_cols else f'MISMATCH {scols} vs {ocols}'} "
+        f"hash={'ok' if ok_hash else 'MISMATCH'}"
+    )
+    if not ok_hash and ok_cols and len(srows) < 50:
+        report += f"\n  spark : {sorted(srows)[:5]}\n  oracle: {sorted(orows)[:5]}"
+    return ok_rows and ok_cols and ok_hash, report
+
+
+def main() -> int:
+    from metacheck_spark import get_spark
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+
+    con = oracle_connection(sf_dir)
     spark = get_spark(master="local[8]", shuffle_partitions=8)
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     failed = []
-    for name, fn in qs.items():
+    for name in entry_mod.queries():
         if only and name not in only:
             continue
-        sdf = fn(spark, sf_dir)
-        srows = [tuple(r) for r in sdf.collect()]
-        scols = sdf.columns
-        if name not in oracles:
-            print(f"{name:28s} rows={len(srows):7d} (rows-only, no oracle)")
-            continue
-        orel = con.execute(oracles[name])
-        ocols = [d[0] for d in orel.description]
-        orows = orel.fetchall()
-        ok_rows = len(srows) == len(orows)
-        ok_cols = sorted(scols) == sorted(ocols)
-        ok_hash = ok_cols and value_hash(scols, srows) == value_hash(ocols, orows)
-        ok = ok_rows and ok_cols and ok_hash
-        print(
-            f"{name:28s} rows={len(srows):7d}/{len(orows):<7d} "
-            f"cols={'ok' if ok_cols else f'MISMATCH {scols} vs {ocols}'} "
-            f"hash={'ok' if ok_hash else 'MISMATCH'}"
-        )
+        ok, report = compare_query(spark, con, name, sf_dir)
+        print(report)
         if not ok:
             failed.append(name)
-            if not ok_hash and ok_cols and len(srows) < 50:
-                print("  spark :", sorted(srows)[:5])
-                print("  oracle:", sorted(orows)[:5])
     spark.stop()
     if failed:
         print("FAILED:", failed)
