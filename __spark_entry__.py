@@ -16,6 +16,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from metacheck_spark.functions.text import (
     bpe_ish_count,
@@ -353,6 +354,53 @@ SELECT a AS id, min(b) AS cluster_id FROM reach GROUP BY a
 """
 
 
+def _drain_stream(
+    spark: SparkSession,
+    prefix: str,
+    write_source: Callable[[str], None],
+    schema: StructType | str,
+    transform: Callable[[DataFrame], DataFrame],
+    project: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Run a file-source stream to completion: `write_source` fills a temp
+    source dir, readStream reads it one file per micro-batch, `transform`
+    builds the streaming plan, Trigger.AvailableNow drains it into a
+    parquet sink, and the sink is read back through `project`.
+
+    Gate plumbing, not operator semantics: the drained sink is
+    re-materialized as a local frame so the three temp dirs (source,
+    sink, checkpoint) can be removed before returning — production leaves
+    the sink in place as the output table."""
+    import shutil
+    import tempfile
+
+    src, outd, ckpt = dirs = [
+        tempfile.mkdtemp(prefix=f"{prefix}_{d}_") for d in ("src", "out", "ckpt")
+    ]
+    try:
+        write_source(src)
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            transform(stream)
+            .writeStream.format("parquet")
+            .option("path", outd)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .outputMode("append")
+            .start()
+        )
+        q.awaitTermination()
+        sink = project(spark.read.parquet(outd))
+        return spark.createDataFrame(sink.toPandas(), schema=sink.schema)
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup through the REAL Structured Streaming path:
     the seeded-copies corpus written as a file source, read with
@@ -367,45 +415,23 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint are exact — and SQL-checkable (seeded copies are
     byte-identical, so min(text) per fingerprint group is THE text).
 
-    Gate plumbing, not operator semantics: the drained sink (500 rows at
-    gate scale) is re-materialized as a local frame so the three temp
-    dirs (source, sink, checkpoint) can be removed before returning —
-    production leaves the sink in place as the output table."""
-    import shutil
-    import tempfile
-
+    The drained sink is 500 rows at gate scale (see _drain_stream)."""
     from metacheck_spark.streaming.incremental import stateful_stream_dedup
 
     base = _with_exact_copies(spark, sf_dir).sort("doc_id").coalesce(1)
-    src = tempfile.mkdtemp(prefix="stream_src_")
-    outd = tempfile.mkdtemp(prefix="stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    try:
-        base.write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        flags = stream.select(
-            F.col("doc_id").cast("string").alias("image_id"),
-            F.col("text").alias("caption"),
-        )
-        q = (
-            stateful_stream_dedup(flags)
-            .writeStream.format("parquet")
-            .option("path", outd)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination()
-        pdf = spark.read.parquet(outd).select("fp", "caption").toPandas()
-        return spark.createDataFrame(pdf, schema="fp string, caption string")
-    finally:
-        for d in (src, outd, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+    return _drain_stream(
+        spark,
+        "stream",
+        lambda src: base.write.mode("overwrite").parquet(src),
+        base.schema,
+        lambda stream: stateful_stream_dedup(
+            stream.select(
+                F.col("doc_id").cast("string").alias("image_id"),
+                F.col("text").alias("caption"),
+            )
+        ),
+        lambda sink: sink.select("fp", "caption"),
+    )
 
 
 _STREAMING_DEDUP_SQL = f"""
@@ -447,56 +473,31 @@ def q_streaming_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     flushed are filtered back out of the drained sink. Tumbling windows
     over complete data are batch-equivalent, which is exactly what makes
     the result SQL-checkable against a DuckDB time_bucket oracle over the
-    same seeded events.
-
-    Same gate plumbing as q_streaming_dedup: the drained sink is
-    re-materialized so the temp dirs can be removed before returning."""
-    import shutil
-    import tempfile
+    same seeded events."""
+    from datetime import timedelta
 
     from metacheck_spark.streaming.incremental import windowed_hit_counts
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     flags = ev.select("ts", _seeded_hits_col().alias("rule_hits"))
-    src = tempfile.mkdtemp(prefix="streamw_src_")
-    outd = tempfile.mkdtemp(prefix="streamw_out_")
-    ckpt = tempfile.mkdtemp(prefix="streamw_ckpt_")
-    try:
+    schema = "ts timestamp, rule_hits array<string>"
+
+    def write_source(src: str) -> None:
         flags.coalesce(1).write.mode("overwrite").parquet(src)
         max_ts = ev.agg(F.max("ts")).head()[0]
         for days in (30, 60):  # two sentinel batches: advance + flush
             spark.createDataFrame(
-                [(max_ts + __import__("datetime").timedelta(days=days), ["SENTINEL"])],
-                schema="ts timestamp, rule_hits array<string>",
+                [(max_ts + timedelta(days=days), ["SENTINEL"])], schema=schema
             ).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema("ts timestamp, rule_hits array<string>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            windowed_hit_counts(stream)
-            .writeStream.format("parquet")
-            .option("path", outd)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination()
-        pdf = (
-            spark.read.parquet(outd)
-            .filter(F.col("code") != "SENTINEL")
-            .toPandas()
-        )
-        return spark.createDataFrame(
-            pdf,
-            schema="win_start timestamp, win_end timestamp, code string,"
-                   " count bigint",
-        )
-    finally:
-        for d in (src, outd, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+
+    return _drain_stream(
+        spark,
+        "streamw",
+        write_source,
+        schema,
+        windowed_hit_counts,
+        lambda sink: sink.filter(F.col("code") != "SENTINEL"),
+    )
 
 
 _STREAMING_WINDOWS_SQL = """
@@ -1131,8 +1132,8 @@ def q_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_summary_sql() -> str:
-    pit = [r for r in DUCKDB_SAFE if r.severity == "P"]
-    warn = [r for r in DUCKDB_SAFE if r.severity == "W"]
+    pit = [r for r in DUCKDB_SAFE if not r.code.startswith("W")]
+    warn = [r for r in DUCKDB_SAFE if r.code.startswith("W")]
     any_hit = " OR ".join(r.duckdb.format(c="caption") for r in DUCKDB_SAFE)
     any_pit = " OR ".join(r.duckdb.format(c="caption") for r in pit)
     n_pit = " + ".join(
@@ -1144,7 +1145,7 @@ def _quality_summary_sql() -> str:
     return f"""
 SELECT count(*) AS total_rows,
        count(CASE WHEN {any_hit} THEN 1 END) AS flagged_rows,
-       count(CASE WHEN NOT ({any_pit}) THEN 1 END) AS kept_rows,
+       count(CASE WHEN NOT coalesce(({any_pit}), FALSE) THEN 1 END) AS kept_rows,
        cast(sum({n_pit}) AS BIGINT) AS total_pitfalls,
        cast(sum({n_warn}) AS BIGINT) AS total_warnings
 FROM (SELECT {_seeded_caption_sql()} AS caption FROM documents)
@@ -1487,25 +1488,33 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # value-hash comparison works across engines.
 
 
+def _somef_entry(value, source, technique="code_parser", tag=None, name=None,
+                 version=None):
+    """One SoMEF entry struct (somef.ENTRY_DDL); a str argument becomes a
+    literal, None a null string."""
+    def c(x):
+        if x is None:
+            return F.lit(None).cast("string")
+        return x if isinstance(x, F.Column) else F.lit(x)
+
+    return F.struct(
+        F.lit(1.0).alias("confidence"),
+        c(technique).alias("technique"),
+        c(source).alias("source"),
+        F.struct(
+            F.lit("String").alias("type"),
+            c(value).alias("value"),
+            c(name).alias("name"),
+            c(tag).alias("tag"),
+            c(version).alias("version"),
+        ).alias("result"),
+    )
+
+
 def q_somef_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metacheck_spark.rules import somef as M
 
     d = _documents(spark, sf_dir).select("doc_id")
-
-    def entry(value, source, tag=None):
-        return F.struct(
-            F.lit(1.0).alias("confidence"),
-            F.lit("code_parser").alias("technique"),
-            F.lit(source).alias("source"),
-            F.struct(
-                F.lit("String").alias("type"),
-                value.alias("value"),
-                F.lit(None).cast("string").alias("name"),
-                (tag if tag is not None else F.lit(None).cast("string")).alias("tag"),
-                F.lit(None).cast("string").alias("version"),
-            ).alias("result"),
-        )
-
     did = F.col("doc_id")
     meta_v = F.concat(F.lit("v1."), (did % 5).cast("string"), F.lit(".0"))
     rel_tag = (
@@ -1514,23 +1523,18 @@ def q_somef_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pkg_v = F.when(did % 2 == 0, F.regexp_replace(meta_v, "^v", "")).otherwise(meta_v)
     version = F.array(
-        entry(meta_v, "codemeta.json"),
-        entry(pkg_v, "package.json"),
+        _somef_entry(meta_v, "codemeta.json"),
+        _somef_entry(pkg_v, "package.json"),
     )
-    entry_arr_t = (
-        "array<struct<confidence:double,technique:string,source:string,"
-        "result:struct<type:string,value:string,name:string,tag:string,"
-        "version:string>>>"
-    )
-    releases = F.when(did % 3 == 2, F.array().cast(entry_arr_t)).otherwise(
-        F.array(entry(F.lit(None).cast("string"), "GitHub_API", tag=rel_tag))
+    releases = F.when(did % 3 == 2, F.array().cast(f"array<{M.ENTRY_DDL}>")).otherwise(
+        F.array(_somef_entry(None, "GitHub_API", tag=rel_tag))
     )
     ident_v = (
         F.when(did % 4 == 0, F.lit("   "))
         .when(did % 4 == 1, F.lit(None).cast("string"))
         .otherwise(F.concat(F.lit("doi:10.1234/x"), did.cast("string")))
     )
-    identifier = F.array(entry(ident_v, "codemeta.json"))
+    identifier = F.array(_somef_entry(ident_v, "codemeta.json"))
 
     df = (
         d.withColumn("version", version)
@@ -1610,26 +1614,6 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _documents(spark, sf_dir).select("doc_id")
     did = F.col("doc_id")
 
-    def entry(value, source, technique="code_parser", tag=None, name=None,
-              version=None):
-        def c(x):
-            if x is None:
-                return F.lit(None).cast("string")
-            return x if isinstance(x, F.Column) else F.lit(x)
-
-        return F.struct(
-            F.lit(1.0).alias("confidence"),
-            c(technique).alias("technique"),
-            c(source).alias("source"),
-            F.struct(
-                F.lit("String").alias("type"),
-                c(value).alias("value"),
-                c(name).alias("name"),
-                c(tag).alias("tag"),
-                c(version).alias("version"),
-            ).alias("result"),
-        )
-
     arr_t = f"array<{M.ENTRY_DDL}>"
 
     # version + releases: the round-1 P001/P027 shapes
@@ -1639,9 +1623,11 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(did % 3 == 1, F.lit("2.0.0"))
     )
     pkg_v = F.when(did % 2 == 0, F.regexp_replace(meta_v, "^v", "")).otherwise(meta_v)
-    version = F.array(entry(meta_v, "codemeta.json"), entry(pkg_v, "package.json"))
+    version = F.array(
+        _somef_entry(meta_v, "codemeta.json"), _somef_entry(pkg_v, "package.json")
+    )
     releases = F.when(did % 3 == 2, F.array().cast(arr_t)).otherwise(
-        F.array(entry(None, "GitHub_API", technique="GitHub_API", tag=rel_tag))
+        F.array(_somef_entry(None, "GitHub_API", technique="GitHub_API", tag=rel_tag))
     )
 
     # identifier: W015 / P024 / W014 / P028 cases by doc_id % 6
@@ -1656,10 +1642,10 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     identifier = F.when(
         did % 6 == 3,
         F.array(
-            entry(F.lit("mytool"), "codemeta.json"),
-            entry(F.lit("10.1234/abc"), "zenodo.json"),
+            _somef_entry(F.lit("mytool"), "codemeta.json"),
+            _somef_entry(F.lit("10.1234/abc"), "zenodo.json"),
         ),
-    ).otherwise(F.array(entry(ident_v, "codemeta.json")))
+    ).otherwise(F.array(_somef_entry(ident_v, "codemeta.json")))
 
     # license: P002 / P017 / P022 / P008 cases by doc_id % 5
     lic_src = F.when(did % 5 < 2, F.lit("https://x/blob/main/LICENSE.md")).otherwise(
@@ -1675,7 +1661,7 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(did % 5 == 3, F.lit("./LICENSE.md"))
         .otherwise(F.lit("MIT"))
     )
-    license_ = F.array(entry(lic_v, lic_src, technique=lic_tech))
+    license_ = F.array(_somef_entry(lic_v, lic_src, technique=lic_tech))
 
     # authors: P005 / W021 / P011's CITATION.cff presence
     auth_src = F.when(did % 7 == 0, F.lit("CITATION.cff")).otherwise(
@@ -1686,7 +1672,7 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(did % 3 == 1, F.lit("The [red, fox] team"))
         .otherwise(F.lit("Alice"))
     )
-    authors = F.array(entry(auth_v, auth_src))
+    authors = F.array(_somef_entry(auth_v, auth_src))
 
     # requirements: W003 / W012
     req_v = (
@@ -1694,10 +1680,10 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(did % 3 == 1, F.lit("Numpy Pandas"))
         .otherwise(F.lit("numpy >= 1.4"))
     )
-    requirements = F.array(entry(req_v, "codemeta.json"))
+    requirements = F.array(_somef_entry(req_v, "codemeta.json"))
 
     readme_url = F.array(
-        entry(
+        _somef_entry(
             F.when(
                 did % 2 == 0, F.lit("https://proj.readthedocs.io/en/latest")
             ).otherwise(F.lit("https://raw.githubusercontent.com/o/r/README.md")),
@@ -1705,7 +1691,7 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     reference_publication = F.array(
-        entry(
+        _somef_entry(
             F.when(did % 2 == 0, F.lit("https://zenodo.org/record/9")).otherwise(
                 F.lit("https://doi.org/10.1/x")
             ),
@@ -1713,7 +1699,7 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     development_status = F.array(
-        entry(
+        _somef_entry(
             F.when(
                 did % 2 == 0, F.lit("https://www.repostatus.org/#active")
             ).otherwise(F.lit("active")),
@@ -1721,7 +1707,7 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     issues_url = F.array(
-        entry(
+        _somef_entry(
             F.when(did % 3 == 0, F.lit("https://x.org/issues  ")).otherwise(
                 F.lit("https://x.org/issues")
             ),
@@ -1737,8 +1723,8 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("https://github.com/o/r"))
     )
     code_repository = F.array(
-        entry(repo_v, "codemeta.json"),
-        entry(F.lit("https://github.com/o/r"), None, technique="GitHub_API"),
+        _somef_entry(repo_v, "codemeta.json"),
+        _somef_entry(F.lit("https://github.com/o/r"), None, technique="GitHub_API"),
     )
 
     # date_updated: W004 by doc_id % 3
@@ -1746,27 +1732,29 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             did % 3 == 0,
             F.array(
-                entry(F.lit("2024-03-10"), None, technique="GitHub_API"),
-                entry(F.lit("2024-03-01"), "codemeta.json"),
+                _somef_entry(F.lit("2024-03-10"), None, technique="GitHub_API"),
+                _somef_entry(F.lit("2024-03-01"), "codemeta.json"),
             ),
         )
         .when(
             did % 3 == 1,
             F.array(
-                entry(F.lit("2024-03-02"), None, technique="GitHub_API"),
-                entry(F.lit("2024-03-01"), "codemeta.json"),
+                _somef_entry(F.lit("2024-03-02"), None, technique="GitHub_API"),
+                _somef_entry(F.lit("2024-03-01"), "codemeta.json"),
             ),
         )
-        .otherwise(F.array(entry(F.lit("2024-03-05"), None, technique="GitHub_API")))
+        .otherwise(
+            F.array(_somef_entry(F.lit("2024-03-05"), None, technique="GitHub_API"))
+        )
     )
 
     download_url = F.when(
         did % 3 == 0,
-        F.array(entry(F.lit("https://x.org/archive/v2.0.0"), "codemeta.json")),
+        F.array(_somef_entry(F.lit("https://x.org/archive/v2.0.0"), "codemeta.json")),
     ).otherwise(F.array().cast(arr_t))
 
     programming_languages = F.array(
-        entry(
+        _somef_entry(
             F.lit("Python"), "codemeta.json", name=F.lit("Python"),
             version=F.when(did % 2 == 0, F.lit(None).cast("string")).otherwise(
                 F.lit("3.11")
@@ -1775,7 +1763,7 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     software_requirements = F.array(
-        entry(
+        _somef_entry(
             F.when(did % 3 == 0, F.lit("see https://gone.example.org/a")).otherwise(
                 F.lit("see https://moved.example.org/a")
             ),
@@ -1783,7 +1771,7 @@ def _nested_fixture_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     continuous_integration = F.array(
-        entry(
+        _somef_entry(
             F.when(did % 3 == 0, F.lit("https://moved.example.org/a"))
             .when(did % 3 == 1, F.lit("https://ok.example.org/a"))
             .otherwise(F.lit("not a url")),

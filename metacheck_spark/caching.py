@@ -65,11 +65,6 @@ class CacheRegistry:
         self._frames.append(df)
         return df
 
-    def adopt(self, df: DataFrame) -> DataFrame:
-        """Take ownership of an already-persisted frame."""
-        self._frames.append(df)
-        return df
-
     def adopt_checkpoint(self, df: DataFrame) -> DataFrame:
         """Take ownership of a localCheckpoint()ed frame. NOTE: releasing
         a checkpoint FREES its data — unlike a cache there is no

@@ -21,8 +21,20 @@ from metacheck_spark.operators.dedup import (
 )
 
 
-def _query_lit(query_vec: list[float]):
-    return F.array(*[F.lit(float(x)) for x in query_vec])
+def _topk(
+    df: DataFrame, query_vec: list[float], k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """The k rows of `df` with the highest cosine to the query (rounded to
+    6 places; ties by id) — the shared tail of every top-k search."""
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    return (
+        df.select(
+            F.col(id_col),
+            F.round(cosine(F.col(vec_col), q), 6).alias("cos"),
+        )
+        .orderBy(F.desc("cos"), F.col(id_col))
+        .limit(k)
+    )
 
 
 def cosine_topk(
@@ -32,15 +44,7 @@ def cosine_topk(
     """Brute-force cosine top-k — one narrow scan + a k-row total sort
     (Spark's TakeOrderedAndProject: per-partition top-k then a k-sized
     merge on the driver, no full sort/shuffle)."""
-    q = _query_lit(query_vec)
-    return (
-        df.select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.col(id_col))
-        .limit(k)
-    )
+    return _topk(df, query_vec, k, vec_col, id_col)
 
 
 def hyperplanes(dim: int, bits: int = 8, seed: int = 42) -> np.ndarray:
@@ -79,17 +83,10 @@ def lsh_topk(
     bucketed/partitioned by it, turning this into a single-partition scan."""
     planes = hyperplanes(len(query_vec), bits, seed)
     qsig = int(sum((1 << b) for b, p in enumerate(planes) if float(np.dot(p, query_vec)) > 0))
-    q = _query_lit(query_vec)
-    return (
-        df.withColumn("sig", signature_col(vec_col, planes))
-        .filter(F.col("sig") == qsig)
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.col(id_col))
-        .limit(k)
+    candidates = df.withColumn("sig", signature_col(vec_col, planes)).filter(
+        F.col("sig") == qsig
     )
+    return _topk(candidates, query_vec, k, vec_col, id_col)
 
 
 def signature_udf(planes: np.ndarray):
@@ -275,13 +272,5 @@ def ivf_topk(
     # stable descending sort: ties resolve to the lowest cluster index,
     # matching the SQL oracle's ORDER BY dot DESC, c
     probes = [int(c) for c in np.argsort(-(centroids @ q), kind="stable")[:nprobe]]
-    qlit = _query_lit(query_vec)
-    return (
-        df.filter(F.col(cluster_col).isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), qlit), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.col(id_col))
-        .limit(k)
-    )
+    probed = df.filter(F.col(cluster_col).isin(probes))
+    return _topk(probed, query_vec, k, vec_col, id_col)

@@ -2,7 +2,8 @@
 registry (/root/reference .../detect_pitfalls_main.py:262-290).
 
 Each rule is a pure per-row predicate. The reference implements them as 27
-hard-coded Python functions walking nested dicts; here each rule carries
+hard-coded Python functions walking nested dicts; here each rule is one
+``Rule`` row carrying
 
 * ``spark``  — a builder returning a native ``Column`` boolean (whole-stage
   codegen, zero Python in the hot path), parameterized on the caption
@@ -13,9 +14,16 @@ hard-coded Python functions walking nested dicts; here each rule carries
 * ``duckdb`` — a boolean SQL expression template (``{c}`` = column name)
   for the driver's DuckDB oracle where the pattern is RE2-expressible.
 
+Most caption rules are pure regex: "every one of these patterns matches
+and none of those does". ``_regex`` states such a rule once, as its two
+pattern lists, and builds both sides from them — the Spark predicate
+(Java regex via ``rlike``) and the Python oracle (``re``), which still
+evaluate the patterns independently. The rules with any other shape keep
+a hand-written builder and oracle.
+
 Registry order is semantic: the reference's summary arrays and per-repo
 ``checks`` arrays follow registry order (detect_pitfalls_main.py:306-311),
-so ``rule_hits`` arrays here are ordered by ``rank``.
+so ``rule_hits`` arrays here follow the order of ``REGISTRY``.
 
 Rules requiring relational context (URL-status broadcast lookup — P013/P025,
 reference p013.py/p025.py) or binary decode (P001/P019/X001) set
@@ -26,7 +34,7 @@ takes the shared context dict.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import Column
@@ -40,15 +48,12 @@ from metacheck_spark.functions.urlcheck import url_flags_one
 
 @dataclass(frozen=True)
 class Rule:
-    code: str
-    severity: str  # 'P' = pitfall (drop), 'W' = warning (record only)
-    category: str
+    code: str  # 'P…'/'X…' = pitfall (drop), 'W…' = warning (record only)
     description: str
     kind: str  # 'text' | 'binary' | 'url' | 'model'
     spark: Optional[Callable[[Column], Column]] = None  # caption col -> bool col
     py: Optional[Callable] = None  # text: (caption) -> bool; else (caption, ctx) -> bool
     duckdb: Optional[str] = None  # boolean SQL over {c}, RE2-safe
-    rank: int = field(default=-1)
 
 
 def _rx(pattern: str):
@@ -57,73 +62,28 @@ def _rx(pattern: str):
     return lambda s: s is not None and cre.search(s) is not None
 
 
-# --- text rules ------------------------------------------------------------
+def _regex(*all_of: str, none_of: tuple[str, ...] = ()):
+    """(spark, py) for a caption rule that fires when every ``all_of``
+    pattern matches and no ``none_of`` pattern does."""
 
-def _p002_spark(c: Column) -> Column:
-    return c.rlike(P.P002_PLACEHOLDER)
+    def spark(c: Column) -> Column:
+        cond = c.rlike(all_of[0])
+        for p in all_of[1:]:
+            cond = cond & c.rlike(p)
+        for n in none_of:
+            cond = cond & ~c.rlike(n)
+        return cond
 
+    must = [_rx(p) for p in all_of]
+    must_not = [_rx(n) for n in none_of]
 
-_p002_py = _rx(P.P002_PLACEHOLDER)
+    def py(s) -> bool:
+        return all(m(s) for m in must) and not any(n(s) for n in must_not)
 
-
-def _p005_spark(c: Column) -> Column:
-    return c.rlike(P.P005_MULTI_AUTHOR)
-
-
-_p005_py = _rx(P.P005_MULTI_AUTHOR)
-
-
-def _p006_spark(c: Column) -> Column:
-    return c.rlike(P.P006_HOMEPAGE_DOC_URL)
-
-
-_p006_py = _rx(P.P006_HOMEPAGE_DOC_URL)
+    return spark, py
 
 
-def _p007_spark(c: Column) -> Column:
-    return c.rlike(P.P007_ARCHIVE_URL)
-
-
-_p007_py = _rx(P.P007_ARCHIVE_URL)
-
-
-def _p008_spark(c: Column) -> Column:
-    return c.rlike(P.P008_LOCAL_LICENSE_PATH)
-
-
-_p008_py = _rx(P.P008_LOCAL_LICENSE_PATH)
-
-
-def _p011_spark(c: Column) -> Column:
-    # intra-row correlation: cite marker AND a URL present AND no DOI anywhere
-    # (reference p011.py correlates three categories within one document)
-    return (
-        c.rlike(P.P011_CITE_MARKER)
-        & c.rlike(P.URL_EXTRACT)
-        & ~c.rlike(P.DOI_ANYWHERE)
-    )
-
-
-_cite = _rx(P.P011_CITE_MARKER)
-_url = _rx(P.URL_EXTRACT)
-_doi = _rx(P.DOI_ANYWHERE)
-
-
-def _p011_py(s):
-    return _cite(s) and _url(s) and not _doi(s)
-
-
-def _p016_spark(c: Column) -> Column:
-    return c.rlike(P.P016_HOMEPAGE_URL) & ~c.rlike(P.REPO_HOST)
-
-
-_home = _rx(P.P016_HOMEPAGE_URL)
-_repo = _rx(P.REPO_HOST)
-
-
-def _p016_py(s):
-    return _home(s) and not _repo(s)
-
+# --- text rules that are not pure regex -----------------------------------
 
 def _p017_spark(c: Column) -> Column:
     # copyright marker, no license term, and short text (reference p017.py:74
@@ -159,13 +119,6 @@ def _p018_py(s):
     return s is not None and (_nl(s) or s != s.strip() or "  " in s)
 
 
-def _p020_spark(c: Column) -> Column:
-    return c.rlike(P.P020_BARE_URL)
-
-
-_p020_py = _rx(P.P020_BARE_URL)
-
-
 def _p022_spark(c: Column) -> Column:
     cond = F.lit(False)
     for present, versioned in P.P022_FAMILIES:
@@ -178,49 +131,6 @@ _p022_pairs = [(_rx(a), _rx(b)) for a, b in P.P022_FAMILIES]
 
 def _p022_py(s):
     return any(p(s) and not v(s) for p, v in _p022_pairs)
-
-
-def _p023_spark(c: Column) -> Column:
-    return c.rlike(P.P023_GIT_SHORTHAND) & ~c.rlike(r"(?i)https?://")
-
-
-_short = _rx(P.P023_GIT_SHORTHAND)
-_http = _rx(r"(?i)https?://")
-
-
-def _p023_py(s):
-    return _short(s) and not _http(s)
-
-
-def _p024_spark(c: Column) -> Column:
-    return c.rlike(P.P024_BARE_DOI) & ~c.rlike(P.DOI_URL)
-
-
-_bare_doi = _rx(P.P024_BARE_DOI)
-_doi_url = _rx(P.DOI_URL)
-
-
-def _p024_py(s):
-    return _bare_doi(s) and not _doi_url(s)
-
-
-def _p028_spark(c: Column) -> Column:
-    return c.rlike(P.P028_SWHID)
-
-
-_p028_py = _rx(P.P028_SWHID)
-
-
-def _w003_spark(c: Column) -> Column:
-    return c.rlike(P.W003_REQUIRES) & ~c.rlike(P.W003_REQUIRES_VERSIONED)
-
-
-_req = _rx(P.W003_REQUIRES)
-_req_v = _rx(P.W003_REQUIRES_VERSIONED)
-
-
-def _w003_py(s):
-    return _req(s) and not _req_v(s)
 
 
 def _extract_date(c: Column, marker_pattern: str) -> Column:
@@ -265,30 +175,13 @@ def _w004_py(s):
     return du is not None and dm is not None and (du.date() - dm.date()).days > 1
 
 
-def _w010_spark(c: Column) -> Column:
-    return c.rlike(P.W010_LANG) & ~c.rlike(P.W010_LANG_VERSIONED)
-
-
-_lang = _rx(P.W010_LANG)
-_lang_v = _rx(P.W010_LANG_VERSIONED)
-
-
-def _w010_py(s):
-    return _lang(s) and not _lang_v(s)
-
-
-def _w012_spark(c: Column) -> Column:
-    return c.rlike(P.W012_MULTI_DEP)
-
-
-_w012_py = _rx(P.W012_MULTI_DEP)
-
-
 def _w014_spark(c: Column) -> Column:
     return c.rlike(P.W014_NAME_ID) & (c.rlike(P.DOI_ANYWHERE) | c.rlike(P.DOI_URL))
 
 
 _name_id = _rx(P.W014_NAME_ID)
+_doi = _rx(P.DOI_ANYWHERE)
+_doi_url = _rx(P.DOI_URL)
 
 
 def _w014_py(s):
@@ -301,13 +194,6 @@ def _w015_spark(c: Column) -> Column:
 
 def _w015_py(s):
     return s is None or s.strip() == ""
-
-
-def _w021_spark(c: Column) -> Column:
-    return c.rlike(P.W021_BRACKET_LIST)
-
-
-_w021_py = _rx(P.W021_BRACKET_LIST)
 
 
 # --- binary / relational rule oracles (Spark side lives in pipeline.py) ----
@@ -385,70 +271,65 @@ def _x001_py(_s, ctx):
 # Registry, in the reference's registry order (detect_pitfalls_main.py:262-290)
 # with the three engine extensions (X001 decode, X002 langid, X003 ppl) last.
 
-_RULES = [
-    Rule("P001", "P", "sanity", "declared w/h mismatch vs image header dims", "binary", py=_p001_py),
-    Rule("P002", "P", "caption", "placeholder token in caption", "text", _p002_spark, _p002_py,
+REGISTRY: list[Rule] = [
+    Rule("P001", "declared w/h mismatch vs image header dims", "binary", py=_p001_py),
+    Rule("P002", "placeholder token in caption", "text", *_regex(P.P002_PLACEHOLDER),
          duckdb="regexp_matches(lower({c}), '(<year>|<program>|<name>|<owner>|<copyright holders?>|\\[year\\]|\\[fullname\\]|\\[name of copyright owner\\]|\\[yyyy\\])')"),
-    Rule("W003", "W", "caption", "requirement named without version constraint", "text", _w003_spark, _w003_py,
+    Rule("W003", "requirement named without version constraint", "text",
+         *_regex(P.W003_REQUIRES, none_of=(P.W003_REQUIRES_VERSIONED,)),
          duckdb="(regexp_matches(lower({c}), 'requires [a-z][a-z0-9_-]*') AND NOT regexp_matches(lower({c}), 'requires [a-z][a-z0-9_-]*\\s*(==|>=|<=|~=|!=|[><^~]|v?[0-9])'))"),
-    Rule("W004", "W", "caption", "updated timestamp >1 day after modified", "text", _w004_spark, _w004_py),
-    Rule("P005", "P", "caption", "multiple entities in credit segment", "text", _p005_spark, _p005_py),
-    Rule("P006", "P", "caption", "documentation/homepage URL where content link belongs", "text", _p006_spark, _p006_py,
+    Rule("W004", "updated timestamp >1 day after modified", "text", _w004_spark, _w004_py),
+    Rule("P005", "multiple entities in credit segment", "text", *_regex(P.P005_MULTI_AUTHOR)),
+    Rule("P006", "documentation/homepage URL where content link belongs", "text", *_regex(P.P006_HOMEPAGE_DOC_URL),
          duckdb="regexp_matches(lower({c}), '(https?://|www\\.)[^ ]*(readthedocs\\.io|github\\.io|/wiki|docs\\.|documentation)')"),
-    Rule("P007", "P", "caption", "software-archive URL in caption", "text", _p007_spark, _p007_py,
+    Rule("P007", "software-archive URL in caption", "text", *_regex(P.P007_ARCHIVE_URL),
          duckdb="regexp_matches(lower({c}), '(zenodo\\.org|figshare\\.com|sourceforge\\.net|archive\\.org|codeocean\\.com|osf\\.io|doi\\.org/10\\.5281|github\\.com/[^ ]+/releases)')"),
-    Rule("P008", "P", "caption", "local license-file path where URL belongs", "text", _p008_spark, _p008_py),
-    Rule("W010", "W", "caption", "language named without version", "text", _w010_spark, _w010_py,
+    Rule("P008", "local license-file path where URL belongs", "text", *_regex(P.P008_LOCAL_LICENSE_PATH)),
+    Rule("W010", "language named without version", "text",
+         *_regex(P.W010_LANG, none_of=(P.W010_LANG_VERSIONED,)),
          duckdb="(regexp_matches(lower({c}), 'written in (python|java|rust|c\\+\\+|ruby|go)') AND NOT regexp_matches(lower({c}), 'written in (python|java|rust|c\\+\\+|ruby|go) v?[0-9]'))"),
-    Rule("P011", "P", "caption", "citation requested, URL present, no DOI", "text", _p011_spark, _p011_py),
-    Rule("W012", "W", "caption", "multiple requirements packed in one string", "text", _w012_spark, _w012_py,
+    # intra-row correlation: cite marker AND a URL present AND no DOI anywhere
+    # (reference p011.py correlates three categories within one document)
+    Rule("P011", "citation requested, URL present, no DOI", "text",
+         *_regex(P.P011_CITE_MARKER, P.URL_EXTRACT, none_of=(P.DOI_ANYWHERE,))),
+    Rule("W012", "multiple requirements packed in one string", "text", *_regex(P.W012_MULTI_DEP),
          duckdb="regexp_matches({c}, 'deps:\\s*[A-Z][A-Za-z0-9._-]*(\\s[A-Z][A-Za-z0-9._-]*)+')"),
-    Rule("P013", "P", "url", "caption URL inaccessible (2xx∪301 accessible)", "url", py=_p013_py),
-    Rule("W014", "W", "caption", "name-like identifier while valid DOI present", "text", _w014_spark, _w014_py),
-    Rule("W015", "W", "caption", "caption empty or blank", "text", _w015_spark, _w015_py,
+    Rule("P013", "caption URL inaccessible (2xx∪301 accessible)", "url", py=_p013_py),
+    Rule("W014", "name-like identifier while valid DOI present", "text", _w014_spark, _w014_py),
+    Rule("W015", "caption empty or blank", "text", _w015_spark, _w015_py,
          duckdb="({c} IS NULL OR trim({c}) = '')"),
-    Rule("P016", "P", "caption", "homepage URL where repository link belongs", "text", _p016_spark, _p016_py),
-    Rule("P017", "P", "caption", "copyright-only short caption", "text", _p017_spark, _p017_py),
-    Rule("P018", "P", "caption", "malformed whitespace in caption", "text", _p018_spark, _p018_py,
+    Rule("P016", "homepage URL where repository link belongs", "text",
+         *_regex(P.P016_HOMEPAGE_URL, none_of=(P.REPO_HOST,))),
+    Rule("P017", "copyright-only short caption", "text", _p017_spark, _p017_py),
+    Rule("P018", "malformed whitespace in caption", "text", _p018_spark, _p018_py,
          duckdb="(regexp_matches({c}, '[\\n\\r]') OR {c} != trim({c}) OR contains({c}, '  '))"),
-    Rule("P019", "P", "sanity", "stored phash mismatch vs recomputed phash", "binary", py=_p019_py),
-    Rule("P020", "P", "caption", "caption is a bare URL", "text", _p020_spark, _p020_py,
+    Rule("P019", "stored phash mismatch vs recomputed phash", "binary", py=_p019_py),
+    Rule("P020", "caption is a bare URL", "text", *_regex(P.P020_BARE_URL),
          duckdb="regexp_matches(lower({c}), '^\\s*(https?://|www\\.)[^ ]+\\s*$')"),
-    Rule("W021", "W", "caption", "bracketed comma list in caption", "text", _w021_spark, _w021_py,
+    Rule("W021", "bracketed comma list in caption", "text", *_regex(P.W021_BRACKET_LIST),
          duckdb="regexp_matches({c}, '\\[[^\\]\\[]*,[^\\]\\[]*\\]')"),
-    Rule("P022", "P", "caption", "license family named without version", "text", _p022_spark, _p022_py),
-    Rule("P023", "P", "caption", "git-remote shorthand instead of URL", "text", _p023_spark, _p023_py),
-    Rule("P024", "P", "caption", "bare DOI instead of doi.org URL", "text", _p024_spark, _p024_py),
-    Rule("P025", "P", "url", "caption URL not strictly 2xx (301 rejected)", "url", py=_p025_py),
-    Rule("P026", "P", "sanity", "declared fmt mismatch vs magic bytes", "binary", py=_p026_py),
-    Rule("P027", "P", "caption", "version tokens differing only by v-prefix", "text", _p027_spark, _p027_py),
-    Rule("P028", "P", "caption", "raw SWHID in caption", "text", _p028_spark, _p028_py,
+    Rule("P022", "license family named without version", "text", _p022_spark, _p022_py),
+    Rule("P023", "git-remote shorthand instead of URL", "text",
+         *_regex(P.P023_GIT_SHORTHAND, none_of=(r"(?i)https?://",))),
+    Rule("P024", "bare DOI instead of doi.org URL", "text",
+         *_regex(P.P024_BARE_DOI, none_of=(P.DOI_URL,))),
+    Rule("P025", "caption URL not strictly 2xx (301 rejected)", "url", py=_p025_py),
+    Rule("P026", "declared fmt mismatch vs magic bytes", "binary", py=_p026_py),
+    Rule("P027", "version tokens differing only by v-prefix", "text", _p027_spark, _p027_py),
+    Rule("P028", "raw SWHID in caption", "text", *_regex(P.P028_SWHID),
          duckdb="regexp_matches({c}, '(^| )swh:1:[a-z]{{3}}:[0-9a-f]{{40}}($|[ .,;])')"),
-    Rule("X001", "P", "sanity", "image bytes fail to decode (engine extension)", "binary", py=_x001_py),
+    Rule("X001", "image bytes fail to decode (engine extension)", "binary", py=_x001_py),
     # Model-stage rules (engine extensions; the north_star's fastText-style
     # langid + KenLM-style perplexity scorer as drop criteria). Evaluated
     # from the lang/conf/ppl columns the pandas-UDF stage produces; the
     # oracle computes the same columns with the identical batch functions.
-    Rule("X002", "P", "model", "language unidentifiable (langid confidence below threshold)", "model",
+    Rule("X002", "language unidentifiable (langid confidence below threshold)", "model",
          py=lambda _s, ctx: ctx["lang"] == "und"),
-    Rule("X003", "P", "model", "caption log-perplexity above threshold", "model",
+    Rule("X003", "caption log-perplexity above threshold", "model",
          py=lambda _s, ctx: ctx["ppl"] > ctx["ppl_threshold"]),
-]
-
-REGISTRY: list[Rule] = [
-    Rule(r.code, r.severity, r.category, r.description, r.kind, r.spark, r.py, r.duckdb, rank=i)
-    for i, r in enumerate(_RULES)
 ]
 
 TEXT_RULES: list[Rule] = [r for r in REGISTRY if r.kind == "text"]
 # Rules whose predicate is RE2-expressible for the driver's DuckDB oracle
 DUCKDB_SAFE: list[Rule] = [r for r in REGISTRY if r.duckdb is not None]
 
-CODES = [r.code for r in REGISTRY]
-
-
-def rule_dim_rows() -> list[tuple]:
-    """Rows for the rule-metadata dimension table (schemas.RULE_DIM_SCHEMA) —
-    the analog of the reference's code->description/category mapping
-    (json_ld_utils.py:54-88,318-353)."""
-    return [(r.code, r.severity, r.category, r.description, r.rank) for r in REGISTRY]

@@ -33,16 +33,3 @@ URL_STATUS_SCHEMA = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
-
-# Rule metadata dimension (code -> severity/description/category), the
-# analog of the reference's registry + JSON-LD description tables
-# (detect_pitfalls_main.py:262-290, json_ld_utils.py:54-88,318-353).
-RULE_DIM_SCHEMA = T.StructType(
-    [
-        T.StructField("code", T.StringType(), False),
-        T.StructField("severity", T.StringType(), False),
-        T.StructField("category", T.StringType(), False),
-        T.StructField("description", T.StringType(), False),
-        T.StructField("rank", T.IntegerType(), False),
-    ]
-)

@@ -3,6 +3,7 @@ __spark_entry__.queries() entry against its oracle_sql() twin on DuckDB
 over the sf0.01 tables — row count, column names and value hash, through
 the same comparison `python tools/check_entry.py` prints."""
 
+import duckdb
 import pytest
 
 import __spark_entry__ as E
@@ -26,3 +27,25 @@ def test_every_query_has_an_oracle():
 def test_query_matches_oracle(spark, oracle, name):
     ok, report = compare_query(spark, oracle, name, SF)
     assert ok, report
+
+
+def test_quality_summary_counts_null_caption_kept(spark, tmp_path):
+    """A null caption abstains on every pitfall predicate, so the row is
+    kept in both engines. The sf tables hold no null text, so the gate
+    above cannot see this case."""
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT * FROM (VALUES (1::BIGINT, NULL::VARCHAR),"
+        " (2, 'a photo of a fox')) t(doc_id, text))"
+        f" TO '{tmp_path}/documents.parquet' (FORMAT parquet)"
+    )
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    ok, report = compare_query(spark, con, "quality_summary", str(tmp_path))
+    assert ok, report
+    # doc 1: null caption -> W015 only; doc 2 -> seeded W010 trigger
+    assert con.execute(E.oracle_sql()["quality_summary"]).fetchall() == [
+        (2, 2, 2, 0, 2)
+    ]
+    con.close()
