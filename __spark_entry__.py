@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -1307,18 +1307,27 @@ FROM rendered
 
 
 # ---------------------------------------------------------------------------
-# Pandas-UDF stages (langid / perplexity / scrub) and the flagship image
-# pipeline over a synthesized input slice — rows-only driver checks (the
-# models are not SQL-expressible); value parity vs the pure-Python oracle is
+# Pandas-UDF stages (langid / perplexity / scrub, each read from the
+# pipeline's one fused caption UDF) and the flagship image pipeline over a
+# synthesized input slice; value parity vs the pure-Python oracle is
 # asserted in tests/test_models.py and tests/test_pipeline.py.
 
 
-def q_langid_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from metacheck_spark.pipeline import langid_udf
+def _caption_stage(spark: SparkSession, text: Column) -> Column:
+    """The pipeline's fused caption UDF over `text`, with an empty
+    url_status dimension: the documents scorers read its `lang`/
+    `lang_conf`, `ppl` and `scrubbed` fields."""
+    from metacheck_spark.pipeline import make_caption_stage_udf
+    from metacheck_spark.schemas import URL_STATUS_SCHEMA
 
+    no_status = spark.createDataFrame([], URL_STATUS_SCHEMA)
+    return make_caption_stage_udf(spark, no_status)(text)
+
+
+def q_langid_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _documents(spark, sf_dir)
-        .withColumn("m", langid_udf(F.col("text")))
+        .withColumn("m", _caption_stage(spark, F.col("text")))
         .select("doc_id", "m.lang", F.round("m.lang_conf", 6).alias("lang_conf"))
     )
 
@@ -1361,10 +1370,9 @@ FROM s
 
 
 def q_ppl_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from metacheck_spark.pipeline import ppl_udf
-
     return _documents(spark, sf_dir).select(
-        "doc_id", F.round(ppl_udf(F.col("text")), 6).alias("ppl")
+        "doc_id",
+        F.round(_caption_stage(spark, F.col("text"))["ppl"], 6).alias("ppl"),
     )
 
 
@@ -1395,8 +1403,6 @@ FROM t CROSS JOIN m
 
 
 def q_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from metacheck_spark.pipeline import scrub_udf
-
     seeded = F.concat(
         F.col("text"),
         F.when(F.col("doc_id") % 4 == 0, F.lit(" contact bob@example.com"))
@@ -1405,7 +1411,7 @@ def q_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("")),
     )
     return _documents(spark, sf_dir).select(
-        "doc_id", scrub_udf(seeded).alias("scrubbed")
+        "doc_id", _caption_stage(spark, seeded)["scrubbed"].alias("scrubbed")
     )
 
 

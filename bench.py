@@ -114,15 +114,11 @@ def min_of_3(fn, spark) -> tuple[float, list[float]]:
 def bench_pipeline(spark) -> tuple[float, list[float], int]:
     """The flagship: full quality-filter pipeline (sanity + text rules +
     decode UDF + fused langid/ppl/URL/scrub caption UDF + audit)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     from metacheck_spark.pipeline import run_pipeline
-    from metacheck_spark.schemas import URL_STATUS_SCHEMA
 
     img_path = ensure_images(spark, IMAGES_ROWS)
     images = spark.read.parquet(img_path)
     url_status = spark.read.parquet(os.path.join(CACHE_DIR, "url_status"))
-    _ = URL_STATUS_SCHEMA  # keep import explicit for readers
 
     audit = run_pipeline(spark, images, url_status)
     # Warm with one FULL pass: the first execution pays python worker

@@ -23,18 +23,13 @@ from metacheck_spark.rules.registry import REGISTRY
 def label_row(
     row: dict,
     url_status: dict[str, int | None],
-    _model: tuple[str, float, float] | None = None,
+    model: tuple[str, float, float],
 ) -> dict:
-    """Golden labels for one images-table row. `_model` lets label_rows
-    pass batch-scored (lang, conf, ppl) — same functions, fewer Series."""
+    """Golden labels for one images-table row, given its batch-scored
+    (lang, conf, ppl) from label_rows."""
     b = row.get("bytes")
     arr = codec.decode(b)
-    if _model is None:
-        lang_s, conf_s = langid_batch(pd.Series([row.get("caption")]))
-        lang, conf = str(lang_s.iloc[0]), float(conf_s.iloc[0])
-        ppl = float(ppl_batch(pd.Series([row.get("caption")])).iloc[0])
-    else:
-        lang, conf, ppl = _model
+    lang, conf, ppl = model
     ctx = {
         "w": row.get("w"),
         "h": row.get("h"),

@@ -3,13 +3,17 @@ the correctness baseline; two scale paths — sign-LSH (random hyperplanes)
 bucketing, which shrinks the verify set to O(n / 2^bits) per query on
 roughly-uniform data, and an IVF index (kmeans-lite coarse quantizer +
 cluster-probed search), the standard shape when data is clustered.
+
+The sign-LSH signature has one definition, the numpy kernel `sign_bits`;
+`signature` applies it per Arrow batch, and `lsh_topk` signs its query
+with it directly.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from metacheck_spark.caching import persist_owned
@@ -52,25 +56,33 @@ def hyperplanes(dim: int, bits: int = 8, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((bits, dim))
 
 
-def signature_col(vec_col: str, planes: np.ndarray):
-    """Sign-LSH bucket id as a native expression: bit b set iff
-    dot(vec, plane_b) > 0. No UDF — bits x dim multiply-adds, codegen'd."""
-    bits = []
-    for b, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    out = bits[0]
-    for c in bits[1:]:
-        out = out + c
-    return out
+def sign_bits(x: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Sign-LSH signatures of the rows of `x`, one int64 each: bit b set
+    iff dot(row, plane_b) > 0. The one definition of the signature — the
+    Arrow UDF signs table rows with it and lsh_topk signs its query."""
+    dots = np.asarray(x, dtype=np.float64) @ np.asarray(planes, dtype=np.float64).T
+    return ((dots > 0).astype(np.int64) << np.arange(dots.shape[1])).sum(axis=1)
+
+
+def signature(vec_col: str, bits: int, seed: int = 42) -> Column:
+    """Sign-LSH signature column: an Arrow-batched pandas UDF, one numpy
+    matmul per batch against `hyperplanes(width, bits, seed)` for the
+    width of the batch's vectors. Plan size is constant at any bit count
+    and the Python boundary is crossed once per batch. A null vector signs
+    as 0; a batch of vectors of mixed width raises ValueError."""
+    if bits > 63:
+        raise ValueError("signature supports at most 63 bits (long)")
+
+    @F.pandas_udf("long")
+    def _sig(s: pd.Series) -> pd.Series:
+        present = s.notna().to_numpy()
+        out = np.zeros(len(s), dtype=np.int64)
+        if present.any():
+            x = np.array(s[present].tolist(), dtype=np.float64)
+            out[present] = sign_bits(x, hyperplanes(x.shape[1], bits, seed))
+        return pd.Series(out, index=s.index)
+
+    return _sig(F.col(vec_col))
 
 
 def lsh_topk(
@@ -78,53 +90,14 @@ def lsh_topk(
     vec_col: str = "embedding", id_col: str = "vec_id", seed: int = 42,
 ) -> DataFrame:
     """ANN top-k: restrict the brute-force scan to the query's LSH bucket.
-    Approximate — recall measured in tests/test_dedup_similarity.py. In
-    production the signature is precomputed at ingest and the table is
-    bucketed/partitioned by it, turning this into a single-partition scan."""
-    planes = hyperplanes(len(query_vec), bits, seed)
-    qsig = int(sum((1 << b) for b, p in enumerate(planes) if float(np.dot(p, query_vec)) > 0))
-    candidates = df.withColumn("sig", signature_col(vec_col, planes)).filter(
-        F.col("sig") == qsig
-    )
-    return _topk(candidates, query_vec, k, vec_col, id_col)
-
-
-def signature_udf(planes: np.ndarray):
-    """Sign-LSH signature as a vectorized pandas UDF — one numpy matmul
-    per Arrow batch against the (closure-small) plane matrix. The native
-    `signature_col` expression inlines bits x dim literal arrays into the
-    plan, which blows up codegen beyond ~8 bits; this path scales to 63
-    bits with constant plan size. Bit b set iff dot(vec, plane_b) > 0 —
-    identical semantics to signature_col (asserted in tests)."""
-    if len(planes) > 63:
-        raise ValueError("signature_udf supports at most 63 bits (long)")
-    P = np.asarray(planes, dtype=np.float64)
-
-    @F.pandas_udf("long")
-    def _sig(s: pd.Series) -> pd.Series:
-        # null vectors -> all-zero rows -> signature 0, matching the
-        # native signature_col path (when(null > 0) falls to otherwise(0))
-        x = np.array(
-            [list(v) if v is not None else [0.0] * P.shape[1] for v in s],
-            dtype=np.float64,
-        )
-        if x.size == 0:
-            return pd.Series(np.zeros(len(s), dtype=np.int64), index=s.index)
-        bits = (x @ P.T) > 0
-        weights = 1 << np.arange(P.shape[0], dtype=np.uint64)
-        sig = (bits.astype(np.uint64) * weights).sum(axis=1, dtype=np.uint64)
-        return pd.Series(sig.view(np.int64), index=s.index)
-
-    return _sig
-
-
-def signature(vec_col: str, planes: np.ndarray):
-    """Signature column, picking the native expression for <= 8 bits and
-    the Arrow-batched UDF beyond (the expression inlines bits x dim
-    literals; fine small, quadratic plan text at high bits)."""
-    if len(planes) <= 8:
-        return signature_col(vec_col, planes)
-    return signature_udf(planes)(F.col(vec_col))
+    The rows and the query are signed by the same `sign_bits` against the
+    same seeded planes. Approximate — recall measured in
+    tests/test_dedup_similarity.py. In production the signature is
+    precomputed at ingest and the table is bucketed/partitioned by it,
+    turning this into a single-partition scan."""
+    sig = signature(vec_col, bits, seed)
+    qsig = int(sign_bits([query_vec], hyperplanes(len(query_vec), bits, seed))[0])
+    return _topk(df.filter(sig == qsig), query_vec, k, vec_col, id_col)
 
 
 def embedding_dup_pairs_bucketed(
@@ -134,7 +107,6 @@ def embedding_dup_pairs_bucketed(
     threshold: float = 0.95,
     bits: int = 16,
     bands: int = 4,
-    dim: int | None = None,
     seed: int = 42,
     max_bucket: int = 1000,
     caches=None,
@@ -150,24 +122,17 @@ def embedding_dup_pairs_bucketed(
     bucket regime candidates are star pairs around the hub, so a copy
     pair hiding behind a non-duplicate hub in EVERY shared bucket would
     be missed (same honest boilerplate-cluster framing as
-    bucketed_candidate_pairs)."""
+    bucketed_candidate_pairs). The signature UDF reads the vector width
+    from each Arrow batch, so no job runs before the caller's action and
+    an empty input gives an empty pair frame."""
     assert bits % bands == 0, "bits must divide into equal bands"
-    if dim is None:
-        head = df.select(F.size(vec_col)).limit(1).collect()
-        if not head:
-            return df.sparkSession.createDataFrame(
-                [], f"id_a {df.schema[id_col].dataType.simpleString()},"
-                    f" id_b {df.schema[id_col].dataType.simpleString()}, cos double"
-            )
-        dim = head[0][0]
-    planes = hyperplanes(dim, bits, seed)
     v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     # cache ownership: the signature frame feeds banding AND the two
     # verify joins; it must stay persisted until the caller's action runs
     # (the returned plan is lazy). Pass a CacheRegistry as `caches` to
     # release it afterwards; without one it stays persisted after return
     # (bench.py's clearCache-per-pass discipline handles that there).
-    sig = persist_owned(v.withColumn("sig", signature("v", planes)), caches)
+    sig = persist_owned(v.withColumn("sig", signature("v", bits, seed)), caches)
     cands = bucketed_candidate_pairs(
         bit_bands(sig, bands, bits // bands), max_bucket=max_bucket
     )

@@ -141,7 +141,9 @@ def sanity_rule_flags() -> dict[str, Column]:
 
 
 # ---------------------------------------------------------------------------
-# stages 3+5+7: the fused caption stage (URL checks, langid, ppl, scrub)
+# stages 3+5+7: the fused caption stage (URL checks, langid, ppl, scrub) —
+# the one caption-text path; the documents scorers in __spark_entry__
+# (q_langid_docs, q_ppl_docs, q_scrub_docs) read its fields too
 
 _CAPTION_STAGE_T = T.StructType(
     [
@@ -208,12 +210,6 @@ _DECODE_T = T.StructType(
         T.StructField("phash_calc", T.LongType()),
     ]
 )
-_MODEL_T = T.StructType(
-    [
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_conf", T.DoubleType()),
-    ]
-)
 
 
 @F.pandas_udf(_DECODE_T)
@@ -237,28 +233,6 @@ def decode_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(
             {"decoded_ok": oks, "phash_calc": pd.array(phs, dtype="Int64")}
         )
-
-
-# ---------------------------------------------------------------------------
-# standalone caption scorers for the documents queries (__spark_entry__
-# q_langid_docs / q_ppl_docs / q_scrub_docs); the pipeline uses the fused
-# caption stage above. Shared batch functions => oracle parity is exact.
-
-
-@F.pandas_udf(_MODEL_T)
-def langid_udf(s: pd.Series) -> pd.DataFrame:
-    lang, conf = langid_batch(s)
-    return pd.DataFrame({"lang": lang, "lang_conf": conf})
-
-
-@F.pandas_udf(T.DoubleType())
-def ppl_udf(s: pd.Series) -> pd.Series:
-    return ppl_batch(s)
-
-
-@F.pandas_udf(T.StringType())
-def scrub_udf(s: pd.Series) -> pd.Series:
-    return scrub_batch(s)
 
 
 # ---------------------------------------------------------------------------

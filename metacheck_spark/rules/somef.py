@@ -1103,14 +1103,11 @@ def entry_urls(e: Column) -> Column:
     )
 
 
-def url_accessible(u: Column, status_map: Column, *ok) -> Column:
+def url_accessible(u: Column, status_map: Column, ok) -> Column:
     """`u` is a valid http(s) URL whose frozen status is known and passes
-    every `ok` test, each ANDed on in turn."""
+    the `ok` test."""
     s = status_map[F.trim(u)]
-    cond = u.rlike(r"^(?i)https?://[^/\s]+") & s.isNotNull()
-    for test in ok:
-        cond = cond & test(s)
-    return cond
+    return u.rlike(r"^(?i)https?://[^/\s]+") & s.isNotNull() & ok(s)
 
 
 def p013_url_bad(u: Column, status_map: Column) -> Column:
@@ -1130,13 +1127,15 @@ def p013_inaccessible_requirement(sw_req_cat: Column, status_map: Column) -> Col
     )
 
 
+def p025_fires(e: Column, status_map: Column) -> Column:
+    return e["result"]["value"].isNotNull() & ~url_accessible(
+        e["result"]["value"], status_map, lambda s: (s >= 200) & (s < 300)
+    )
+
+
 def p025_inaccessible_ci(ci_cat: Column, status_map: Column) -> Column:
     return F.exists(
-        codemeta_or_entries(ci_cat),
-        lambda e: e["result"]["value"].isNotNull()
-        & ~url_accessible(
-            e["result"]["value"], status_map, lambda s: (s >= 200) & (s < 300)
-        ),
+        codemeta_or_entries(ci_cat), lambda e: p025_fires(e, status_map)
     )
 
 
@@ -1175,25 +1174,12 @@ SELECTORS: dict[str, tuple[str, Callable[[Column], Column], Callable[[Column], C
 }
 
 
-def _scan_rule(code: str, form: str = "exists"):
-    """FLAG_RULES entry of SELECTORS rule `code`. The forms differ in plan
-    shape only — a null fire reads as not-fired under nested_rule_flags'
-    coalesce either way: 'value' coalesces inside the scan, 'unfiltered'
-    tests the entry predicate inside exists() (p008.py:63-77's single
-    loop), 'crash' is crash_aware_exists (P016)."""
+def _scan_rule(code: str):
+    """FLAG_RULES entry of SELECTORS rule `code`: does any qualifying
+    entry fire? A null fire reads as not-fired under nested_rule_flags'
+    coalesce."""
     category, qualifies, fires = SELECTORS[code]
-
-    def build(cat: Column) -> Column:
-        if form == "unfiltered":
-            return F.exists(cat, lambda e: qualifies(e) & fires(e))
-        entries = F.filter(cat, qualifies)
-        if form == "crash":
-            return crash_aware_exists(entries, fires)
-        if form == "value":
-            return F.exists(entries, lambda e: F.coalesce(fires(e), F.lit(False)))
-        return F.exists(entries, fires)
-
-    return (category,), build
+    return (category,), lambda cat: F.exists(F.filter(cat, qualifies), fires)
 
 
 # Pseudo-inputs of FLAG_RULES besides the category columns: the frozen
@@ -1211,9 +1197,9 @@ FLAG_RULES: dict[str, tuple[tuple[str, ...], Callable[..., Column]]] = {
     "W003": (("requirements",), w003_unversioned_requirement),
     "W004": (("date_updated",), w004_stale_vs_codemeta),
     "P005": _scan_rule("P005"),
-    "P006": _scan_rule("P006", "value"),
-    "P007": _scan_rule("P007", "value"),
-    "P008": _scan_rule("P008", "unfiltered"),
+    "P006": _scan_rule("P006"),
+    "P007": _scan_rule("P007"),
+    "P008": _scan_rule("P008"),
     "W010": _scan_rule("W010"),
     "P011": (("reference_publication", CITATION_SOURCES),
              p011_citation_missing_reference),
@@ -1221,19 +1207,21 @@ FLAG_RULES: dict[str, tuple[tuple[str, ...], Callable[..., Column]]] = {
     "P013": (("software_requirements", URL_STATUS), p013_inaccessible_requirement),
     "W014": (("identifier",), w014_name_id_while_valid_exists),
     "W015": (("identifier",), w015_empty_identifier),
-    "P016": _scan_rule("P016", "crash"),
+    # a structured value aborts the reference's scan (crash_aware_exists)
+    "P016": (("code_repository",),
+             lambda cat: crash_aware_exists(F.filter(cat, _p016_qualifies), _p016_fires)),
     "P017": (("license",), p017_flag),
-    "P018": _scan_rule("P018", "value"),
+    "P018": _scan_rule("P018"),
     "P019": (("download_url", "releases"), p019_download_url_version_mismatch),
-    "P020": _scan_rule("P020", "value"),
+    "P020": _scan_rule("P020"),
     "W021": _scan_rule("W021"),
     "P022": _scan_rule("P022"),
-    "P023": _scan_rule("P023", "value"),
-    "P024": _scan_rule("P024", "value"),
+    "P023": _scan_rule("P023"),
+    "P024": _scan_rule("P024"),
     "P025": (("continuous_integration", URL_STATUS), p025_inaccessible_ci),
     "P026": (("code_repository",), p026_repo_mismatch),
     "P027": (("version",), p027_codemeta_version_mismatch),
-    "P028": _scan_rule("P028", "value"),
+    "P028": _scan_rule("P028"),
 }
 
 

@@ -300,14 +300,9 @@ def evidence_columns(
                 smap[F.trim(u)].cast("string"),
             ).otherwise(F.lit("unknown"))
 
-        # Not M.p025_inaccessible_ci's fires: the flag tests 2xx as one
-        # conjunct, this selector as two, and the plans print them apart.
         p025_sel = _first_firing(
             M.codemeta_or_entries(cols("continuous_integration")),
-            lambda e: e["result"]["value"].isNotNull()
-            & ~M.url_accessible(
-                e["result"]["value"], smap, lambda s: s >= 200, lambda s: s < 300
-            ),
+            lambda e: M.p025_fires(e, smap),
         )
         lvl1["_evs_p025"] = guard("P025", p025_sel)
         lvl2["_evd_p025_status"] = _ci_status(cols("_evs_p025"))

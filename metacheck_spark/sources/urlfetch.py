@@ -33,19 +33,11 @@ from typing import Callable, Iterator, Optional, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from metacheck_spark.functions import patterns as P
+from metacheck_spark.schemas import URL_STATUS_SCHEMA
 
 Fetcher = Callable[[str], Tuple[Optional[int], Optional[str]]]
-
-URL_STATUS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("status_code", T.IntegerType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
 
 
 def distinct_urls(df: DataFrame, caption_col: str = "caption") -> DataFrame:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metacheck_spark.operators.dedup import normalized_text
 from metacheck_spark.pipeline import assemble_flags, with_labels
 from metacheck_spark.schemas import IMAGES_SCHEMA
 
@@ -74,9 +75,7 @@ def stateful_stream_dedup(flags_stream: DataFrame) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    keyed = flags_stream.withColumn(
-        "fp", F.md5(F.trim(F.regexp_replace(F.lower("caption"), r"\s+", " ")))
-    )
+    keyed = flags_stream.withColumn("fp", F.md5(normalized_text(F.col("caption"))))
 
     out_schema = "fp string, image_id string, caption string"
     state_schema = "seen boolean"

@@ -140,24 +140,69 @@ def test_oversized_bucket_star_routing(spark):
     assert m["star_routed_ids"] == 19  # hub excluded — it emits no pair row
 
 
-def test_signature_udf_matches_native_expr(spark):
-    """The Arrow-batched sign-LSH signature (bits>8 path) must agree
-    bit-for-bit with the native expression at bits<=8."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(64)
-    dim = len(emb.head()["embedding"])
-    planes = S.hyperplanes(dim, bits=8)
-    both = emb.select(
-        "vec_id",
-        S.signature_col("embedding", planes).alias("native"),
-        S.signature_udf(planes)(F.col("embedding")).alias("udf"),
-    ).collect()
-    assert all(r["native"] == r["udf"] for r in both)
+@pytest.mark.parametrize("bits", [6, 16])
+def test_signature_matches_per_row_reference(spark, bits):
+    """The Arrow UDF `signature` and the numpy kernel `sign_bits` agree
+    with a plain-Python per-row reference — bit b iff sum(v_i * p_i) > 0
+    — and a null vector signs as 0."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    df = emb.filter(F.col("vec_id") < 64).unionAll(
+        spark.createDataFrame([(-1, None)], emb.schema)
+    )
+    vecs = {r["vec_id"]: r["embedding"] for r in df.collect()}
+    planes = S.hyperplanes(len(vecs[0]), bits)
+
+    def reference(v):
+        if v is None:
+            return 0
+        return sum(
+            1 << b
+            for b, p in enumerate(planes)
+            if sum(x * y for x, y in zip(v, p)) > 0
+        )
+
+    want = {i: reference(v) for i, v in vecs.items()}
+    got = df.select("vec_id", S.signature("embedding", bits).alias("sig"))
+    assert {r["vec_id"]: r["sig"] for r in got.collect()} == want
+    assert want[-1] == 0 and len(set(want.values())) > 1
+    ids = [i for i in vecs if vecs[i] is not None]
+    kernel = S.sign_bits([vecs[i] for i in ids], planes)
+    assert [int(s) for s in kernel] == [want[i] for i in ids]
+
+
+def test_signature_rejects_more_than_63_bits():
+    with pytest.raises(ValueError):
+        S.signature("embedding", 64)
+
+
+def test_embedding_dup_bucketed_lazy_and_empty_input(spark):
+    """Building the pair frame runs no Spark job (no probe of the vector
+    width), and an empty input gives an empty pair frame of the usual
+    schema."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("embedding_dup_build", "plan building only")
+    try:
+        S.embedding_dup_pairs_bucketed(emb, "embedding", "vec_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("embedding_dup_build") == []
+    pairs = S.embedding_dup_pairs_bucketed(
+        emb.filter(F.col("vec_id") < 0), "embedding", "vec_id"
+    )
+    assert pairs.schema.simpleString() == (
+        "struct<id_a:bigint,id_b:bigint,cos:double>"
+    )
+    assert pairs.count() == 0
 
 
 def test_embedding_dup_bucketed_no_cross_join(spark):
     """The bucketed embedding near-dup must find all seeded copies with
-    NO cartesian/nested-loop join in the physical plan, at bits=16 (the
-    UDF signature path)."""
+    NO cartesian/nested-loop join in the physical plan, at bits=16."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "vec_id", "embedding"
     )

@@ -3,11 +3,14 @@ __spark_entry__.queries() entry against its oracle_sql() twin on DuckDB
 over the sf0.01 tables — row count, column names and value hash, through
 the same comparison `python tools/check_entry.py` prints."""
 
+import sys
+
 import duckdb
 import pytest
 
 import __spark_entry__ as E
-from tools.check_entry import compare_query, oracle_connection
+import metacheck_spark
+from tools.check_entry import compare_query, main, oracle_connection
 
 SF = "/root/testdata/sf0.01"
 
@@ -49,3 +52,16 @@ def test_quality_summary_counts_null_caption_kept(spark, tmp_path):
         (2, 2, 2, 0, 2)
     ]
     con.close()
+
+
+def test_check_entry_rejects_unknown_query_names(monkeypatch, capsys):
+    """A mistyped query name fails the tool before any session starts,
+    instead of checking nothing and passing."""
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("check_entry started a Spark session")
+
+    monkeypatch.setattr(metacheck_spark, "get_spark", no_session)
+    monkeypatch.setattr(sys, "argv", ["check_entry.py", SF, "no_such_query"])
+    assert main() != 0
+    assert "no_such_query" in capsys.readouterr().out

@@ -85,6 +85,10 @@ def main() -> int:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    unknown = sorted(only - set(entry_mod.queries()))
+    if unknown:
+        print("unknown queries:", ", ".join(unknown))
+        return 2
 
     con = oracle_connection(sf_dir)
     spark = get_spark(master="local[8]", shuffle_partitions=8)
