@@ -404,10 +404,11 @@ def _drain_stream(
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup through the REAL Structured Streaming path:
     the seeded-copies corpus written as a file source, read with
-    readStream, deduplicated by the applyInPandasWithState operator
-    (streaming/incremental.py — first arrival per fingerprint wins,
-    exactly-once across micro-batches), drained with Trigger.AvailableNow
-    into a parquet sink, then read back as a batch frame.
+    readStream, deduplicated by the native streaming dropDuplicates on
+    the fingerprint (streaming/incremental.py — first arrival per
+    fingerprint wins, exactly-once across micro-batches), drained with
+    Trigger.AvailableNow into a parquet sink, then read back as a batch
+    frame.
 
     The output surface is (fp, caption): which duplicate's doc_id
     survives depends on arrival order inside the shuffle (legitimately

@@ -286,31 +286,42 @@ def _expand_buckets(sized: DataFrame, key: list[str], max_bucket: int) -> DataFr
     collect_lists ids, which would blow the aggregation buffer on a
     10^7-id bucket), and preserves cluster connectivity — downstream
     verification confirms each member against the hub, which is exactly
-    what dedup needs from a boilerplate cluster. The small-bucket groupBy
-    reuses the window's exchange."""
-    small = (
-        sized.filter(F.col("bsz") <= max_bucket)
-        .groupBy(*key)
+    what dedup needs from a boilerplate cluster.
+
+    Both routes are one aggregate over the window's frame, keyed by
+    (key, hub, star): `star` is null for a small bucket, so the bucket is
+    one group, and is the id itself in an oversized one, so each non-hub
+    id is a group of its own. The window's hash partitioning on `key`
+    already clusters those keys, so the aggregate adds no exchange."""
+    big = F.col("bsz") > max_bucket
+    hub_star = F.array(
+        F.struct(F.col("hub").alias("id_a"), F.col("star").alias("id_b"))
+    )
+    return (
+        sized.filter(~big | (F.col("id") != F.col("hub")))
+        .groupBy(*key, "hub", F.when(big, F.col("id")).alias("star"))
         # sort ONCE in the aggregate: _bucket_pairs requires a bound
         # pre-sorted column (see its precondition note)
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
+        .select(
+            F.explode(
+                F.when(F.col("star").isNull(), _bucket_pairs(F.col("ids")))
+                .otherwise(hub_star)
+            ).alias("p")
+        )
         .select("p.id_a", "p.id_b")
     )
-    star = sized.filter(
-        (F.col("bsz") > max_bucket) & (F.col("id") != F.col("hub"))
-    ).select(F.col("hub").alias("id_a"), F.col("id").alias("id_b"))
-    return small.unionAll(star)
 
 
 def bucketed_candidate_pairs(
     banded: DataFrame, max_bucket: int = 1000, observation=None
 ) -> DataFrame:
     """(id_a, id_b) candidates from a (id, band, band_sig) frame — the
-    canonical LSH shape: shuffle on the bucket key + in-bucket pair
-    expansion (_expand_buckets, star-routed above max_bucket), instead of
-    a self-join that executes the upstream signature plan twice. A pair
-    sharing several bands appears once.
+    canonical LSH shape: one shuffle on the bucket key, then the size
+    window (_bucket_sizes) and the in-bucket pair expansion
+    (_expand_buckets, star-routed above max_bucket) over that one frame,
+    so the upstream signature plan runs once. A pair sharing several
+    bands appears once.
 
     Pass a pyspark.sql.Observation as `observation` to collect routing
     metrics (bucket count, max size, ids routed via star) with the action.
@@ -335,28 +346,36 @@ def bucketed_candidate_pairs(
     return _expand_buckets(sized, key, max_bucket).distinct()
 
 
+def _band_rows(sigs: DataFrame, band_keys: list[Column]) -> DataFrame:
+    """(id, band, band_sig) rows from an (id, ...) frame: band b's bucket
+    key is band_keys[b]. One explode of a literal array of structs — no
+    lambda, so the keys stay in whole-stage codegen."""
+    return sigs.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), k.alias("band_sig"))
+                    for b, k in enumerate(band_keys)
+                ]
+            )
+        ).alias("bv"),
+    ).select("id", "bv.band", "bv.band_sig")
+
+
 def bit_bands(sigs: DataFrame, bands: int, band_bits: int) -> DataFrame:
     """(id, band, band_sig) rows from an (id, sig: bigint) frame: band b
     is the band_bits-wide slice of the signature starting at bit
     b * band_bits. Pigeonhole: two signatures differing in fewer than
     `bands` bits agree on at least one whole band."""
     mask = (1 << band_bits) - 1
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("sig"), b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_sig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("id", "bv.band", "bv.band_sig")
+    return _band_rows(
+        sigs,
+        [
+            F.shiftrightunsigned(F.col("sig"), b * band_bits).bitwiseAND(F.lit(mask))
+            for b in range(bands)
+        ],
+    )
 
 
 def verify_pairs(
@@ -398,24 +417,13 @@ def minhash_lsh_candidates(
     metrics (n_buckets / max_bucket_size / star_routed_ids) with the
     first action — the measurement surface for the adversarial
     mega-bucket gate (tests/test_megabucket.py)."""
-    rows_per_band = num_hashes // bands
     sh = minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_n, num_partitions=num_partitions
     )
-    banded = sh.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-                    ).alias("band_sig"),
-                ),
-            )
-        ).alias("bs"),
-    ).select("id", "bs.band", "bs.band_sig")
+    r = num_hashes // bands
+    banded = _band_rows(
+        sh, [F.xxhash64(F.slice(F.col("sig"), b * r + 1, r)) for b in range(bands)]
+    )
     return bucketed_candidate_pairs(banded, observation=observation)
 
 
@@ -433,12 +441,12 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard — the standard
     minhash-LSH near-dup pipeline (shingle -> minhash -> band -> bucket
-    join -> verify). Pass a CacheRegistry as `caches` to own the release
+    expansion -> verify). Pass a CacheRegistry as `caches` to own the release
     of the persisted candidate and candidate-shingle frames (caching.py)."""
     # Persist the candidate pairs: they feed two verification joins, and
-    # without materialization each join re-executes the whole banded
-    # self-join subplan (and its upstream signature aggregation) — the
-    # standard LSH shape is generate-candidates once, then verify.
+    # without materialization each join re-executes the whole banding and
+    # bucket-expansion subplan (and its upstream signature aggregation) —
+    # the standard LSH shape is generate-candidates once, then verify.
     cands = persist_owned(
         minhash_lsh_candidates(
             df, text_col, id_col, num_hashes, bands, shingle_n,

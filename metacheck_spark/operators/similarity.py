@@ -114,7 +114,7 @@ def embedding_dup_pairs_bucketed(
     """Embedding-cosine near-dup at scale: sign-LSH banding for candidate
     generation (pairs sharing ANY band of the signature — multi-band
     boosts recall for pairs straddling a single hyperplane), exact cosine
-    verification. Reuses the LSH bucket-join machinery of
+    verification. Reuses the LSH bucket machinery of
     operators/dedup.py — one narrow shuffle per band, never O(n^2).
     Exact duplicates always share every band, so recall on true copies
     is 1.0 whenever at least one shared bucket is <= max_bucket or the

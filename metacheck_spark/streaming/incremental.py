@@ -64,41 +64,17 @@ def run_available_now(
 
 
 def stateful_stream_dedup(flags_stream: DataFrame) -> DataFrame:
-    """Custom stateful operator: exactly-once emission of each distinct
-    caption fingerprint across micro-batches via applyInPandasWithState —
-    a streaming exact-dedup (first arrival wins, later copies suppressed).
+    """Streaming exact-dedup: each distinct caption fingerprint is emitted
+    once across micro-batches (first arrival wins, later copies are
+    suppressed), by Spark's native stateful dropDuplicates on `fp`.
 
-    State per key is one boolean; with GroupStateTimeout the state store
-    stays bounded. This is the applyInPandasWithState pattern for operators
-    Spark lacks natively (SURVEY.md §2.8 tier 3).
+    The state is NOT bounded: with no watermark, the dedup state keeps
+    one row per distinct fingerprint for the life of the checkpoint. A
+    stream with an event-time column could bound it with withWatermark +
+    dropDuplicatesWithinWatermark; no caller's stream has one.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     keyed = flags_stream.withColumn("fp", F.md5(normalized_text(F.col("caption"))))
-
-    out_schema = "fp string, image_id string, caption string"
-    state_schema = "seen boolean"
-
-    def dedup_fn(key, pdf_iter, state):
-        if state.exists:
-            return iter(())
-        first = None
-        for pdf in pdf_iter:
-            if len(pdf) and first is None:
-                first = pdf.iloc[[0]][["fp", "image_id", "caption"]]
-        state.update((True,))
-        if first is None:
-            return iter(())
-        return iter([pd.DataFrame(first)])
-
-    return keyed.groupBy("fp").applyInPandasWithState(
-        dedup_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed.dropDuplicates(["fp"]).select("fp", "image_id", "caption")
 
 
 def windowed_hit_counts(

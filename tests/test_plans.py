@@ -178,8 +178,51 @@ def test_winnow_single_arrow_crossing(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(50)
     plan = _plan(winnow_fingerprints(docs, "text", "doc_id"))
     assert plan.count("ArrowEvalPython") == 1
-    # the pairs plan unions two branches (all-pairs + star routing):
-    # one kernel crossing per branch, never two
+    # the pairs plan expands every bucket (all-pairs and star routing)
+    # in one branch, so the kernel still crosses once
     pairs_plan = _plan(winnow_overlap_pairs(docs, "text", "doc_id"))
-    assert pairs_plan.count("ArrowEvalPython") == 2
+    assert pairs_plan.count("ArrowEvalPython") == 1
     assert "CartesianProduct" not in pairs_plan
+
+
+def test_lsh_bucket_frame_is_evaluated_once(spark):
+    """Every LSH pair path sizes and expands its buckets in one branch
+    over one window frame. After an action, the final adaptive plan (the
+    text before "== Initial Plan ==") holds exactly one Window and no
+    Union or ReusedExchange: a second branch over the frame would sort
+    and window the shuffled bucket rows a second time."""
+    from metacheck_spark.caching import CacheRegistry
+    from metacheck_spark.operators.dedup import (
+        minhash_lsh_candidates,
+        simhash_dup_pairs,
+        winnow_overlap_pairs,
+    )
+    from metacheck_spark.operators.similarity import embedding_dup_pairs_bucketed
+
+    # 8 captions, 5 exact copies each: every path has non-empty buckets,
+    # so adaptive execution prunes no branch of the plan
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ", F.lit("a caption that repeats"), (F.col("id") % 8).cast("string"),
+            F.lit("across several documents"),
+        ).alias("text"),
+    )
+    vecs = docs.select(
+        F.col("doc_id").alias("id"),
+        F.array(F.lit(1.0), (F.col("doc_id") % 8).cast("double") - 3.5).alias("v"),
+    )
+    with CacheRegistry() as caches:
+        paths = {
+            "minhash": minhash_lsh_candidates(docs, "text", "doc_id"),
+            "winnow": winnow_overlap_pairs(docs, "text", "doc_id", min_shared=1),
+            "simhash": simhash_dup_pairs(docs, "text", "doc_id", caches=caches),
+            "embedding": embedding_dup_pairs_bucketed(vecs, "v", "id", caches=caches),
+        }
+        for name, df in paths.items():
+            assert df.collect(), name  # the action runs df's own plan
+            final = _plan(df).split("== Initial Plan ==")[0]
+            assert "isFinalPlan=true" in final, name
+            assert final.count("Window ") == 1, (name, final)
+            assert "Union" not in final, (name, final)
+            assert "ReusedExchange" not in final, (name, final)

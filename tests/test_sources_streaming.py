@@ -129,32 +129,47 @@ def test_full_pipeline_stream_matches_batch(spark, images_dir, tmp_path):
 
 
 def test_stateful_stream_dedup(spark, tmp_path):
+    """Three files, one micro-batch each: a copy inside a batch and copies
+    arriving in later batches are all suppressed, and the dedup state holds
+    exactly one row per distinct fingerprint (no watermark, so it never
+    shrinks)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     src = tmp_path / "dedup_in"
     src.mkdir()
-    rows = [
-        ("a", "the quick fox"),
-        ("b", "THE  quick fox"),  # same fingerprint as a (normalized)
-        ("c", "another caption"),
+    batches = [
+        [("a", "the quick fox"), ("b", "THE  quick fox"), ("c", "another caption")],
+        [("d", "Another caption"), ("e", "a third one")],  # d copies c
+        [("f", "the quick  fox"), ("g", "fourth")],  # f copies a
     ]
-    df = spark.createDataFrame(rows, "image_id string, caption string")
-    df.coalesce(1).write.mode("overwrite").parquet(str(src / "b0"))
+    for i, rows in enumerate(batches):
+        path = src / f"b{i}.parquet"
+        ids, caps = zip(*rows)
+        pq.write_table(pa.table({"image_id": ids, "caption": caps}), str(path))
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # file source order
     stream = (
         spark.readStream.schema("image_id string, caption string")
-        .parquet(str(src / "b0"))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
     )
-    dedup = stateful_stream_dedup(stream)
     q = (
-        dedup.writeStream.format("memory")
+        stateful_stream_dedup(stream)
+        .writeStream.format("memory")
         .queryName("dedup_t")
         .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(progress) == 3
     got = spark.sql("SELECT * FROM dedup_t").collect()
-    assert len(got) == 2  # a/b collapse to one fingerprint, c separate
-    fps = {r.fp for r in got}
-    assert len(fps) == 2
+    assert len(got) == 4  # a/b collapse to one fingerprint; c, e, g
+    assert {r.image_id for r in got} - {"a", "b"} == {"c", "e", "g"}
+    assert len({r.fp for r in got}) == 4
+    assert q.recentProgress[-1]["stateOperators"][0]["numRowsTotal"] == 4
 
 
 def test_windowed_hit_counts_batch_semantics(spark):
